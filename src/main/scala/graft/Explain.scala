@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Dev tool: print the formatted physical plan of registered queries
   * (the source of PLANS.md). Usage:
   *   sbt "runMain graft.Explain sessionize dedup_embedding"
-  * No args → every registered query. */
+  * No args → every registered query. The fixture directory comes from
+  * `SPARK_GRAFT_SF_DIR` (default sf0.01); point it at sf0.001 to
+  * iterate on an operator's physical shape quickly. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

@@ -21,9 +21,9 @@ import graft.CacheScope.ScopedDataset
   *   - `-Dgraft.state.mode=ckpt` (default) — eager
   *     [[graft.CacheScope.ScopedDataset.localCheckpointScoped]]:
   *     lineage cut to a LogicalRDD leaf over executor-local blocks.
-  *     The measured winner at every A/B'd site (BfsLab, HitsLab,
-  *     KcoreLab, TrussLab, JaccLab, GraphAnnLab — see the per-op
-  *     scaladocs for numbers).
+  *     The measured winner at every A/B'd site (BFS, SSSP, HITS,
+  *     k-core, k-truss, jaccard-neighbors, the NN-descent build —
+  *     see the per-op scaladocs and PLANS.md round 15 for numbers).
   *   - `persist` — [[graft.CacheScope.ScopedDataset.persistScoped]]:
   *     no lineage truncation (plans re-grow across rounds; the
   *     pre-r15 behavior), but every block is recomputable — safe
@@ -45,9 +45,10 @@ import graft.CacheScope.ScopedDataset
   * The switch is read once per JVM (env `GRAFT_STATE_MODE`, overridden
   * by sysprop `graft.state.mode`) — a deployment property, not a
   * per-query one, so operators stay referentially transparent within
-  * a run. Per-op ALGORITHM knobs (BfsMode="frontier", kcore "decl",
-  * the labs' "legacy" baselines) are orthogonal and stay per-op:
-  * this object only selects the storage behind the shipped cut.
+  * a run. It selects storage only: each operator ships exactly one
+  * algorithm (the losing A/B alternatives are deleted, their numbers
+  * kept in the operator's scaladoc), so this is the one switch that
+  * changes how an iterative operator executes.
   */
 object StateMode {
 
@@ -76,9 +77,7 @@ object StateMode {
 
   /** Cuts lineage at `ds` using the deployment-selected storage.
     *
-    * Call this wherever an operator's SHIPPED strategy materializes
-    * per-round state (never in a lab's explicit `persist`/`legacy`
-    * baseline branches — those pin a specific storage by design).
+    * Call this wherever an operator materializes per-round state.
     * `eager = false` defers materialization to the first action for
     * cuts that are consumed exactly once downstream.
     *

@@ -254,11 +254,12 @@ object Dedup {
     // per doc by construction, docSpansOf's toSet), attach the two
     // arrays to each candidate pair, and take the exact intersection
     // size per pair with the codegen'd array_intersect — the verify
-    // becomes candidate-mass work (SimjoinCostLab: verify was ~3/4
-    // of the wall). Counts and intersections still both come from
-    // the capped universe, so the Jaccard stays internally
-    // consistent and the long→double division is bit-identical to
-    // the fan-join form the oracle replays.
+    // becomes candidate-mass work (r18 cost split,
+    // OPTIMIZATION_r18.md: verify was ~3/4 of the wall). Counts and
+    // intersections still both come from the capped universe, so the
+    // Jaccard stays internally consistent and the long→double
+    // division is bit-identical to the fan-join form the oracle
+    // replays.
     val sets = sh.groupBy("doc_id")
       .agg(sort_array(collect_list(col("sh"))).as("shs"), count(lit(1)).as("n"))
     val cand = simjoinPrefixCandidates(spark, dir)
@@ -1252,8 +1253,7 @@ object Dedup {
     * [[dedupFuzzyOn]] runs pipelined on the join output and the
     * candidate pair mass never shuffles at all. */
   private[operators] def dedupFuzzyWitnessesOn(docs: DataFrame,
-      maxGramDf: Long = FuzzyMaxGramDf,
-      shiftBound: Int = FuzzyK / 2): DataFrame = {
+      maxGramDf: Long = FuzzyMaxGramDf): DataFrame = {
     // lc = content length of the key BEFORE '#'-padding. The pad char
     // never occurs in content ([[fuzzyKey]] folds every non-
     // alphanumeric to a space), so one edit changes a key's '#'-count
@@ -1310,10 +1310,9 @@ object Dedup {
     // segment (the pigeonhole witness) always sits within +-K/2, so
     // the candidate set keeps every true pair; only coincidental
     // far-shift gram matches — always verify-FALSE — are dropped.
-    // shiftBound is a LAB DIAL (default = the provable K/2 bound): the
-    // generic ±K window is kept reachable so FuzzyParityLab can prove
-    // the tightening lossless and price it on the staged corpora.
-    val shifts = (-shiftBound to shiftBound).map(lit(_))
+    // Measured set-identical to the generic ±K windows at x10 and
+    // x100 (1.04 M pairs) and cost-neutral there (OPTIMIZATION_r19.md).
+    val shifts = (-(FuzzyK / 2) to FuzzyK / 2).map(lit(_))
     val probes = n.select(col("doc_id"), col("t"), col("lc"),
         explode(array(segIdx: _*)).as("i"))
       .select(col("doc_id"), col("i"), col("t"), col("lc"),

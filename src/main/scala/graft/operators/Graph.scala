@@ -73,13 +73,15 @@ object Graph {
     * the TINY (id, rank) vertex state shuffles to meet the cache,
     * plus the one partial+final contribution sum — at any scale the
     * static side is partitioned once and read R times, the Pregel
-    * invariant. Measured (RankShapeLab, sf0.1, alternating reps,
-    * parity-gated): min 6.63 → 3.76 s, faster in every adjacent
-    * pair. r div deg is computed per EDGE but is identical per source
-    * vertex, so the lattice arithmetic (and the oracle) is
-    * unchanged. */
-  private[operators] def rankEdges(edgesIn: DataFrame,
-      broadcastState: Boolean = false): DataFrame = {
+    * invariant. Measured (sf0.1, alternating reps, parity-gated;
+    * OPTIMIZATION_r19.md): min 6.63 → 3.76 s, faster in every
+    * adjacent pair. r div deg is computed per EDGE but is identical
+    * per source vertex, so the lattice arithmetic (and the oracle) is
+    * unchanged. The rank state SHUFFLES to meet the cache rather than
+    * broadcasting: broadcast state measured only 6% faster (r10
+    * same-JVM A/B, PLANS.md, under the 15% bar) and cannot hold a
+    * vertex set too big to broadcast. */
+  private[operators] def rankEdges(edgesIn: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val edgeDeg = edgesIn
       .repartition(col("u"))
@@ -96,8 +98,7 @@ object Graph {
     var r = verts.select(col("u").as("id"), lit(r0).as("r"))
     for (_ <- 1 to Rounds) {
       r = edgeDeg.as("e")
-        .join(if (broadcastState) broadcast(r.as("p")) else r.as("p"),
-          col("e.u") === col("p.id"))
+        .join(r.as("p"), col("e.u") === col("p.id"))
         .groupBy(col("e.v"))
         .agg(sum(expr("p.r div e.deg")).as("sm"))
         .select(col("v").as("id"),
@@ -340,102 +341,52 @@ object Graph {
     * the oracle an unrolled CTE chain — the pagerank precedent; all
     * arithmetic is integer hops, so the gate is trivially hash-
     * exact. Scale shape: per round one key-only join + one
-    * partial+final min aggregate; the edges persist pre-partitioned
-    * once and every round reuses them (the Pregel invariant). A
-    * frontier-delta variant (propagate only vertices whose d
-    * improved) is the constant-factor dial at scale — same joins,
-    * strictly smaller left side each round. */
+    * partial+final min aggregate over the NEW frontier only (see
+    * [[bfsDistances]]); the edges persist pre-partitioned once and
+    * every round reuses them (the Pregel invariant). */
   def graphBfs(spark: SparkSession, dir: String): DataFrame =
     bfsParts(spark, dir)._2
 
-  /** Shipped relax-loop strategy for the hop-BFS family
-    * ([[bfsParts]], [[graphDiameter]]'s sweeps) — see
-    * [[bfsDistances]] for the candidates. Chosen by the r15
-    * interleaved A/B (BfsLab, sf0.1, 3 reps, bfs_reach shape):
-    * frontier 3.7/3.9/4.0 s ≈ ckpt 3.7/3.7/3.8 (within rep noise)
-    * vs legacy 5.9/6.0/6.6 — the lineage cut is worth ~40% and
-    * frontier is the at-scale shape (per-round join left side is the
-    * NEW frontier, not the whole reached set), so it ships. */
-  private[operators] val BfsMode = "frontier"
-
   /** Bounded hop-BFS relax core over a symmetric edge list (u, v) and
     * a seed relation (id, d=0) — the loop shared by [[bfsParts]] and
-    * [[graphDiameter]], extracted with a strategy knob for the r15
-    * lineage A/B (VERDICT r14 item 1: the legacy loop references its
-    * own plan TWICE per round — join side + union side — so the
-    * logical plan doubles per round, 2^rounds leaf references at
-    * BfsRounds = 4, and bfs_reach was the registry's slowest op).
-    * All three modes compute the identical relation (BfsLab asserts
-    * exceptAll-parity both directions before timing):
+    * [[graphDiameter]]. Delta propagation: only NEWLY-reached
+    * vertices join the edges next round. Sound because hop distances
+    * never improve once set (unit weights: first discovery IS the
+    * min), so dist is a DISJOINT union of per-round frontiers — no
+    * re-aggregation of settled state at all. Each frontier is cut
+    * through the one-switch [[graft.StateMode]] (linear lineage) and
+    * the relax join's left side SHRINKS as the reachable set
+    * saturates: per-round work ∝ frontier, not ∝ reached.
     *
-    *  - "legacy": dist' = min_id(dist ⋈ edges ∪ dist). Declarative,
-    *    zero materialization — but the doubled self-reference grows
-    *    the plan geometrically and re-plans the whole history each
-    *    round.
-    *  - "ckpt": the same recurrence with a per-round eager
-    *    [[graft.CacheScope.ScopedDataset.localCheckpointScoped]] —
-    *    lineage cut to a LogicalRDD leaf each round, every round
-    *    planned and executed exactly once (the dedup_cluster /
-    *    cc_star precedent; the cut's storage backing is the
-    *    one-switch [[graft.StateMode]] deployment property).
-    *  - "frontier": delta propagation — only NEWLY-reached vertices
-    *    join the edges next round. Sound because hop distances never
-    *    improve once set (unit weights: first discovery IS the min),
-    *    so dist is a DISJOINT union of per-round frontiers — no
-    *    re-aggregation of settled state at all. Each frontier is
-    *    checkpointed (linear lineage) and the relax join's left side
-    *    SHRINKS as the reachable set saturates — the asymptotic
-    *    winner at 100 TB (per-round work ∝ frontier, not ∝ reached),
-    *    and at fixture scale within rep noise of "ckpt" (BfsLab). */
+    * Why this body (r15 interleaved A/B, sf0.1, 3 reps, bfs_reach
+    * shape, exceptAll-parity gated; PLANS.md r15): frontier
+    * 3.7/3.9/4.0 s ≈ a per-round-checkpointed min-relax 3.7/3.7/3.8
+    * vs the uncut declarative loop 5.9/6.0/6.6 — that loop referenced
+    * its own plan twice per round, 2^rounds leaf references (VERDICT
+    * r14 item 1). Frontier ties at fixture scale and is the
+    * asymptotic winner, so it is the one shipped body. */
   private[operators] def bfsDistances(edges: DataFrame, seeds: DataFrame,
-      rounds: Int, mode: String = BfsMode): DataFrame = mode match {
-    case "legacy" =>
-      var dist = seeds
-      for (_ <- 1 to rounds) {
-        dist = dist.as("p")
-          .join(edges.as("e"), col("e.u") === col("p.id"))
-          .select(col("e.v").as("id"), (col("p.d") + lit(1L)).as("d"))
-          .unionAll(dist)
-          .groupBy(col("id")).agg(min(col("d")).as("d"))
-      }
-      dist
-    case "ckpt" =>
-      // the LAST round stays declarative: every earlier round is a
-      // LogicalRDD leaf, so the final plan's double self-reference
-      // only re-scans cached blocks — the consumer's one action
-      // executes the last round instead of an eager checkpoint
-      // materializing it and the action re-scanning the copy
-      var dist = seeds
-      for (r <- 1 to rounds) {
-        dist = dist.as("p")
-          .join(edges.as("e"), col("e.u") === col("p.id"))
-          .select(col("e.v").as("id"), (col("p.d") + lit(1L)).as("d"))
-          .unionAll(dist)
-          .groupBy(col("id")).agg(min(col("d")).as("d"))
-        if (r < rounds) dist = StateMode.cut(dist)
-      }
-      dist
-    case "frontier" =>
-      var dist = StateMode.cut(seeds)
-      var frontier = dist
-      for (r <- 1 to rounds) {
-        var next = frontier.as("p")
-          .join(edges.as("e"), col("e.u") === col("p.id"))
-          .select(col("e.v").as("id"), (col("p.d") + lit(1L)).as("d"))
-          // dedupe multi-path discoveries within the hop, then drop
-          // already-settled vertices: what's left is exactly the set
-          // first reached at THIS hop
-          .groupBy(col("id")).agg(min(col("d")).as("d"))
-          .join(dist.select(col("id")), Seq("id"), "left_anti")
-        // same last-round rule as "ckpt": dist is a union of leaves,
-        // so the final anti-join re-scans, never recomputes
-        if (r < rounds) next = StateMode.cut(next)
-        dist = dist.unionAll(next)
-        frontier = next
-      }
-      dist
-    case other =>
-      throw new IllegalArgumentException(s"unknown bfs mode: $other")
+      rounds: Int): DataFrame = {
+    var dist = StateMode.cut(seeds)
+    var frontier = dist
+    for (r <- 1 to rounds) {
+      var next = frontier.as("p")
+        .join(edges.as("e"), col("e.u") === col("p.id"))
+        .select(col("e.v").as("id"), (col("p.d") + lit(1L)).as("d"))
+        // dedupe multi-path discoveries within the hop, then drop
+        // already-settled vertices: what's left is exactly the set
+        // first reached at THIS hop
+        .groupBy(col("id")).agg(min(col("d")).as("d"))
+        .join(dist.select(col("id")), Seq("id"), "left_anti")
+      // the LAST round stays declarative: dist is a union of leaves,
+      // so the consumer's one action runs the final anti-join over
+      // cached blocks instead of an eager cut materializing it and
+      // the action re-scanning the copy
+      if (r < rounds) next = StateMode.cut(next)
+      dist = dist.unionAll(next)
+      frontier = next
+    }
+    dist
   }
 
   /** (persisted symmetric edges, bounded-horizon distances) — split
@@ -626,91 +577,33 @@ object Graph {
         .select(col("u").as("id")).distinct())
   }
 
-  /** Shipped relax-loop strategy for weighted SSSP — see [[ssspOn]]
-    * for the candidates. Chosen by the r15 interleaved A/B (BfsLab,
-    * sf0.1, 3 reps): ckpt 3.6/3.6/3.7 s vs delta 4.2/4.3/4.3 vs
-    * legacy 5.6/5.7/5.8 — the delta mode's extra improvement-join
-    * costs more than the shrinking frontier saves at fixture scale
-    * (4 rounds, still-expanding reach). "delta" remains the dial for
-    * deep-horizon corpora where late rounds touch a vanishing
-    * fraction of vertices. */
-  private[operators] val SsspMode = "ckpt"
-
   /** The bounded Bellman-Ford core over an arbitrary weighted edge
     * list (u, v, w) and seed set (id) — extracted so specs can relax
-    * planted graphs (the labelPropOn pattern).
+    * planted graphs (the labelPropOn pattern). Each round is the
+    * min-relax dist' = min_id(dist ⋈ edges ∪ dist), cut through the
+    * one-switch [[graft.StateMode]] so lineage stays linear; the last
+    * round stays declarative (the consumer's one action executes it
+    * instead of an eager cut materializing it and the action
+    * re-scanning the copy).
     *
-    * Same r15 lineage A/B as [[bfsDistances]], but weighted relax
-    * differs in one essential: a settled distance CAN improve in a
-    * later round (a longer-hop cheaper path), so the frontier trick's
-    * disjoint-union shortcut is unsound here. Modes (all
-    * exceptAll-parity-asserted in BfsLab before timing):
-    *
-    *  - "legacy": the doubled-self-reference recurrence (2^rounds
-    *    plan growth — the r14 verdict nit).
-    *  - "ckpt": per-round eager localCheckpoint — linear lineage.
-    *  - "delta": Bellman-Ford with a change-frontier — only vertices
-    *    whose distance IMPROVED last round relax their out-edges next
-    *    round (the textbook queue-based Bellman-Ford, BSP form). Each
-    *    round: candidates from the frontier, one min-merge against
-    *    settled state to find strict improvements, checkpoint the
-    *    improvement set, merge it in (min over the disjoint-by-key
-    *    union). Costs one extra small join per round vs "ckpt" but
-    *    the relax join's left side shrinks to the churn set — the
-    *    asymptotic shape at 100 TB where late rounds touch a
-    *    vanishing fraction of vertices. */
-  private[operators] def ssspOn(edgesIn: DataFrame, seeds: DataFrame,
-      mode: String = SsspMode): DataFrame = {
+    * Unlike [[bfsDistances]], a settled distance CAN improve in a
+    * later round (a longer-hop cheaper path), so the frontier
+    * disjoint-union shortcut is unsound here. Why this body (r15
+    * interleaved A/B, sf0.1, 3 reps, exceptAll-parity gated; PLANS.md
+    * r15): checkpointed relax 3.6/3.6/3.7 s vs a change-frontier
+    * Bellman-Ford 4.2/4.3/4.3 (its extra improvement join costs more
+    * than the shrinking frontier saves over 4 still-expanding rounds)
+    * vs the uncut doubled-self-reference loop 5.6/5.7/5.8. */
+  private[operators] def ssspOn(edgesIn: DataFrame, seeds: DataFrame): DataFrame = {
     val edges = edgesIn.repartition(col("u")).persistScoped()
-    val d0 = seeds.select(col("id"), lit(0L).as("d"))
-    val dist = mode match {
-      case "legacy" =>
-        var dist = d0
-        for (_ <- 1 to SsspRounds) {
-          dist = dist.as("p")
-            .join(edges.as("e"), col("e.u") === col("p.id"))
-            .select(col("e.v").as("id"), (col("p.d") + col("e.w")).as("d"))
-            .unionAll(dist)
-            .groupBy(col("id")).agg(min(col("d")).as("d"))
-        }
-        dist
-      case "ckpt" =>
-        // last round declarative — see bfsDistances' "ckpt" note
-        var dist = d0
-        for (r <- 1 to SsspRounds) {
-          dist = dist.as("p")
-            .join(edges.as("e"), col("e.u") === col("p.id"))
-            .select(col("e.v").as("id"), (col("p.d") + col("e.w")).as("d"))
-            .unionAll(dist)
-            .groupBy(col("id")).agg(min(col("d")).as("d"))
-          if (r < SsspRounds) dist = StateMode.cut(dist)
-        }
-        dist
-      case "delta" =>
-        var dist = StateMode.cut(d0)
-        var frontier = dist
-        for (r <- 1 to SsspRounds) {
-          // checkpointed EVERY round (unlike "ckpt"'s last-round
-          // exception): the settled chain is re-referenced by both
-          // the improvement filter and the merge, so a declarative
-          // last improvement set would recompute the whole chain
-          // twice in the consumer's action
-          val improved = StateMode.cut(frontier.as("p")
-            .join(edges.as("e"), col("e.u") === col("p.id"))
-            .select(col("e.v").as("id"), (col("p.d") + col("e.w")).as("d"))
-            .groupBy(col("id")).agg(min(col("d")).as("d"))
-            // strict improvements only: unreached (null) or cheaper
-            .join(dist.withColumnRenamed("d", "d_set"), Seq("id"), "left")
-            .filter(col("d_set").isNull || col("d") < col("d_set"))
-            .select(col("id"), col("d")))
-          // min-merge: `improved` beats `dist` wherever both hold a key
-          dist = dist.unionAll(improved)
-            .groupBy(col("id")).agg(min(col("d")).as("d"))
-          frontier = improved
-        }
-        dist
-      case other =>
-        throw new IllegalArgumentException(s"unknown sssp mode: $other")
+    var dist = seeds.select(col("id"), lit(0L).as("d"))
+    for (r <- 1 to SsspRounds) {
+      dist = dist.as("p")
+        .join(edges.as("e"), col("e.u") === col("p.id"))
+        .select(col("e.v").as("id"), (col("p.d") + col("e.w")).as("d"))
+        .unionAll(dist)
+        .groupBy(col("id")).agg(min(col("d")).as("d"))
+      if (r < SsspRounds) dist = StateMode.cut(dist)
     }
     dist.select(col("id"), col("d"))
   }
@@ -876,16 +769,10 @@ object Graph {
       .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("s"))
       .distinct())
 
-  /** Shipped per-half-round state strategy for [[hitsOn]] — decided
-    * by the r15 interleaved A/B (HitsLab, parity-gated): see the
-    * rescale comment for the numbers. */
-  private[operators] val HitsMode = "ckpt"
-
   /** The mutual-reinforcement core over an arbitrary DIRECTED edge
     * list (c, s) — extracted so specs can score planted graphs (the
     * labelPropOn pattern). */
-  private[operators] def hitsOn(base: DataFrame,
-      mode: String = HitsMode): DataFrame = {
+  private[operators] def hitsOn(base: DataFrame): DataFrame = {
     val eByC = base.repartition(col("c")).persistScoped()
     // the s-partitioned copy re-shuffles the CACHED c-copy instead of
     // re-deriving `base` (the purchase join + distinct ran twice —
@@ -897,19 +784,15 @@ object Graph {
       // rescale join) and each half-round chains on the last —
       // without materialization the lineage re-evaluates
       // geometrically across the 2×2 half-rounds (measured: 12.6 s →
-      // ~5 s at sf0.1 with per-half-round persist). r15's HitsLab
-      // interleaved A/B (sf0.1, 3 reps, exceptAll-parity first) then
-      // swapped the persist for an eager localCheckpoint: ckpt
-      // 4.3/3.4/3.2 s vs persist 5.1/4.5/4.2 — a consistent ~20%
-      // win, same mechanism as KcoreMode (each half-round plans and
-      // executes exactly once against a LogicalRDD leaf instead of
-      // paying analysis + cache-substitution passes per reference).
+      // ~5 s at sf0.1 with per-half-round persist). The r15
+      // interleaved A/B (sf0.1, 3 reps, exceptAll-parity first;
+      // PLANS.md r15) then swapped the persist for an eager cut:
+      // 4.3/3.4/3.2 s vs persist 5.1/4.5/4.2 — a consistent ~20% win,
+      // same mechanism as kcoreOn (each half-round plans and executes
+      // exactly once against a LogicalRDD leaf instead of paying
+      // analysis + cache-substitution passes per reference).
       // Cut storage backing: the graft.StateMode one-switch.
-      val scores = mode match {
-        case "ckpt"    => StateMode.cut(scoresIn)
-        case "persist" => scoresIn.persistScoped()
-        case other     => throw new IllegalArgumentException(s"unknown hits mode: $other")
-      }
+      val scores = StateMode.cut(scoresIn)
       val mx = scores.agg(max(col("x")).as("mx"), count(lit(1)).as("nn"))
       ScalarJoin.attachScalar(scores, col("x"), mx, col("nn"))
         .select(col("id"),
@@ -1248,36 +1131,25 @@ object Graph {
     * relation (shuffle on customer key, partial+final count); union
     * sizes arrive by joining the per-customer degree — and the final
     * rank is a global top-k (TakeOrderedAndProject, never a full
-    * sort). */
-  def jaccardNeighbors(spark: SparkSession, dir: String): DataFrame =
-    jaccardNeighborsOn(spark, dir, JaccMode)
-
-  /** State strategy for [[jaccardNeighbors]]' shared (c, p) relation
-    * — the DAG (non-loop) test of the r15 ckpt-vs-persist question:
-    * the relation is referenced 5× in ONE plan (rare-part df guard,
-    * both candidate sides via `re`, both shared-count sides, the
-    * degree fold). The r15 interleaved A/B (JaccLab, parity-gated,
-    * sf0.1, 6 reps over two runs under ambient noise): ckpt
-    * 6.0/3.2/4.0/6.0/3.7/3.1 s vs persist 4.3/4.6/5.0/6.3/4.9/4.7 —
-    * ckpt wins 5 of 6 interleaved pairs, mean 4.3 vs 5.0 (~13%).
-    * Smaller than the loop-family wins (one action analyzes ONE plan
-    * here, so the per-round re-analysis term is absent; what remains
-    * is per-reference re-optimization of the cached subtree), but
-    * consistent — so it ships. */
-  private[operators] val JaccMode = "ckpt"
-
-  private[operators] def jaccardNeighborsOn(
-      spark: SparkSession, dir: String, mode: String): DataFrame = {
-    val eRaw = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
+    * sort).
+    *
+    * The shared (c, p) relation is referenced 5× in ONE plan
+    * (rare-part df guard, both candidate sides via `re`, both
+    * shared-count sides, the degree fold), so it is cut once through
+    * [[graft.StateMode]] rather than persisted. The r15 interleaved
+    * A/B (parity-gated, sf0.1, 6 reps over two runs under ambient
+    * noise; PLANS.md r15): cut 6.0/3.2/4.0/6.0/3.7/3.1 s vs persist
+    * 4.3/4.6/5.0/6.3/4.9/4.7 — the cut wins 5 of 6 interleaved pairs,
+    * mean 4.3 vs 5.0 (~13%). Smaller than the loop-family wins (one
+    * action analyzes ONE plan here, so the per-round re-analysis term
+    * is absent; what remains is per-reference re-optimization of the
+    * cached subtree), but consistent. */
+  def jaccardNeighbors(spark: SparkSession, dir: String): DataFrame = {
+    val e = StateMode.cut(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-    val e = mode match {
-      case "ckpt"    => StateMode.cut(eRaw)
-      case "persist" => eRaw.persistScoped()
-      case other     => throw new IllegalArgumentException(s"unknown jacc mode: $other")
-    }
+      .distinct())
     val rare = e.groupBy(col("p")).agg(count(lit(1)).as("n"))
       .filter(col("n") <= RarePartMax).select(col("p"))
     val re = e.join(rare, "p")
@@ -1345,23 +1217,18 @@ object Graph {
     ktrussOn(Dedup.dedupNgramJaccard(spark, dir)
       .select(col("doc_a"), col("doc_b")))
 
-  /** Shipped per-round state strategy for [[ktrussOn]] — decided by
-    * the r15 interleaved A/B (TrussLab, parity-gated, sf0.1, 3 reps,
-    * legacy timed first so it also absorbed rep-1's JVM warmup):
-    * ckpt 2.8/1.9/2.4 s vs legacy-persist 11.2/3.8/4.5 — ~45% off
-    * the steady-state reps. The KcoreMode mechanism transfers (4
-    * references per round beat cache substitution's analysis +
-    * cache-build passes) even though the shared shingle-pair build
-    * is inside both walls. */
-  private[operators] val TrussMode = "ckpt"
-
   /** The truss-peel core over an arbitrary canonically-oriented
-    * (doc_a < doc_b) pair list — extracted so specs and TrussLab can
-    * peel planted graphs. Modes as [[kcoreOn]]: "ckpt" (per-round
-    * eager localCheckpoint, last round declarative), "legacy"
-    * (per-round persist). */
-  private[operators] def ktrussOn(pairsIn: DataFrame,
-      mode: String = TrussMode): DataFrame = {
+    * (doc_a < doc_b) pair list — extracted so specs can peel planted
+    * graphs. Each round's survivor set is an eager
+    * [[graft.StateMode]] cut, as in [[kcoreOn]]. Why (r15 interleaved
+    * A/B, parity-gated, sf0.1, 3 reps, the persist loop timed first so
+    * it also absorbed rep-1's JVM warmup; PLANS.md r15): cut
+    * 2.8/1.9/2.4 s vs per-round persist 11.2/3.8/4.5 — ~45% off the
+    * steady-state reps. The kcoreOn mechanism transfers (4 references
+    * per round beat cache substitution's analysis + cache-build
+    * passes) even though the shared shingle-pair build is inside both
+    * walls. */
+  private[operators] def ktrussOn(pairsIn: DataFrame): DataFrame = {
     def support(edges: DataFrame): DataFrame =
       edges.as("e1")
         .join(edges.as("e2"), col("e1.doc_b") === col("e2.doc_a"))
@@ -1373,22 +1240,14 @@ object Graph {
           struct(col("e3.doc_a").as("doc_a"), col("e3.doc_b").as("doc_b")))).as("e"))
         .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b"))
         .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("support"))
-    var edges = mode match {
-      case "ckpt"   => StateMode.cut(pairsIn)
-      case "legacy" => pairsIn.persistScoped()
-      case other    => throw new IllegalArgumentException(s"unknown truss mode: $other")
-    }
+    var edges = StateMode.cut(pairsIn)
     for (_ <- 1 to TrussRounds) {
-      edges = edges.join(
+      // the final support() below re-references the last round 4×
+      // more, so unlike kcoreOn the LAST round is cut too — the
+      // declarative tail here is the left join + coalesce only
+      edges = StateMode.cut(edges.join(
         support(edges).filter(col("support") >= TrussK - 2),
-        Seq("doc_a", "doc_b"), "left_semi")
-      edges = mode match {
-        // the final support() below re-references the last round 4×
-        // more, so unlike kcoreOn the LAST round checkpoints too —
-        // the declarative tail here is the left join + coalesce only
-        case "ckpt" => StateMode.cut(edges)
-        case _      => edges.persistScoped()
-      }
+        Seq("doc_a", "doc_b"), "left_semi"))
     }
     edges.join(support(edges), Seq("doc_a", "doc_b"), "left")
       .select(col("doc_a"), col("doc_b"),
@@ -1514,61 +1373,36 @@ object Graph {
   def kcore(spark: SparkSession, dir: String): DataFrame =
     kcoreOn(purchaseEdges(spark, dir))
 
-  /** Shipped per-round state strategy for the k-core peel — see
-    * [[kcoreOn]] for the candidates. Chosen by the r15 interleaved
-    * A/B (KcoreLab, sf0.1, 3 reps, parity-gated): ckpt 2.4/2.2/2.3 s
-    * vs legacy-persist 6.2/5.8/5.6 vs fully-declarative 28.8/31.0/
-    * 32.2 (the 3^rounds baseline) — cutting each round to a
-    * LogicalRDD leaf beats cache substitution here because the round
-    * output is referenced three times (keep's aggregate twice + the
-    * join left side) and the cached plan still pays analysis +
-    * cache-build passes per reference. */
-  private[operators] val KcoreMode = "ckpt"
-
   /** The peeling core over an arbitrary symmetric edge list —
     * extracted so specs can peel planted graphs (chain-erosion and
-    * fixed-point pins). Two state strategies, identical relation
-    * (KcoreLab asserts exceptAll-parity both directions before any
-    * timing):
+    * fixed-point pins). Every round but the last is an eager
+    * [[graft.StateMode]] cut, so each round plans and executes exactly
+    * once against a LogicalRDD leaf; the LAST round stays declarative
+    * (the consumer's action executes it).
     *
-    *  - "legacy": per-round `persistScoped` — cache substitution
-    *    truncates the effective plan, but every round's edges are
-    *    referenced 3× (degree agg feeding both semi joins + the join
-    *    left side), so the logical plan still grows 3^rounds and the
-    *    cache materializes as a side pass of the single action.
-    *  - "ckpt": per-round eager
-    *    [[graft.CacheScope.ScopedDataset.localCheckpointScoped]] —
-    *    the BfsMode/"ckpt" precedent: each round plans and executes
-    *    exactly once against a LogicalRDD leaf; the LAST round stays
-    *    declarative (the consumer's action executes it). Swap for
-    *    reliable checkpoint(dir) on preemptible executors. */
+    * Why (r15 interleaved A/B, sf0.1, 3 reps, exceptAll-parity gated;
+    * PLANS.md r15): cut 2.4/2.2/2.3 s vs per-round persist 6.2/5.8/5.6
+    * vs fully-declarative rounds 28.8/31.0/32.2 (the 3^rounds
+    * baseline). Each round's edges are referenced 3× (the degree
+    * aggregate feeding both semi joins + the join left side), and a
+    * cached plan still pays analysis + cache-build passes per
+    * reference, so the LogicalRDD leaf beats cache substitution. */
   private[operators] def kcoreOn(edgesIn: DataFrame,
-      k: Int = KcoreK, rounds: Int = KcoreRounds,
-      mode: String = KcoreMode): DataFrame = {
-    var edges = mode match {
-      case "ckpt"   => StateMode.cut(edgesIn)
-      case "legacy" => edgesIn.persistScoped()
-      case "decl"   => edgesIn.persistScoped() // fully declarative rounds (lab baseline)
-      case other    => throw new IllegalArgumentException(s"unknown kcore mode: $other")
-    }
+      k: Int = KcoreK, rounds: Int = KcoreRounds): DataFrame = {
+    var edges = StateMode.cut(edgesIn)
     for (r <- 1 to rounds) {
       // keep is deliberately NOT persisted: both semi joins re-derive
       // the degree aggregate from the round's materialized edges,
       // which measured 1.7× cheaper than materializing a keep cache
-      // per round (KcoreLab, sf0.1: 5.1–5.5 s vs 8.6–9.9 s
-      // shipped-r11 — the materialization job costs more than the
-      // re-aggregation)
+      // per round (sf0.1: 5.1–5.5 s vs 8.6–9.9 s — the
+      // materialization job costs more than the re-aggregation)
       val keep = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("u").as("id"))
       edges = edges
         .join(keep, edges("u") === keep("id"), "left_semi")
         .join(keep, edges("v") === keep("id"), "left_semi")
-      edges = mode match {
-        case "ckpt"   => if (r < rounds) StateMode.cut(edges) else edges
-        case "legacy" => edges.persistScoped()
-        case _        => edges
-      }
+      if (r < rounds) edges = StateMode.cut(edges)
     }
     edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
   }

@@ -36,8 +36,8 @@ private[operators] trait RelationalCoreOps extends Serializable { this: Relation
     * 8 keeps the sum's result type at decimal(18, scale), inside
     * Spark's compact-long Decimal representation — the decimal(30,·)
     * default widens the sum to decimal(38,·), which allocates a
-    * JavaBigDecimal per aggregate update (measured, DecimalAggLab at
-    * the 100× staged corpus: 9.9–30.7 s vs 6.4–9.5 s for q18's
+    * JavaBigDecimal per aggregate update (measured at the 100× staged
+    * corpus, OPTIMIZATION_r19.md: 9.9–30.7 s vs 6.4–9.5 s for q18's
     * per-order quantity aggregate). Caller contract: values must fit
     * decimal(8−scale integer digits) and GROUP sums must fit
     * decimal(18−scale) — per-key aggregates of quantity-class

@@ -46,39 +46,27 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
     * above. That is the standard production trade for graph ANN:
     * heavy one-time index build, cheap navigating queries.
     *
-    * Beam width 48 was re-measured (r13 GraphAnnLab A/B at sf0.1):
+    * Beam width 48 was re-measured (r13 A/B at sf0.1, PLANS.md):
     * 48 → 8.4 s cold / recall 0.920; 40 → 8.6 s / 0.880; 32 → 7.7 s
     * / 0.880. The ~0.7 s saving at 32 is inside run-to-run noise
     * (cold repeats varied 7.0–9.0 s) while recall gives up 0.04 of
     * its 0.12 floor margin — the per-hop fixed structure (4 rounds
     * of window+join), not the width, dominates cost. Rejected; 48
-    * stays.
-    *
-    * The build side's last dial — the descent rounds' local-join
-    * candidate cap (r14 GraphAnnLab A/B, 16 vs 12, 44% less
-    * candidate mass): recall IDENTICAL at every SF (1.000 / 1.000 /
-    * 0.920) but steady-state cold at sf0.1 saved only 0.2 s
-    * (10.6 → 10.4; the 2–3 s "wins" at small SFs were JVM-warmup
-    * order bias) — at fixture scale the per-round fixed structure
-    * dominates the n·cap² candidate term. Rejected for the shipped
-    * op (the oracle replays the exact construction, and a
-    * within-noise win doesn't buy that SQL change); the dial ships
-    * as [[neighborGraphCapped]] for corpora large enough that the
-    * candidate term dominates. */
+    * stays. Hop count likewise (same round): 3 hops → recall 0.880,
+    * 2 → 0.860, savings inside ambient variance; 4 stays. The
+    * build side's candidate cap is settled in [[neighborGraph]]. */
   def annGraph(spark: SparkSession, dir: String): DataFrame =
-    annGraphBeam(spark, dir, BeamWidth)
+    annGraphBeam(spark, dir)
 
-  /** [[annGraph]] with explicit beam width and hop count — the two
-    * cost/recall dials (GraphAnnLab A/B harness; the shipped operator
-    * pins [[BeamWidth]]/[[BeamHops]], and the oracle interpolates the
-    * same constants). */
-  private[graft] def annGraphBeam(
-      spark: SparkSession, dir: String, beamWidth: Int,
-      hops: Int = BeamHops, candCap: Int = GraphDeg,
-      graphMode: String = GraphStateMode,
+  /** [[annGraph]] over a graph built with an explicit LSH-init pair
+    * cap — the seam ScaleLab uses to time the unbounded
+    * (`Int.MaxValue`) init curve. Beam width and hop count are the
+    * shipped [[BeamWidth]]/[[BeamHops]], which the oracle
+    * interpolates too. */
+  private[graft] def annGraphBeam(spark: SparkSession, dir: String,
       initPairCap: Int = GraphInitPairCap): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val g = neighborGraphCapped(spark, dir, candCap, graphMode, initPairCap)
+    val g = neighborGraph(spark, dir, initPairCap)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     def scored(cand: DataFrame): DataFrame =
@@ -89,7 +77,7 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
     def beamTop(cand: DataFrame): DataFrame =
       scored(cand).withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beamWidth)
+        .filter(col("rn") <= BeamWidth)
         .select("qid", "nid")
     val seeds = e.filter(col("vec_id") % SeedStride === 0)
       .select(col("vec_id").as("nid"))
@@ -107,7 +95,7 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
     // |Q| × B rows, so the scoped persist is all win.
     var beam = StateMode.cut(
       beamTop(seeds.join(broadcast(q.select(col("qid"))), col("qid") =!= col("nid"))))
-    for (_ <- 1 until hops)
+    for (_ <- 1 until BeamHops)
       beam = StateMode.cut(beamTop(beam.union(expand(beam)).distinct()))
     scored(beam.union(expand(beam)).distinct())
       .withColumn("rnk", row_number().over(w).cast("long"))

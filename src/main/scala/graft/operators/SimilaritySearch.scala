@@ -855,8 +855,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * the exact [[annTopkBrute]] truth at probe ∈ {1, 2, 4, 8}, on
     * the 2²⁰ lattice. [[annRecall]] pins the SHIPPED operating
     * point; this emits the curve the choice comes from — as a gated
-    * operator, because an eval that only lives in a test lab
-    * (RecallLab) can't be run by a user against their own corpus.
+    * operator, because an eval that only lives in a test lab can't
+    * be run by a user against their own corpus.
     * Scale shape (r19): the quantizer trains ONCE, the corpus cell
     * assignment is computed once and persisted for all four levels,
     * and the per-query probe list is taken once at the widest level
@@ -1001,8 +1001,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   /** Recall@K of the learned IVF index against the exact cosine
     * ranking — the eval an ANN deployment runs after every retrain/
     * probe-count change, AS a gated operator rather than a test-only
-    * lab (RecallLab measures curves; this row pins the shipped
-    * operating point cross-engine). Per query: K, how many of the
+    * lab ([[ivfProbeCurve]] emits the curve; this row pins the
+    * shipped operating point cross-engine). Per query: K, how many of the
     * exact top-K the index returned, and recall on the 2²⁰ lattice.
     * Both inputs are the registry's own gated operators, so the eval
     * can never drift from what it rates. Scale shape: both rankings
@@ -1340,8 +1340,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       topK(attach(cand))
     } else {
       // r18 rework (the dedup_fuzzy lesson re-applied): the global
-      // pair distinct dominated the 100× wall (KnnCostLab: raw ring
-      // mass 405.3M directional rows generates in ~10 s; the distinct
+      // pair distinct dominated the 100× wall (OPTIMIZATION_r18.md:
+      // raw ring mass 405.3M directional rows generates in ~10 s; the distinct
       // to 350.4M — duplication factor only 1.16 — cost +53 s of a
       // 91 s wall). Instead: score the RAW directional rows (vectors
       // arrive by size-gated broadcast, so this is map-side over the
@@ -1386,55 +1386,18 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   private[operators] val BeamWidth = 48     // candidates kept per query per hop
   private[operators] val BeamHops = 4       // beam expansion rounds
   private[operators] val SeedStride = 10    // entry points: vec_id % stride == 0
-  // r15 (VERDICT r14 item 4): 2 → 1. The GraphAnnLab stage
-  // attribution showed the BUILD dominates ann_graph (keys 1.8 s +
-  // init 3.0 + 1.7 per descent round; the beam hops are ~0.1 s
-  // total), so the round count — not any beam dial — is the cost
+  // r15 (VERDICT r14 item 4): 2 → 1. The per-stage timing
+  // attribution (PLANS.md r15) showed the BUILD dominates ann_graph
+  // (keys 1.8 s + init 3.0 + 1.7 per descent round; the beam hops
+  // are ~0.1 s total), so the round count — not any beam dial — is the cost
   // lever. Descent-round A/B (tri-SF, 2 reps each): rounds=1 recall@5
   // 1.00/1.00/0.96 vs rounds=2's 1.00/1.00/0.92 at ~half the cold
   // wall (4.8-5.7 s vs 8.5-15.5) — one round is BOTH cheaper and
   // better-navigable here (NN-descent tightens neighbor quality but
   // over-clusters the graph for beam search — the known diversity/
   // navigability trade). At larger corpora where LSH buckets thin
-  // out, raising rounds back is the documented dial (GraphAnnLab
-  // `rounds` section re-measures it).
+  // out, raising rounds back is the first thing to re-measure.
   private[operators] val DescentRounds = 1
-
-  /** The k-NN neighbor graph behind [[annGraph]]: per vector, its
-    * top-[[GraphDeg]] cosine neighbors among LSH bucket-mates
-    * (initialization), refined by [[DescentRounds]] rounds of
-    * NN-descent (Dong et al., WWW'11): each round's candidate set is
-    * the current edges ∪ forward neighbor-of-neighbor pairs ∪
-    * reversed edges ∪ co-neighbor pairs (two vectors sharing a
-    * neighbor — the "local join" that makes NN-descent converge),
-    * re-ranked to top-M per node. Everything is deterministic
-    * (fixed-seed LSH init, ties → lower dst), so the DuckDB oracle
-    * replays the whole construction.
-    *
-    * Scale shape: no all-pairs anywhere — init candidates are LSH
-    * bucket-mates (the knn_join trade), and each descent round is
-    * self-joins of an (n × M) edge list partitioned on the join key,
-    * i.e. O(n·M²) candidate rows per round with M a small constant.
-    * Rounds are a bounded constant, and each round's graph
-    * materializes once ([[GraphStateMode]]) because the next round
-    * references it six times — the same once-materialized-reuse
-    * invariant as the kcore/ktruss peel rounds. */
-  private[operators] def neighborGraph(spark: SparkSession, dir: String): DataFrame =
-    neighborGraphCapped(spark, dir, GraphDeg)
-
-  /** Shipped state strategy for [[neighborGraphCapped]]'s per-round
-    * graph — decided by the r15 interleaved A/B (GraphAnnLab `state`
-    * section, parity-gated, sf0.1, whole-operator colds, 3 reps):
-    * ckpt 3.9/3.5/3.2 s vs persist 6.2/5.6/5.8 — ~40% off the
-    * registry's second-slowest op. Each round's graph is referenced
-    * 6× by the next round
-    * (edges + fwd×2 + rev + co×2) and the FINAL graph is referenced
-    * once per beam hop by [[annGraphBeam]], so "ckpt" (eager
-    * localCheckpoint, the KcoreMode mechanism) materializes each
-    * exactly once as a LogicalRDD leaf; "persist" is the pre-r15
-    * cached-plan form. The cut's storage backing is the
-    * one-switch [[graft.StateMode]] deployment property. */
-  private[operators] val GraphStateMode = "ckpt"
 
   /** Broadcast ceiling for the descent build's vector table (r16):
     * well past Spark's 10 MB default because the alternative is a
@@ -1452,7 +1415,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * bucket member pairs with its next `cap` vec_id-ranked in-bucket
     * successors, symmetrized) is linear in n and measured
     * RECALL-IDENTICAL to the unbounded init at every swept SF
-    * (recall@5 1.000 / 1.000 / 0.960, GraphAnnLab `initcap` section,
+    * (recall@5 1.000 / 1.000 / 0.960, r16 tri-SF A/B in PLANS.md,
     * caps ∞/256/64) — descent rounds repair init quality, the classic
     * random-init NN-descent argument, and bucket-mates are already
     * LSH-close. The oracle's init CTE is generated from this constant
@@ -1478,40 +1441,56 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   private[operators] def vecHinted(rel: DataFrame): DataFrame =
     if (vecFitsBroadcast(rel)) broadcast(rel) else rel
 
-  /** [[neighborGraph]] with the descent rounds' local-join candidate
-    * cap as a dial (GraphAnnLab A/B): forward and co-neighbor pairs
-    * are generated from each node's top-`candCap` edges only (by the
-    * same cos-desc, dst-asc rank), while the re-rank keeps the full
-    * top-[[GraphDeg]] out-degree — candidate mass per round scales
-    * with candCap², the quadratic term in the build. `candCap ==
-    * GraphDeg` reproduces the shipped construction row-for-row. */
-  private[operators] def neighborGraphCapped(
-      spark: SparkSession, dir: String, candCap: Int,
-      mode: String = GraphStateMode,
+  /** The k-NN neighbor graph behind [[annGraph]]: per vector, its
+    * top-[[GraphDeg]] cosine neighbors among LSH bucket-mates
+    * (initialization), refined by [[DescentRounds]] rounds of
+    * NN-descent (Dong et al., WWW'11): each round's candidate set is
+    * the current edges ∪ forward neighbor-of-neighbor pairs ∪
+    * reversed edges ∪ co-neighbor pairs (two vectors sharing a
+    * neighbor — the "local join" that makes NN-descent converge),
+    * re-ranked to top-M per node. Everything is deterministic
+    * (fixed-seed LSH init, ties → lower dst), so the DuckDB oracle
+    * replays the whole construction.
+    *
+    * Scale shape: no all-pairs anywhere — init candidates are LSH
+    * bucket-mates (the knn_join trade), and each descent round is
+    * self-joins of an (n × M) edge list partitioned on the join key,
+    * i.e. O(n·M²) candidate rows per round with M a small constant.
+    * Rounds are a bounded constant, and each round's graph is cut
+    * once through the one-switch [[graft.StateMode]] because the next
+    * round references it six times (edges + fwd×2 + rev + co×2) and
+    * the FINAL graph is referenced once per beam hop by
+    * [[annGraphBeam]] — the same once-materialized-reuse invariant as
+    * the kcore/ktruss peel rounds. The r15 interleaved A/B (parity-
+    * gated, sf0.1, whole-operator colds, 3 reps; PLANS.md r15 batch
+    * H): cut 3.9/3.5/3.2 s vs per-round persist 6.2/5.6/5.8 — ~40%
+    * off the registry's second-slowest op.
+    *
+    * The descent's local join generates candidates from each node's
+    * full top-[[GraphDeg]] edges. Capping that at 12 (44% less
+    * candidate mass, r14 A/B) kept recall identical at every SF but
+    * saved only 0.2 s at sf0.1 — the per-round fixed structure
+    * dominates the n·M² term at fixture scale — so no cap ships.
+    *
+    * Two seams stay for callers that cannot change the constants:
+    * `initPairCap` (ScaleLab times the unbounded init curve with
+    * Int.MaxValue) and `bcBytes` (a CI spec forces the past-gate
+    * shape on fixture data with 0). */
+  private[operators] def neighborGraph(spark: SparkSession, dir: String,
       initPairCap: Int = GraphInitPairCap,
-      bcBytes: Long = GraphBroadcastVecBytes,
-      dedupShape: String = "auto"): DataFrame = {
+      bcBytes: Long = GraphBroadcastVecBytes): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    // r19 (VERDICT r18 item 3): the descent's pair-dedup SHAPE now
+    // r19 (VERDICT r18 item 3): the descent's pair-dedup SHAPE
     // follows the SAME plan-stats gate that decides the vector
     // broadcast. Below the gate (vectors broadcast) the r18 in-window
     // lag-dedup wins: the raw descent union is scored map-side and
     // crosses ONE (src) exchange; duplicates only pay broadcast-attach
     // + cosine. PAST the gate the attach joins SHUFFLE every candidate
     // row, so the raw duplicated mass would cross THREE exchanges
-    // (src-attach, dst-attach, window) where the old distinct-first
-    // shape shuffles the deduped mass — there dedup FIRST.
-    // `dedupShape` is the lab/CI dial ("auto" follows the gate;
-    // "window"/"distinct" force a shape so GraphDescentParityLab can
-    // A/B both shapes in the same regime and PlanAuditSpec can pin
-    // the flip without a >256 MB corpus in CI).
-    val vecBroadcasts = vecFitsBroadcast(e, bcBytes)
-    val windowDedup = dedupShape match {
-      case "auto"     => vecBroadcasts
-      case "window"   => true
-      case "distinct" => false
-      case other => throw new IllegalArgumentException(s"unknown dedupShape: $other")
-    }
+    // (src-attach, dst-attach, window) where the distinct-first shape
+    // shuffles the deduped mass — there dedup FIRST (2–5% faster past
+    // the gate, OPTIMIZATION_r19.md).
+    val windowDedup = vecFitsBroadcast(e, bcBytes)
     // r16 ScaleLab finding: the descent local join emits n×(2·deg²
     // + deg) candidate PAIRS (~105M at a 200k-vector corpus), and
     // past Spark's 10 MB auto-broadcast threshold the two
@@ -1522,9 +1501,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     // broadcast, so pair traffic stays (src, dst) ids and the only
     // wide relation is the post-cos (src, dst, cos) window input.
     // Beyond the cap the shuffle shape returns (a 1000-executor
-    // cluster has the disk for it) with [[neighborGraphCapped]]'s
-    // candCap as the volume dial; the next dial past THAT scale is
-    // PQ-coded candidate distances + exact re-rank (the
+    // cluster has the disk for it); the next lever past THAT scale
+    // is PQ-coded candidate distances + exact re-rank (the
     // [[SimilarityPqIndex]] machinery), which divides per-pair bytes
     // by ~16 at the cost of an approximate descent ordering.
     //
@@ -1532,18 +1510,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     // the old eager e.count() ran a job on every construction,
     // including plan-only consumers like the plan audit, and its
     // Dim×4-payload estimate ignored deserialized-row overhead).
-    val eHinted = if (vecBroadcasts) broadcast(e) else e
+    val eHinted = if (windowDedup) broadcast(e) else e
     val tagged = tableKeys(spark, dir)
-    def materialize(df: DataFrame): DataFrame = mode match {
-      case "ckpt"    => StateMode.cut(df)
-      case "persist" => df.persistScoped()
-      case other     => throw new IllegalArgumentException(s"unknown graph mode: $other")
-    }
-    // only a turned dial pays for rank-tracking: at candCap == GraphDeg
-    // every dial setting shares one plan shape (no rank column), so
-    // the default path IS the shipped operator — turned caps differ
-    // only in the rank filter, never in the cache layout
-    val needRank = candCap < GraphDeg
     // r16 ScaleLab: at a FIXED key length the per-table bucket
     // population grows linearly with the corpus, so this bucket-mate
     // self-join is inherently QUADRATIC in n — the measured x100 run
@@ -1607,7 +1575,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     }
     def topM(cand: DataFrame): DataFrame = {
       // past-gate shape: dedup the pair mass BEFORE the (now
-      // shuffling) attach joins — see the dedupShape scaladoc above.
+      // shuffling) attach joins — see the gate note above.
       // Below the gate `base = cand` and the in-window lag filter
       // does the dedup after map-side scoring (the r18 shape,
       // byte-identical plan to what r18 shipped).
@@ -1626,7 +1594,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       // ADJACENT under (cos desc, dst asc): lag(dst) flags every copy
       // after the first, and row_number then ranks the surviving
       // distinct rows exactly as it ranked the old distinct input
-      // (GraphDescentParityLab: set-identical at sf0.1 and x10; the
+      // (set-identical at sf0.1 and x10, OPTIMIZATION_r18.md; the
       // oracle replays the distinct-based construction and stays
       // green). Both window functions share one (src) exchange +
       // sort, so the n·(2·deg² + 2·deg) descent mass crosses ONE
@@ -1641,25 +1609,21 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
         else scored
           .withColumn("dup", lag(col("dst"), 1).over(w) === col("dst"))
           .filter(!coalesce(col("dup"), lit(false)))
-      val ranked = deduped.withColumn("rn", row_number().over(w))
+      deduped.withColumn("rn", row_number().over(w))
         .filter(col("rn") <= GraphDeg)
-      if (needRank) ranked.select("src", "dst", "rn")
-      else ranked.select("src", "dst")
+        .select("src", "dst")
     }
-    var g = materialize(topM(cand0))
+    var g = StateMode.cut(topM(cand0))
     for (_ <- 1 to DescentRounds) {
-      val edges = if (needRank) g.select("src", "dst") else g
-      val cg =
-        if (needRank) g.filter(col("rn") <= candCap).select("src", "dst") else g
-      val fwd = cg.as("a").join(cg.as("b"),
+      val fwd = g.as("a").join(g.as("b"),
           col("a.dst") === col("b.src") && col("a.src") =!= col("b.dst"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
-      val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
-      val co = cg.as("a").join(cg.as("b"),
+      val rev = g.select(col("dst").as("src"), col("src").as("dst"))
+      val co = g.as("a").join(g.as("b"),
           col("a.src") === col("b.src") && col("a.dst") =!= col("b.dst"))
         .select(col("a.dst").as("src"), col("b.dst").as("dst"))
-      g = materialize(topM(edges.union(fwd).union(rev).union(co)))
+      g = StateMode.cut(topM(g.union(fwd).union(rev).union(co)))
     }
-    if (needRank) g.select("src", "dst") else g
+    g
   }
 }

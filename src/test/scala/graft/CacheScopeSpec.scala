@@ -107,4 +107,26 @@ class CacheScopeSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "scoped releases left orphaned RDD blocks")
   }
+
+  test("StateMode: default deployment is ckpt and cut() truncates lineage") {
+    import spark.implicits._
+    // the resolved value must always be one of the legal three —
+    // this holds under any supported override
+    assert(Set(StateMode.Ckpt, StateMode.Persist,
+      StateMode.Reliable)(StateMode.deployment))
+    // the ckpt-specific assertions pin the DEFAULT deployment; a run
+    // under a legitimate GRAFT_STATE_MODE=persist/reliable override
+    // is a supported configuration, not a failure (ADVICE r16) —
+    // skip them rather than fail the suite
+    assume(sys.env.get("GRAFT_STATE_MODE").forall(_.trim.isEmpty) &&
+      sys.props.get("graft.state.mode").isEmpty,
+      "StateMode override active — ckpt-default assertions skipped")
+    assert(StateMode.deployment == StateMode.Ckpt)
+    val cut = StateMode.cut(Seq(1L, 2L, 3L).toDF("x"))
+    assert(cut.queryExecution.optimizedPlan.collectLeaves()
+      .forall(_.getClass.getSimpleName.contains("LogicalRDD")),
+      "ckpt-mode cut must leave a LogicalRDD leaf (lineage truncated)")
+    assert(cut.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    CacheScope.release(blocking = true)
+  }
 }

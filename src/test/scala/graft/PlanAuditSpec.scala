@@ -348,7 +348,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // (per-table and global) must push partial group limits. The
     // failure mode pinned against is the old shape returning: a
     // pair-mass distinct (keys qid, nid and NO cos) ahead of scoring
-    // — a 405M-row shuffle at the 100× lab corpus (KnnCostLab).
+    // — a 405M-row shuffle at the 100× lab corpus (OPTIMIZATION_r18.md).
     assert("WindowGroupLimit".r.findAllIn(kp).size >= 2,
       "knn_join must push BOTH the per-table and global rank limits")
     val kLines = kp.linesIterator.toArray
@@ -969,13 +969,12 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("kcore / lang_confusion: peeling reads materialized rounds; the rollup partial-combines") {
-    // r15 KcoreMode="ckpt": every round but the last is an eager
-    // localCheckpoint, so the final plan is the LAST peel round over
-    // a LogicalRDD leaf — earlier rounds must NOT re-appear as
-    // lineage (that is the 3^rounds declarative plan KcoreLab
-    // measured at 29-32 s vs ckpt's 2.2-2.4). The round body's
-    // partial-combine + cache-reuse properties are pinned where the
-    // lineage is visible: GraphRoundPlanSpec (persist-mode knob).
+    // every kcore round but the last is an eager localCheckpoint, so
+    // the final plan is the LAST peel round over a LogicalRDD leaf —
+    // earlier rounds must NOT re-appear as lineage (that is the
+    // 3^rounds declarative plan the r15 A/B measured at 29-32 s vs
+    // the cut's 2.2-2.4). The earlier rounds' bodies are pinned on
+    // their captured checkpoint plans in GraphRoundPlanSpec.
     val kc = plan("kcore")
     assert(kc.contains("Scan ExistingRDD"),
       "the last peel round must read the checkpointed previous round, not re-derived lineage")
@@ -1060,10 +1059,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("hits_scores: final half-rounds read checkpoints; max attaches as broadcast hash") {
-    // r15 HitsMode="ckpt": each half-round's raw sums are an eager
-    // localCheckpoint, so the final plan is the two rescales over
-    // LogicalRDD leaves. Edge-copy reuse + partial_sum are pinned in
-    // GraphRoundPlanSpec where the persist-mode lineage shows them.
+    // each half-round's raw sums are an eager localCheckpoint, so the
+    // final plan is the two rescales over LogicalRDD leaves. Edge-copy
+    // reuse + partial_sum are pinned on the captured half-round
+    // checkpoint plans in GraphRoundPlanSpec.
     val p = plan("hits_scores")
     assert("Scan ExistingRDD".r.findAllIn(p).size >= 2,
       "both final half-round scores must come from materialized checkpoints")
@@ -1596,11 +1595,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ktruss: the final support scan reads the checkpointed last round") {
-    // r15 TrussMode="ckpt": every round (incl. the last — its output
-    // is referenced 4× by the final support join) is an eager
-    // localCheckpoint, so the audited plan is the left join + one
-    // support enumeration over a LogicalRDD leaf. Round-body reuse is
-    // pinned lineage-visibly in GraphRoundPlanSpec's family note.
+    // every ktruss round (incl. the last — its output is referenced
+    // 4× by the final support join) is an eager localCheckpoint, so
+    // the audited plan is the left join + one support enumeration over
+    // a LogicalRDD leaf.
     val p = plan("ktruss")
     assert(p.contains("Scan ExistingRDD"),
       "ktruss's final support join must read the materialized last round, not re-derived lineage")

@@ -18,10 +18,10 @@ import graft.functions.VectorFunctions.cosine_sim
   * function of the attached embeddings — so they sort adjacent under
   * the top-M window's (cos desc, dst asc) order; dropping every copy
   * after the first leaves row_number ranking exactly the distinct
-  * row sequence the old plan ranked. GraphDescentParityLab runs the
-  * same comparison on the staged x10 corpus; the sf0.01 oracle
-  * replay (distinct-based construction CTEs) gates the full
-  * ann_graph pipeline independently. */
+  * row sequence the old plan ranked. The same comparison held on the
+  * staged x10 corpus (OPTIMIZATION_r18.md); the sf0.01 oracle replay
+  * (distinct-based construction CTEs) gates the full ann_graph
+  * pipeline independently. */
 class GraphDescentParitySpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -31,9 +31,9 @@ class GraphDescentParitySpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  /** The OLD full construction, reconstructed inline at the default
-    * dial (candCap == GraphDeg, ring init — identical in both
-    * shapes; only the descent's dedup placement differs). */
+  /** The OLD full construction, reconstructed inline (ring init —
+    * identical in both shapes; only the descent's dedup placement
+    * differs). */
   private def oldNeighborGraph(dir: String): DataFrame = {
     val eH = Similarity.vecHinted(graft.sources.Tables.embeddings(spark, dir))
     val tagged = Similarity.tableKeys(spark, dir)
@@ -100,42 +100,46 @@ class GraphDescentParitySpec extends AnyFunSuite {
   test("descent dedup shape follows the broadcast gate and both shapes agree (r19, VERDICT r18 item 3)") {
     val dir = "/root/testdata/sf0.01"
     // bcBytes = 0 forces the PAST-GATE regime on fixture data: the
-    // vector table must not broadcast and the auto shape must flip to
+    // vector table must not broadcast and the dedup shape must flip to
     // distinct-first (dedup the pair mass BEFORE the now-shuffling
-    // attach joins). bcBytes = default keeps the r18 lag-dedup shape.
-    // mode = "persist" so the final round's topM stays a visible plan
-    // (the shipped "ckpt" mode materializes every round into a
-    // LogicalRDD leaf, hiding the shape from the plan string); auto-
-    // broadcast off so "no broadcast hint" is observable on the tiny
-    // fixture relation.
-    def probe(bcBytes: Long, shape: String): DataFrame =
-      Similarity.neighborGraphCapped(spark, dir, Similarity.GraphDeg,
-        mode = "persist", bcBytes = bcBytes, dedupShape = shape)
-    def planOf(df: DataFrame): String =
-      df.queryExecution.executedPlan.toString
+    // attach joins). The default bcBytes keeps the r18 lag-dedup
+    // shape. Every topM round is an eager checkpoint, so the shape is
+    // read from the captured checkpoint plans; auto-broadcast is off
+    // so "no broadcast" is observable on the tiny fixture relation.
+    assume(graft.StateMode.deployment == graft.StateMode.Ckpt,
+      "StateMode override active — no localCheckpoint rounds to capture")
+    def build(bcBytes: Long): (DataFrame, Seq[String]) = {
+      val (g, plans) = CheckpointPlans.capture(spark)(
+        Similarity.neighborGraph(spark, dir, bcBytes = bcBytes))
+      assert(plans.size == 1 + Similarity.DescentRounds,
+        s"expected one checkpoint per topM round, captured ${plans.size}")
+      (g, plans.map(_.toString))
+    }
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val below = planOf(probe(Similarity.GraphBroadcastVecBytes, "auto"))
-      spark.catalog.clearCache(); graft.CacheScope.release(blocking = true)
-      val past = planOf(probe(0L, "auto"))
-      spark.catalog.clearCache(); graft.CacheScope.release(blocking = true)
-      assert(below.contains("lag(dst"),
-        "below the gate the r18 in-window lag-dedup must be the shape")
-      assert(below.contains("BroadcastHashJoin"),
-        "below the gate the attach joins ride the broadcast hint")
-      assert(!past.contains("lag(dst"),
-        "past the gate the lag-dedup must yield to distinct-first")
-      assert(!past.contains("BroadcastHashJoin"),
-        "past the gate the embedding attach joins must not broadcast")
-      // output parity: the shapes compute the identical graph
-      val w = probe(0L, "window")
-      val d = probe(0L, "distinct")
-      val d1 = w.exceptAll(d).count()
-      val d2 = d.exceptAll(w).count()
+      val (below, belowPlans) = build(Similarity.GraphBroadcastVecBytes)
+      val (past, pastPlans) = build(0L)
+      belowPlans.foreach { p =>
+        assert(p.contains("lag(dst"),
+          "below the gate the r18 in-window lag-dedup must be the shape")
+        assert(p.contains("BroadcastHashJoin"),
+          "below the gate the attach joins ride the broadcast hint")
+      }
+      pastPlans.foreach { p =>
+        assert(!p.contains("lag(dst"),
+          "past the gate the lag-dedup must yield to distinct-first")
+        assert(!p.contains("BroadcastHashJoin"),
+          "past the gate the embedding attach joins must not broadcast")
+      }
+      // output parity across regimes: the two shapes compute the
+      // identical graph
+      val d1 = below.exceptAll(past).count()
+      val d2 = past.exceptAll(below).count()
       assert(d1 == 0 && d2 == 0,
-        s"shapes diverge in the shuffle regime (window-minus-distinct=$d1, " +
-          s"distinct-minus-window=$d2)")
+        s"shapes diverge across the gate (below-minus-past=$d1, " +
+          s"past-minus-below=$d2)")
+      assert(below.count() > 0, "fixture neighbor graph is empty")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.catalog.clearCache()

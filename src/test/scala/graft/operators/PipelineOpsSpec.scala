@@ -184,27 +184,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     graft.CacheScope.release(blocking = true)
   }
 
-  test("neighborGraphCapped at candCap == GraphDeg reproduces the shipped graph row-for-row") {
-    // pins the r14 A/B dial's Scaladoc claim: the default path must be
-    // the shipped construction EXACTLY (the oracle replays it), so the
-    // capped variant may never drift under refactors
-    val shipped = Similarity.neighborGraph(spark, dir)
-    // ADVICE r14: derive the cap from the shipped constant — a literal
-    // 16 would silently pin a non-default cap if GraphDeg ever moved
-    val capped = Similarity.neighborGraphCapped(spark, dir, Similarity.GraphDeg)
-    assert(shipped.exceptAll(capped).isEmpty && capped.exceptAll(shipped).isEmpty,
-      "candCap=GraphDeg must be row-for-row identical to neighborGraph")
-    // a tighter cap restricts CANDIDATE GENERATION only — the output
-    // out-degree bound is unchanged, and the graph stays non-empty
-    val g12 = Similarity.neighborGraphCapped(spark, dir, 12)
-    val maxDeg12 = g12.groupBy("src").count()
-      .agg(org.apache.spark.sql.functions.max("count")).head().getLong(0)
-    assert(maxDeg12 <= Similarity.GraphDeg.toLong,
-      s"capped-build out-degree $maxDeg12 exceeds GraphDeg")
-    assert(g12.count() > 0L)
-    graft.CacheScope.release(blocking = true)
-  }
-
   test("ann_ivf probes its cells deterministically; recall ≥ 0.7 at EVERY swept SF") {
     val ivf1 = Similarity.annIvf(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

@@ -126,7 +126,7 @@ object ScaleLab {
   private def extraConfigs(spark: SparkSession, dirFor: Int => String)
       : Seq[(String, String, Seq[Int], Int => Unit)] = Seq(
     ("ann", "ann_graph_inf", Seq(1, 10),
-      f => { Similarity.annGraphBeam(spark, dirFor(f), Similarity.BeamWidth,
+      f => { Similarity.annGraphBeam(spark, dirFor(f),
         initPairCap = Int.MaxValue).count(); () }),
     ("knn", "knn_join_inf", Seq(1, 10),
       f => { Similarity.knnJoinCapped(spark, dirFor(f), Int.MaxValue).count(); () }),

@@ -353,58 +353,59 @@ object Dedup {
     * Banding: 16 bands × 4 rows ⇒ P(candidate) = 1-(1-j⁴)¹⁶ — at
     * j=0.98 a miss is ~1e-18, so on this corpus the output equals the
     * exact ngram-jaccard result (same SQL oracle). Candidates are
-    * verified exactly, so a band collision can never produce a false
-    * positive. Band keys are codegen'd multi-arg hashes of the 4
-    * signature columns, not string concats.
+    * band-mates ([[Refine.bucketPairs]]) verified exactly by
+    * [[minhashVerified]], so a band collision can never produce a
+    * false positive.
     *
     * Scale shape: the ONLY persisted state is the 520 B/doc sketch.
-    * Verification re-derives shingle hashes from the scan and
-    * immediately semi-joins them to the candidate doc-id set (a
-    * broadcast-sized list in any realistic near-dup regime), so the
-    * pair-intersection groupBy touches candidate docs only; the
-    * surviving (tiny) shingle subset is what gets cached for the
-    * two-sided pair join. Exact per-doc set sizes ride the sketch
-    * (`n`), so no second full aggregation is needed. */
+    * Band keys stay Column expressions over the cached sketch — a
+    * typed-closure variant was MEASURED SLOWER here (8.1 s vs 5.8 s
+    * first-run): SerializeFromObject hides size statistics, so the
+    * band self-join loses its broadcast and falls back to a
+    * sort-merge shuffle. Opposite trade from the LSH planes/shingle
+    * closures — closures win when expression COUNT explodes codegen,
+    * lose when they sit where Catalyst needs stats. */
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     val sketch = minhashSketch(spark, dir)
       .persistScoped()
-    // band keys as Column expressions over the cached sketch — a
-    // typed-closure variant was MEASURED SLOWER here (8.1 s vs 5.8 s
-    // first-run): SerializeFromObject hides size statistics, so the
-    // band self-join loses its broadcast and falls back to a
-    // sort-merge shuffle. Opposite trade from the LSH planes/shingle
-    // closures — closures win when expression COUNT explodes codegen,
-    // lose when they sit where Catalyst needs stats.
     val bands = bandsOf(sketch)
-    val cands = bands.as("x")
-      .join(bands.as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-      .persistScoped()
-    // exact verification: the candidate-id semi-join sits BELOW the
-    // tokenizer, so the second pass re-shingles only candidate docs —
-    // the scan streams all rows but the CPU-heavy flatMap touches the
-    // (tiny) near-dup subset
-    val candDocs = cands.select(col("doc_a").as("doc_id"))
-      .union(cands.select(col("doc_b").as("doc_id")))
+    val cands = Refine.bucketPairs(bands, bands, ("band_idx", "band_key"), "doc_id",
+      Some(_ < _))((a, b) => Seq(a.as("doc_a"), b.as("doc_b")))
+    minhashVerified(spark, dir, sketch, cands, ("doc_a", "doc_b"))
+  }
+
+  /** Exact verify step of the MinHash operators: (a, b, jaccard ≥ 0.8)
+    * over a candidate pair list whose id columns are named by `pair`.
+    * The semi-join to the candidate doc ids (a broadcast-sized list in
+    * any realistic near-dup regime) sits BELOW the tokenizer, so the
+    * second pass re-shingles only candidate docs — the scan streams all
+    * rows but the CPU-heavy flatMap and the pair-intersection groupBy
+    * touch the (tiny) near-dup subset only. The
+    * re-derived shingle hashes are persisted because they feed BOTH
+    * sides of the intersection join (uncached, the re-shingling runs
+    * twice), and exact per-doc set sizes ride the sketch (`n`), so no
+    * second full aggregation is needed. */
+  private def minhashVerified(spark: SparkSession, dir: String, sketch: DataFrame,
+      candidates: DataFrame, pair: (String, String)): DataFrame = {
+    val (a, b) = pair
+    val cands = candidates.persistScoped()
+    val candDocs = cands.select(col(a).as("doc_id"))
+      .union(cands.select(col(b).as("doc_id")))
       .distinct()
     val shc = docShinglesOf(
         Tables.documents(spark, dir).join(candDocs, Seq("doc_id"), "left_semi"))
       .select(col("doc_id"), xxhash64(col("shingle")).as("h0"))
       .persistScoped()
     val inter = cands
-      .join(shc.as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(shc.as("sa"), col(a) === col("sa.doc_id"))
       .join(shc.as("sb"),
-        col("doc_b") === col("sb.doc_id") && col("sa.h0") === col("sb.h0"))
-      .groupBy("doc_a", "doc_b")
+        col(b) === col("sb.doc_id") && col("sa.h0") === col("sb.h0"))
+      .groupBy(a, b)
       .agg(count(lit(1)).as("inter"))
     inter
-      .join(sketch.select(col("doc_id"), col("n")).as("ca"), col("doc_a") === col("ca.doc_id"))
-      .join(sketch.select(col("doc_id"), col("n")).as("cb"), col("doc_b") === col("cb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
+      .join(sketch.select(col("doc_id"), col("n")).as("ca"), col(a) === col("ca.doc_id"))
+      .join(sketch.select(col("doc_id"), col("n")).as("cb"), col(b) === col("cb.doc_id"))
+      .select(col(a), col(b),
         (col("inter") / (col("ca.n") + col("cb.n") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= 0.8)
   }
@@ -417,45 +418,20 @@ object Dedup {
     * so its cost is |batch| × bucket-mates, not corpus²; at 100 TB
     * the corpus side of the join is the stored 520 B/doc sketch
     * table — the whole point of persisting sketches is that
-    * ingestion never re-reads corpus text, and indeed only CANDIDATE
-    * corpus docs (bucket-mates of the batch) are re-shingled for
-    * exact verification. Output: (doc_new, doc_old, jaccard ≥ 0.8) —
-    * the evidence rows an ingestion gate would act on. Oracle: the
-    * exact-Jaccard pair relation restricted to cross-side pairs
-    * (recall 1.0 on this corpus, same argument as [[dedupMinhash]]). */
+    * ingestion never re-reads corpus text, and only CANDIDATE corpus
+    * docs are re-shingled by the shared verify step. Output:
+    * (doc_new, doc_old, jaccard ≥ 0.8) — the evidence rows an
+    * ingestion gate would act on. Oracle: the exact-Jaccard pair
+    * relation restricted to cross-side pairs (recall 1.0 on this
+    * corpus, same argument as [[dedupMinhash]]). */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val sketch = minhashSketch(spark, dir)
       .persistScoped()
     val bands = bandsOf(sketch)
-    val cands = bands.filter(col("doc_id") % 10 === 0).as("x")
-      .join(bands.filter(col("doc_id") % 10 =!= 0).as("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_key") === col("y.band_key"))
-      .select(col("x.doc_id").as("doc_new"), col("y.doc_id").as("doc_old"))
-      .distinct()
-      .persistScoped()
-    val candDocs = cands.select(col("doc_new").as("doc_id"))
-      .union(cands.select(col("doc_old").as("doc_id")))
-      .distinct()
-    // persisted for the same reason as dedupMinhash's shc: it feeds
-    // BOTH sides of the intersection join, and without the cache the
-    // candidate re-shingling pipeline runs twice
-    val shc = docShinglesOf(
-        Tables.documents(spark, dir).join(candDocs, Seq("doc_id"), "left_semi"))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("h0"))
-      .persistScoped()
-    val inter = cands
-      .join(shc.as("sa"), col("doc_new") === col("sa.doc_id"))
-      .join(shc.as("sb"),
-        col("doc_old") === col("sb.doc_id") && col("sa.h0") === col("sb.h0"))
-      .groupBy("doc_new", "doc_old")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sketch.select(col("doc_id"), col("n")).as("ca"), col("doc_new") === col("ca.doc_id"))
-      .join(sketch.select(col("doc_id"), col("n")).as("cb"), col("doc_old") === col("cb.doc_id"))
-      .select(col("doc_new"), col("doc_old"),
-        (col("inter") / (col("ca.n") + col("cb.n") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= 0.8)
+    val cands = Refine.bucketPairs(bands.filter(col("doc_id") % 10 === 0),
+        bands.filter(col("doc_id") % 10 =!= 0), ("band_idx", "band_key"), "doc_id",
+        None)((a, b) => Seq(a.as("doc_new"), b.as("doc_old")))
+    minhashVerified(spark, dir, sketch, cands, ("doc_new", "doc_old"))
   }
 
   /** 64-bit SimHash per doc (token-frequency weighted), plus near-dup
@@ -549,60 +525,19 @@ object Dedup {
   private val EmbTables = 32
   private val EmbBits = 4
 
-  /** Embedding-cosine near-dup pairs (≥ 0.45), LSH-bucketed + exact-
-    * verified: candidates are pairs sharing ≥1 of 32 sign-bucket keys,
-    * scored with the codegen'd cosine expression. Every surviving pair
-    * is exact, and on the fixture the candidate set provably contains
-    * every exact pair (see [[EmbTables]]), so the output hash-matches
-    * the all-pairs oracle.
-    *
-    * Scale shape: no BroadcastNestedLoopJoin — the candidate join
-    * shuffles narrow (table, key, id) tuples, partitioned by bucket
-    * key, spillable and AQE-skew-splittable; vectors are re-joined
-    * only for surviving candidates. Honest caveat: at a mid-similarity
-    * threshold like 0.45 on an unclustered corpus, bucket occupancy
-    * keeps candidate volume near-quadratic — the sub-quadratic win
-    * arrives at real near-dup thresholds (τ ≥ 0.8, where matching
-    * pairs concentrate in far fewer buckets) and on clustered
-    * corpora; what the formulation removes at ANY τ is the
-    * broadcast-the-whole-table memory hazard of the BNLJ. */
   /** Sign-LSH candidate pairs (vec_a < vec_b, distinct) over an
-    * arbitrary (vec_id, embedding) relation and banding scheme — the
-    * candidate generation inside [[dedupEmbedding]], parameterized so
-    * the τ ≥ 0.8 regime is an exercised library path, not a scaladoc
-    * promise: at real near-dup thresholds the right operating point
-    * is FEW tables × LONG keys (e.g. 8×16 — random pairs collide at
+    * arbitrary (vec_id, embedding) relation and banding scheme: the
+    * [[Refine.bucketPairs]] self-join of [[Similarity.embeddingTaggedOf]].
+    * At real near-dup thresholds the right operating point is FEW
+    * tables × LONG keys (e.g. 8×16 — random pairs collide at
     * ~2⁻¹⁶/table while cos ≥ 0.99 pairs still share a table w.h.p.),
     * and DedupScaleSpec plants a clustered corpus to assert the
-    * resulting candidate volume is ≪ n²/2 with zero lost pairs. The
-    * shuffle carries only (table, key, id) tuples either way. */
+    * resulting candidate volume is ≪ n²/2 with zero lost pairs. */
   private[graft] def embeddingCandidatesOf(
       emb: DataFrame, nTables: Int, bits: Int): DataFrame = {
-    val tagged = embeddingTaggedOf(emb, nTables, bits)
-    tagged.as("x")
-      .join(tagged.as("y"),
-        col("x.table_idx") === col("y.table_idx") &&
-          col("x.table_key") === col("y.table_key") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-      .distinct()
-  }
-
-  /** The (vec_id, table_idx, table_key) bucket frame behind
-    * [[embeddingCandidatesOf]] — exposed so ScaleLab can price the
-    * Σ bucket² pair mass analytically from bucket sizes (a groupBy,
-    * not the pair join) at factors where materializing the pairs is
-    * the measured ENOSPC class. */
-  private[graft] def embeddingTaggedOf(
-      emb: DataFrame, nTables: Int, bits: Int): DataFrame = {
-    import emb.sparkSession.implicits._
-    val planes = Similarity.makePlanes(nTables * bits)
-    emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .flatMap { r =>
-        Similarity.signKeys(r._2, planes, nTables, bits)
-          .iterator.zipWithIndex.map { case (k, t) => (r._1, t, k) }
-      }
-      .toDF("vec_id", "table_idx", "table_key")
+    val tagged = Similarity.embeddingTaggedOf(emb, nTables, bits)
+    Refine.bucketPairs(tagged, tagged, Similarity.SignBucket, "vec_id",
+      Some(_ < _))((a, b) => Seq(a.as("vec_a"), b.as("vec_b")))
   }
 
   private[graft] def embTablesBits: (Int, Int) = (EmbTables, EmbBits)
@@ -613,6 +548,42 @@ object Dedup {
   private val EmbTightTables = 8
   private val EmbTightBits = 16
 
+  /** Embedding-cosine near-dup pairs (cos ≥ `tau`) at a (tables ×
+    * bits) sign-LSH operating point: candidates are pairs sharing ≥1
+    * sign-bucket key ([[embeddingCandidatesOf]]), verified with the
+    * codegen'd cosine expression, so every surviving pair is exact.
+    *
+    * Scale shape: no BroadcastNestedLoopJoin — the candidate join
+    * shuffles narrow (table, key, id) tuples, partitioned by bucket
+    * key, spillable and AQE-skew-splittable. The candidates are the
+    * Σ bucket² side, so vectors attach through the size-gated
+    * broadcast ([[Similarity.vecHinted]], the r16 descent-build
+    * lesson) and the pair shuffle carries ids, never vectors. Honest
+    * caveat: at a mid-similarity threshold like 0.45 on an
+    * unclustered corpus, bucket occupancy keeps candidate volume
+    * near-quadratic — the sub-quadratic win arrives at real near-dup
+    * thresholds (τ ≥ 0.8, where matching pairs concentrate in far
+    * fewer buckets) and on clustered corpora; what the formulation
+    * removes at ANY τ is the broadcast-the-whole-table memory hazard
+    * of the BNLJ. */
+  private def embeddingDedupOn(emb: DataFrame, nTables: Int, bits: Int,
+      tau: Double): DataFrame =
+    embeddingCandidatesOf(emb.select(col("vec_id"), col("embedding")), nTables, bits)
+      .join(Similarity.vecHinted(
+        emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))), "vec_a")
+      .join(Similarity.vecHinted(
+        emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))), "vec_b")
+      .withColumn("cos", cosine_sim(col("ea"), col("eb")))
+      .filter(col("cos") >= tau)
+      .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos"))
+
+  /** Embedding near-dup pairs (cos ≥ 0.45) at the 32×4 operating
+    * point: on the fixture the candidate set provably contains every
+    * exact pair (see [[EmbTables]]), so the output hash-matches the
+    * all-pairs oracle. */
+  def dedupEmbedding(spark: SparkSession, dir: String): DataFrame =
+    embeddingDedupOn(Tables.embeddings(spark, dir), EmbTables, EmbBits, 0.45)
+
   /** TRUE near-dup embedding pairs (cos ≥ 0.8) at the sub-quadratic
     * LSH operating point: 8 tables × 16-bit sign keys, so bucket
     * mass over a non-adversarial corpus is ~n²/2¹⁶ per table instead
@@ -620,27 +591,13 @@ object Dedup {
     * point at 41.7G pairs at the 100× corpus). APPROXIMATE by
     * construction — a pair outside every shared bucket is unseen;
     * the operating point is built for the cos ≥ 0.9 mass where
-    * banding is effectively lossless. LIBRARY surface, deliberately
-    * NOT registered: every driver fixture has ZERO cos ≥ 0.8 pairs
-    * (max fixture cos 0.5128), so a registered entry would gate a
-    * permanently-empty result — vacuous evidence. The behavioral
-    * gate is DedupScaleSpec's planted-cluster test, which runs this
-    * exact operator over 0.99-cos clusters and asserts the output
-    * EQUALS the planted truth with candidates ≪ n²/2. Scale shape:
-    * shuffles carry (table, key, id) tuples; vectors attach to the
-    * candidate list via the size-gated broadcast. */
-  def dedupEmbeddingTightOn(emb: DataFrame): DataFrame = {
-    val cands = embeddingCandidatesOf(
-      emb.select(col("vec_id"), col("embedding")), EmbTightTables, EmbTightBits)
-    cands
-      .join(Similarity.vecHinted(
-        emb.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))), "vec_a")
-      .join(Similarity.vecHinted(
-        emb.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))), "vec_b")
-      .withColumn("cos", cosine_sim(col("ea"), col("eb")))
-      .filter(col("cos") >= 0.8)
-      .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos"))
-  }
+    * banding is effectively lossless. Every fixture has ZERO
+    * cos ≥ 0.8 pairs (max fixture cos 0.5128), so the registered gate
+    * runs it over a planted corpus ([[dedupEmbeddingTightPlanted]]);
+    * DedupScaleSpec's planted-cluster test asserts the output EQUALS
+    * the planted truth with candidates ≪ n²/2. */
+  def dedupEmbeddingTightOn(emb: DataFrame): DataFrame =
+    embeddingDedupOn(emb, EmbTightTables, EmbTightBits, 0.8)
 
   def dedupEmbeddingTight(spark: SparkSession, dir: String): DataFrame =
     dedupEmbeddingTightOn(Tables.embeddings(spark, dir))
@@ -685,25 +642,6 @@ object Dedup {
     * floors against the brute-force truth per SF. */
   def dedupEmbeddingTightPlanted(spark: SparkSession, dir: String): DataFrame =
     dedupEmbeddingTightOn(embPlantedTight(spark, dir))
-
-  /** Embedding near-dup pairs — random-hyperplane LSH bands generate
-    * candidates, exact lattice cosine confirms; never all-pairs. */
-  def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val cands = embeddingCandidatesOf(
-      e.select(col("vec_id"), col("embedding")), EmbTables, EmbBits)
-    // cands is the Σ bucket² side — attach vectors via the size-gated
-    // broadcast (Similarity.vecHinted, the r16 descent-build lesson)
-    // so the pair shuffle carries (vec_a, vec_b) ids, never vectors
-    cands
-      .join(Similarity.vecHinted(
-        e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"))), "vec_a")
-      .join(Similarity.vecHinted(
-        e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"))), "vec_b")
-      .withColumn("cos", cosine_sim(col("ea"), col("eb")))
-      .filter(col("cos") >= 0.45)
-      .select(col("vec_a"), col("vec_b"), round(col("cos"), 4).as("cos"))
-  }
 
   /** SemDeDup-style cluster-scoped semantic dedup (Abbas et al. 2023,
     * "SemDeDup: Data-efficient learning at web-scale through semantic

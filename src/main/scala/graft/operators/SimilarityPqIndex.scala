@@ -74,10 +74,8 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
         .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne")), "nid")
         .join(broadcast(q), "qid")
         .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
     def beamTop(cand: DataFrame): DataFrame =
-      scored(cand).withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= BeamWidth)
+      Refine.topK(scored(cand), Seq("qid"), ByCos, BeamWidth, "rn", longRank = false)
         .select("qid", "nid")
     val seeds = e.filter(col("vec_id") % SeedStride === 0)
       .select(col("vec_id").as("nid"))
@@ -97,9 +95,8 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
       beamTop(seeds.join(broadcast(q.select(col("qid"))), col("qid") =!= col("nid"))))
     for (_ <- 1 until BeamHops)
       beam = StateMode.cut(beamTop(beam.union(expand(beam)).distinct()))
-    scored(beam.union(expand(beam)).distinct())
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(scored(beam.union(expand(beam)).distinct()), Seq("qid"), ByCos, K, "rnk",
+        longRank = true)
       .select(col("qid"), col("rnk"), col("nid"), round(col("cos"), 4).as("cos"))
   }
 
@@ -518,10 +515,8 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
     * lattice-L2 rerank of shortlist rows only (codegen'd higher-order
     * fns, Long arithmetic throughout — bit-identical cross-engine). */
   private[operators] def rerankShortlist(spark: SparkSession, dir: String, scored: DataFrame): DataFrame = {
-    val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("nid").asc)
-    val short = scored
-      .withColumn("srk", row_number().over(wAdc))
-      .filter(col("srk") <= PqShortlist)
+    val short = Refine.topK(scored, Seq("qid"), Seq(col("adc").asc, col("nid").asc),
+        PqShortlist, "srk", longRank = false)
       .select(col("qid"), col("nid"))
     def latArr(c: Column): Column =
       transform(c, x => floor(x.cast("double") * lit(QScale.toDouble)).cast("long"))
@@ -532,10 +527,8 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
       .withColumn("dist",
         aggregate(zip_with(col("ql"), col("nl"), (a, b) => (a - b) * (a - b)),
           lit(0L), (acc, v) => acc + v))
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist").asc, col("nid").asc)
-    exact
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(exact, Seq("qid"), Seq(col("dist").asc, col("nid").asc), K, "rnk",
+        longRank = true)
       .select(col("qid"), col("rnk"), col("nid"), col("dist"))
   }
 
@@ -751,10 +744,8 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
         latArrCol(col("embedding")).as("ql"))
     val qcScored = relCellScores(
       q.select(col("qid").as("id"), col("qe").as("ve")), centArrOf(spark, root))
-    val wq = Window.partitionBy(col("id")).orderBy(col("cos").desc, col("cell").asc)
-    val qCells = qcScored
-      .withColumn("rk", row_number().over(wq))
-      .filter(col("rk") <= NProbe)
+    val qCells = Refine.topK(qcScored, Seq("id"), Seq(col("cos").desc, col("cell").asc),
+        NProbe, "rk", longRank = false)
       .select(col("id").as("qid"), col("cell"))
     val cand = cells
       .join(broadcast(qCells), "cell")
@@ -916,9 +907,7 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
         col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
         cosine_sim(col("a.embedding"), col("b.embedding")).as("cos"))
-    val w = Window.partitionBy("src").orderBy(col("cos").desc, col("dst").asc)
-    val topk = cand.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= MutualK)
+    val topk = Refine.topK(cand, Seq("src"), ByCosDst, MutualK, "rn", longRank = false)
       .select(col("src"), col("dst"), col("cos"))
       .persistScoped()
     topk.as("x")
@@ -948,11 +937,8 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
     val c = e.select(col("vec_id").as("nid"), latArrCol(col("embedding")).as("nq"))
     val d = aggregate(zip_with(col("qq"), col("nq"), (x, y) => (x - y) * (x - y)),
       lit(0L), (a, x) => a + x)
-    val w = Window.partitionBy(col("qid")).orderBy(col("dd").asc, col("nid").asc)
-    c.join(broadcast(q), col("qid") =!= col("nid"))
-      .withColumn("dd", d)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 2)
+    Refine.topK(c.join(broadcast(q), col("qid") =!= col("nid")).withColumn("dd", d),
+        Seq("qid"), Seq(col("dd").asc, col("nid").asc), 2, "rnk", longRank = false)
       .groupBy(col("qid"))
       .agg(min(when(col("rnk") === 1, col("nid"))).as("nn1"),
         min(when(col("rnk") === 1, col("dd"))).as("d1"),
@@ -1042,11 +1028,9 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
         latArrCol(col("embedding")).as("q"))
     val d = aggregate(zip_with(col("q"), col("centroid_q"), (x, c) => (x - c) * (x - c)),
       lit(0L), (a, x) => a + x)
-    val w = Window.partitionBy(col("label")).orderBy(col("d2").desc, col("vec_id").asc)
-    v.join(broadcast(cent), "label")
-      .withColumn("d2", d)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= OutlierK)
+    Refine.topK(v.join(broadcast(cent), "label").withColumn("d2", d),
+        Seq("label"), Seq(col("d2").desc, col("vec_id").asc), OutlierK, "rnk",
+        longRank = true)
       .select(col("label"), col("rnk"), col("vec_id"), col("d2"))
   }
 
@@ -1092,14 +1076,13 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
       .persistScoped()
     val d = aggregate(zip_with(col("a.q"), col("b.q"), (x, y) => (x - y) * (x - y)),
       lit(0L), (a, x) => a + x)
-    val w = Window.partitionBy("src").orderBy(col("dd").asc, col("nid").asc)
-    val votes = t.as("a")
+    val pairs = t.as("a")
       .join(t.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("src"), col("a.label").as("own"),
         col("b.vec_id").as("nid"), col("b.label").as("nl"), d.as("dd"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= NoiseK)
+    val votes = Refine.topK(pairs, Seq("src"), Seq(col("dd").asc, col("nid").asc), NoiseK,
+      "rn", longRank = false)
     val maj = votes.groupBy(col("src"), col("own"), col("nl"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("src"), col("own"))

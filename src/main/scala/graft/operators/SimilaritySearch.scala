@@ -40,12 +40,12 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     val c = e.select(col("vec_id").as("nid"), col("embedding").as("ne"))
     val scored = c.join(broadcast(q), col("qid") =!= col("nid"))
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(scored, Seq("qid"), ByCos, K, "rnk", longRank = true)
       .select(col("qid"), col("rnk"), col("nid"), round(col("cos"), 4).as("cos"))
   }
+
+  /** The (cos desc, nid asc) neighbour order of the cosine top-k keeps. */
+  private[operators] val ByCos: Seq[Column] = Seq(col("cos").desc, col("nid").asc)
 
   /** FILTERED vector search — the production retrieval mode every
     * vector store ships (metadata predicate + similarity, "nearest
@@ -60,7 +60,15 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * Scale shape: the [[annTopkBrute]] orientation — |Q| queries
     * broadcast against the corpus scan, the label equality prunes
     * before any scoring, rank-limit per query. */
-  def annFiltered(spark: SparkSession, dir: String): DataFrame = {
+  def annFiltered(spark: SparkSession, dir: String): DataFrame =
+    labelScopedTopK(spark, dir, _ === _)
+
+  /** Exact cosine top-[[K]] per query among corpus vectors whose label
+    * stands in `labelPred` (neighbour label, query label) to the
+    * query's — the body of [[annFiltered]] (`===`) and
+    * [[hardNegatives]] (`=!=`). */
+  private def labelScopedTopK(spark: SparkSession, dir: String,
+      labelPred: (Column, Column) => Column): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("label").cast("long").as("qlabel"),
@@ -68,12 +76,9 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     val c = e.select(col("vec_id").as("nid"), col("label").as("nlabel"),
       col("embedding").as("ne"))
     val scored = c.join(broadcast(q),
-        col("qid") =!= col("nid") && col("nlabel") === col("qlabel"))
+        col("qid") =!= col("nid") && labelPred(col("nlabel"), col("qlabel")))
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(scored, Seq("qid"), ByCos, K, "rnk", longRank = true)
       .select(col("qid"), col("qlabel").as("label"), col("rnk"), col("nid"),
         round(col("cos"), 4).as("cos"))
   }
@@ -101,23 +106,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * across the class boundary). Same |Q|-broadcast orientation as
     * [[annTopkBrute]]; the label inequality leaves no equi-key, so
     * the probe is the allowlisted tiny-broadcast BNLJ class. */
-  def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("label").cast("long").as("qlabel"),
-        col("embedding").as("qe"))
-    val c = e.select(col("vec_id").as("nid"), col("label").as("nlabel"),
-      col("embedding").as("ne"))
-    val scored = c.join(broadcast(q),
-        col("qid") =!= col("nid") && col("nlabel") =!= col("qlabel"))
-      .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
-      .select(col("qid"), col("qlabel").as("label"), col("rnk"), col("nid"),
-        round(col("cos"), 4).as("cos"))
-  }
+  def hardNegatives(spark: SparkSession, dir: String): DataFrame =
+    labelScopedTopK(spark, dir, _ =!= _)
 
   private[operators] def hardNegativesSql: String =
     s"""WITH q AS (SELECT vec_id AS qid, CAST(label AS BIGINT) AS qlabel,
@@ -159,11 +149,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     val c = e.select(col("vec_id").as("nid"), latArrCol(col("embedding")).as("nq"))
     val qdot = aggregate(zip_with(col("qq"), col("nq"), (x, y) => x * y),
       lit(0L), (a, x) => a + x)
-    val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("nid").asc)
-    val pool = c.join(broadcast(q), col("qid") =!= col("nid"))
-      .withColumn("dot", qdot)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= MmrPool)
+    val pool = Refine.topK(c.join(broadcast(q), col("qid") =!= col("nid"))
+        .withColumn("dot", qdot), Seq("qid"), ByDot, MmrPool, "rnk", longRank = false)
       .select(col("qid"), col("nid"), col("nq"), col("dot").as("rel"))
       .persistScoped()
     val pdot = aggregate(zip_with(col("aq"), col("bq"), (x, y) => x * y),
@@ -279,11 +266,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
         slice(latArrCol(col("embedding")), 1, dims).as("nq"))
       val dot = aggregate(zip_with(col("qq"), col("nq"), (x, y) => x * y),
         lit(0L), (a, x) => a + x)
-      val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("nid").asc)
-      c.join(broadcast(q), col("qid") =!= col("nid"))
-        .withColumn("dot", dot)
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= K)
+      Refine.topK(c.join(broadcast(q), col("qid") =!= col("nid")).withColumn("dot", dot),
+          Seq("qid"), ByDot, K, "rnk", longRank = false)
         .select(col("qid"), col("nid"))
     }
     val full = ranked(Dim)
@@ -471,13 +455,13 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     val c = e.select(col("vec_id").as("nid"), latArrCol(col("embedding")).as("nq"))
     val dot = aggregate(zip_with(col("qq"), col("nq"), (x, y) => x * y),
       lit(0L), (a, x) => a + x)
-    val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("nid").asc)
-    c.join(broadcast(q), col("qid") =!= col("nid"))
-      .withColumn("dot", dot)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(c.join(broadcast(q), col("qid") =!= col("nid")).withColumn("dot", dot),
+        Seq("qid"), ByDot, K, "rnk", longRank = true)
       .select(col("qid"), col("rnk"), col("nid"), col("dot"))
   }
+
+  /** The (dot desc, nid asc) order of the lattice inner-product keeps. */
+  private[operators] val ByDot: Seq[Column] = Seq(col("dot").desc, col("nid").asc)
 
   // -- deterministic random hyperplanes (SplitMix64, fixed seed) -----
 
@@ -501,9 +485,6 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     Array.fill(nPlanes)(
       Array.fill(Dim)(if ((rng.next() & 1L) == 0L) 1.0f else -1.0f))
   }
-
-  /** NTables×BitsPerTable hyperplanes of ±1 entries, fixed seed. */
-  private[operators] val planes: Array[Array[Float]] = makePlanes(NTables * BitsPerTable)
 
   /** Per-table sign-bucket keys over an arbitrary plane set: element t
     * packs `bits` sign bits of the dots with that table's hyperplanes.
@@ -538,49 +519,45 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     keys
   }
 
-  private[operators] def lshKeysOf(emb: Array[Float]): Array[Int] =
-    signKeys(emb, planes, NTables, BitsPerTable)
-
-  /** (vec_id, table_idx, table_key) rows for every vector. */
-  private[operators] def tableKeys(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+  /** The (vec_id, table_idx, table_key) sign-bucket frame of an
+    * (vec_id, embedding) relation at a (tables × bits) operating
+    * point — the candidate input of every sign-LSH operator; the ANN
+    * family uses [[NTables]] × [[BitsPerTable]]. Exposed so ScaleLab
+    * can price the Σ bucket² pair mass analytically from bucket sizes
+    * (a groupBy, not the pair join). */
+  private[graft] def embeddingTaggedOf(
+      emb: DataFrame, nTables: Int, bits: Int): DataFrame = {
+    import emb.sparkSession.implicits._
+    val ps = makePlanes(nTables * bits)
+    emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .flatMap { r =>
-        val keys = lshKeysOf(r._2)
-        keys.iterator.zipWithIndex.map { case (k, t) => (r._1, t, k) }
+        signKeys(r._2, ps, nTables, bits)
+          .iterator.zipWithIndex.map { case (k, t) => (r._1, t, k) }
       }
       .toDF("vec_id", "table_idx", "table_key")
   }
 
-  /** LSH-bucketed ANN: candidates = vectors sharing ≥1 of 16 table
-    * keys with the query, scored exactly, top-k per query. The
-    * candidate join shuffles only (table, key, id) tuples — at 100 TB
-    * the vectors themselves are re-joined only for the surviving
-    * candidate set. Recall vs. the brute-force truth is asserted in
-    * PipelineOpsSpec on the fixed-seed fixtures. */
+  /** The bucket columns of [[embeddingTaggedOf]], for [[Refine.bucketPairs]]. */
+  private[operators] val SignBucket = ("table_idx", "table_key")
+
+  /** LSH-bucketed ANN: candidates are vectors sharing ≥1 of 16 table
+    * keys with the broadcast query set ([[Refine.bucketPairs]]),
+    * scored exactly, top-k per query; vectors attach only to the
+    * surviving candidates. Recall vs. the brute-force truth is
+    * asserted in PipelineOpsSpec on the fixed-seed fixtures. */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val tagged = tableKeys(spark, dir)
-    val qTagged = tagged.filter(col("vec_id") < NQueries)
-      .withColumnRenamed("vec_id", "qid")
-    val candPairs = tagged.as("c")
-      .join(broadcast(qTagged).as("q"),
-        col("c.table_idx") === col("q.table_idx") &&
-          col("c.table_key") === col("q.table_key") &&
-          col("c.vec_id") =!= col("q.qid"))
-      .select(col("q.qid"), col("c.vec_id").as("nid"))
-      .distinct()
+    val tagged = embeddingTaggedOf(e, NTables, BitsPerTable)
+    val candPairs = Refine.bucketPairs(tagged,
+        broadcast(tagged.filter(col("vec_id") < NQueries)), SignBucket, "vec_id",
+        Some(_ =!= _))((c, q) => Seq(q.as("qid"), c.as("nid")))
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val scored = candPairs
       .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne")), "nid")
       .join(broadcast(q), "qid")
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(scored, Seq("qid"), ByCos, K, "rnk", longRank = true)
       .select(col("qid"), col("rnk"), col("nid"), round(col("cos"), 4).as("cos"))
   }
 
@@ -752,8 +729,6 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     annIvfProbe(spark, dir, NProbe)
 
-  /** [[annIvf]] with an explicit probe count — the recall/cost dial
-    * (PipelineOpsSpec measures the recall curve across settings). */
   /** Every vector's IVF cell (nearest learned centroid) — the coarse
     * quantizer shared by [[annIvf]] and the cluster-scoped semantic
     * dedup ([[graft.operators.Dedup.dedupSemantic]]). One narrow
@@ -795,11 +770,10 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
   }
 
+  /** [[annIvf]] with an explicit probe count — the recall/cost dial
+    * (PipelineOpsSpec measures the recall curve across settings). */
   private[graft] def annIvfProbe(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    ivfScored(spark, dir, nprobe)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(ivfScored(spark, dir, nprobe), Seq("qid"), ByCos, K, "rnk", longRank = true)
       .select(col("qid"), col("rnk"), col("nid"), round(col("cos"), 4).as("cos"))
   }
 
@@ -820,13 +794,11 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     val labels = e.select(col("vec_id").as("nid"), col("label").cast("long").as("nlabel"))
     val qLabels = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("label").cast("long").as("qlabel"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    ivfScored(spark, dir, NProbe)
+    val scored = ivfScored(spark, dir, NProbe)
       .join(labels, Seq("nid"))
       .join(broadcast(qLabels), Seq("qid"))
       .filter(col("nlabel") === col("qlabel"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(scored, Seq("qid"), ByCos, K, "rnk", longRank = true)
       .select(col("qid"), col("qlabel").as("label"), col("rnk"), col("nid"),
         round(col("cos"), 4).as("cos"))
   }
@@ -904,10 +876,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
         .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne")), "nid")
         .join(broadcast(q), "qid")
         .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-      val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-      val ivf = scored
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= K)
+      val ivf = Refine.topK(scored, Seq("qid"), ByCos, K, "rnk", longRank = true)
         .select(col("qid"), col("nid"), lit(1L).as("hit"))
       brute.join(ivf, Seq("qid", "nid"), "left")
         .agg(count(lit(1)).as("k_total"),
@@ -1040,10 +1009,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       col("embedding").as("ne"))
     val scored = c.join(broadcast(q), col("qid") =!= col("nid"))
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    val first = scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= MrrDepth && col("nlabel") === col("qlabel"))
+    val first = Refine.topK(scored, Seq("qid"), ByCos, MrrDepth, "rnk", longRank = true)
+      .filter(col("nlabel") === col("qlabel"))
       .groupBy(col("qid")).agg(min(col("rnk")).as("first_rank"))
     q.select(col("qid"), col("qlabel").as("label"))
       .join(first, Seq("qid"), "left")
@@ -1052,7 +1019,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
         coalesce(expr("1048576 div first_rank"), lit(0L)).as("rr_q"))
   }
 
-  private[operators] val MrrDepth = 50L
+  private[operators] val MrrDepth = 50
 
   /** Two-NN ratio distribution (Facco et al. 2017's intrinsic-
     * dimension estimator input) — the manifold-health probe an
@@ -1070,28 +1037,23 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * candidate graph knn_join gates (no all-pairs; candidates =
     * bucket-mates), so the oracle replays planes → keys → candidates
     * → lattice distances end to end. Scale shape: the candidate join
-    * shuffles (table, key, id) tuples only; distances attach by two
-    * equi-joins on the surviving pairs; the rank window is keyed by
-    * qid; the final fold is 10 rows. */
+    * ([[Refine.bucketPairs]]) shuffles (table, key, id) tuples only;
+    * distances attach by two equi-joins on the surviving pairs; the
+    * rank window is keyed by qid; the final fold is 10 rows. */
   def twonnRatio(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val tagged = tableKeys(spark, dir)
-    val cand = tagged.as("a").join(tagged.as("b"),
-        col("a.table_idx") === col("b.table_idx") &&
-          col("a.table_key") === col("b.table_key") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-      .distinct()
+    val tagged = embeddingTaggedOf(e, NTables, BitsPerTable)
+    val cand = Refine.bucketPairs(tagged, tagged, SignBucket, "vec_id",
+      Some(_ =!= _))((a, b) => Seq(a.as("qid"), b.as("nid")))
     val lat = e.select(col("vec_id"), latArrCol(col("embedding")).as("q"))
     val d = aggregate(zip_with(col("qq"), col("nq"), (x, y) => (x - y) * (x - y)),
       lit(0L), (a, x) => a + x)
-    val w = Window.partitionBy(col("qid")).orderBy(col("dd").asc, col("nid").asc)
-    cand
+    val scored = cand
       .join(lat.select(col("vec_id").as("nid"), col("q").as("nq")), "nid")
       .join(lat.select(col("vec_id").as("qid"), col("q").as("qq")), "qid")
       .withColumn("dd", d)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 2)
+    Refine.topK(scored, Seq("qid"), Seq(col("dd").asc, col("nid").asc), 2, "rnk",
+        longRank = false)
       .groupBy(col("qid"))
       .agg(min(when(col("rnk") === 1, col("dd"))).as("d1"),
         min(when(col("rnk") === 2, col("dd"))).as("d2"))
@@ -1188,9 +1150,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     val fused = lists.groupBy(col("qid"), col("nid"))
       .agg(sum(expr("1048576 div (60 + rnk)")).as("rrf_q"),
         count(lit(1)).as("n_lists"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("rrf_q").desc, col("nid").asc)
-    fused.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= K)
+    Refine.topK(fused, Seq("qid"), Seq(col("rrf_q").desc, col("nid").asc), K, "rnk",
+        longRank = true)
       .select(col("qid"), col("rnk"), col("nid"), col("rrf_q"), col("n_lists"))
   }
 
@@ -1307,37 +1268,24 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * ScaleLab batch 2 — the same inherent quadratic as the
     * NN-descent init: at fixed key bits the per-table bucket
     * population grows ~n/2^bits, so the bucket-mate self-join is
-    * Σ bucket² ~ n²). A finite cap ranks bucket members by vec_id
-    * and pairs each with only its next `bucketCap` in-bucket
-    * successors (symmetrized — every vector is a query here), which
-    * bounds candidates by NTables × cap × n, LINEAR in n. The
-    * registered op ships [[KnnBucketCap]]; Int.MaxValue reproduces
-    * the historical unbounded self-join for A/B. */
+    * Σ bucket² ~ n²). A finite cap takes the [[Refine.ringPairs]]
+    * candidates (symmetrized — every vector is a query here), LINEAR
+    * in n. The registered op ships [[KnnBucketCap]]; Int.MaxValue
+    * reproduces the historical unbounded self-join for A/B. */
   private[graft] def knnJoinCapped(spark: SparkSession, dir: String,
       bucketCap: Int): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val tagged = tableKeys(spark, dir)
+    val tagged = embeddingTaggedOf(e, NTables, BitsPerTable)
     def attach(pairs: DataFrame): DataFrame = pairs
       .join(vecHinted(e.select(col("vec_id").as("nid"), col("embedding").as("ne"))), "nid")
       .join(vecHinted(e.select(col("vec_id").as("qid"), col("embedding").as("qe"))), "qid")
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    def topK(scored: DataFrame): DataFrame = scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= KnnK)
-      .select(col("qid"), col("rnk"), col("nid"), round(col("cos"), 4).as("cos"))
-    if (bucketCap == Int.MaxValue) {
+    val scored = if (bucketCap == Int.MaxValue) {
       // historical unbounded A/B branch: global pair distinct, then
       // score + rank — the Σ bucket² mass this shape shuffles is the
       // measured ENOSPC class at 100×; kept only as the dial
-      val cand = tagged.as("a")
-        .join(tagged.as("b"),
-          col("a.table_idx") === col("b.table_idx") &&
-            col("a.table_key") === col("b.table_key") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-        .distinct()
-      topK(attach(cand))
+      attach(Refine.bucketPairs(tagged, tagged, SignBucket, "vec_id",
+        Some(_ =!= _))((a, b) => Seq(a.as("qid"), b.as("nid"))))
     } else {
       // r18 rework (the dedup_fuzzy lesson re-applied): the global
       // pair distinct dominated the 100× wall (OPTIMIZATION_r18.md:
@@ -1350,35 +1298,21 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       // candidate set is a subset of the union, so any global top-K
       // neighbor ranks ≤ K inside every table that generated it —
       // the per-table winners are a superset of the global winners
-      // under the same deterministic (cos desc, nid asc) order. The
-      // ring join's output is partitioned by (table_idx, table_key)
-      // and a query's per-table candidates all share its bucket, so
-      // the rank-limit's PARTIAL WindowGroupLimit collapses the ring
-      // mass map-side — only ≤ NTables·K rows per query reach any
-      // exchange. Cross-table duplicates then dedup at winner scale
-      // (≤ 16·K·n rows, vs 350M before) ahead of the global rank.
-      val wB = Window.partitionBy(col("table_idx"), col("table_key"))
-        .orderBy(col("vec_id"))
-      val ranked = tagged.withColumn("rn", row_number().over(wB))
-      val fwdp = ranked.as("a").join(ranked.as("b"),
-          col("a.table_idx") === col("b.table_idx") &&
-            col("a.table_key") === col("b.table_key") &&
-            col("b.rn") > col("a.rn") &&
-            col("b.rn") <= col("a.rn") + bucketCap)
-        .select(col("a.table_idx").as("table_idx"),
-          col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
-      val dirPairs = fwdp.union(
-        fwdp.select(col("table_idx"), col("nid").as("qid"), col("qid").as("nid")))
-      val wT = Window.partitionBy(col("table_idx"), col("qid"))
-        .orderBy(col("cos").desc, col("nid").asc)
-      val perTable = attach(dirPairs)
-        .withColumn("rt", row_number().over(wT))
-        .filter(col("rt") <= KnnK)
+      // under the same deterministic (cos desc, nid asc) order; only
+      // ≤ NTables·K rows per query reach any exchange. Cross-table
+      // duplicates then dedup at winner scale (≤ 16·K·n rows, vs 350M
+      // before) ahead of the global rank.
+      Refine.topK(attach(Refine.ringPairs(tagged, bucketCap, ("qid", "nid"))),
+          Seq("table_idx", "qid"), ByCos, KnnK, "rt", longRank = false)
         .select(col("qid"), col("nid"), col("cos"))
         .distinct()
-      topK(perTable)
     }
+    Refine.topK(scored, Seq("qid"), ByCos, KnnK, "rnk", longRank = true)
+      .select(col("qid"), col("rnk"), col("nid"), round(col("cos"), 4).as("cos"))
   }
+
+  /** The (cos desc, dst asc) edge order of the neighbor-graph keeps. */
+  private[operators] val ByCosDst: Seq[Column] = Seq(col("cos").desc, col("dst").asc)
 
   // -- graph ANN: bounded NN-descent k-NN graph + beam search --------
 
@@ -1511,15 +1445,17 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     // including plan-only consumers like the plan audit, and its
     // Dim×4-payload estimate ignored deserialized-row overhead).
     val eHinted = if (windowDedup) broadcast(e) else e
-    val tagged = tableKeys(spark, dir)
+    val tagged = embeddingTaggedOf(e, NTables, BitsPerTable)
+    def scored(pairs: DataFrame): DataFrame = pairs
+      .join(eHinted.select(col("vec_id").as("src"), col("embedding").as("se")), "src")
+      .join(eHinted.select(col("vec_id").as("dst"), col("embedding").as("de")), "dst")
+      .withColumn("cos", cosine_sim(col("se"), col("de")))
     // r16 ScaleLab: at a FIXED key length the per-table bucket
     // population grows linearly with the corpus, so this bucket-mate
     // self-join is inherently QUADRATIC in n — the measured x100 run
     // generated ~10⁴× the init pairs and died ENOSPC before the
-    // descent even started. `initPairCap` is the scale dial: rank
-    // bucket members by vec_id and pair each with only its next
-    // `initPairCap` in-bucket successors (symmetrized), bounding
-    // init mass by NTables × cap × n — LINEAR in n — while descent
+    // descent even started. `initPairCap` is the scale dial: the
+    // [[Refine.ringPairs]] init is LINEAR in n, while descent
     // rounds repair init quality (the classic random-init NN-descent
     // argument; bucket-mates are already LSH-close). The REGISTERED
     // op ships cap = [[GraphInitPairCap]] (r17) and the oracle
@@ -1527,12 +1463,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     // stays reachable as the small-corpus dial — or grow
     // BitsPerTable with log n, which keeps bucket sizes constant.
     val cand0 = if (initPairCap == Int.MaxValue) {
-      tagged.as("a").join(tagged.as("b"),
-          col("a.table_idx") === col("b.table_idx") &&
-            col("a.table_key") === col("b.table_key") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
-        .distinct()
+      Refine.bucketPairs(tagged, tagged, SignBucket, "vec_id",
+        Some(_ =!= _))((a, b) => Seq(a.as("src"), b.as("dst")))
     } else {
       // r18 rework (the knn_join/dedup_fuzzy lesson): the ring pairs'
       // global distinct shuffled ~405M directional rows at the 100×
@@ -1545,31 +1477,10 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       // table that generated it, and [[topM]] over these winners
       // (dedup'd at winner scale, ≤ NTables·deg·n rows) returns the
       // identical graph under the same (cos desc, dst asc) order.
-      // The rank-limit's PARTIAL WindowGroupLimit collapses the ring
-      // mass before any exchange — a src's per-table candidates all
-      // share its bucket partition. Winners re-score in topM (a ≤
-      // NTables·deg·n re-pass) — measured far cheaper than the
-      // pair-mass distinct it replaces.
-      val wB = Window.partitionBy(col("table_idx"), col("table_key"))
-        .orderBy(col("vec_id"))
-      val ranked = tagged.withColumn("rn", row_number().over(wB))
-      val fwdp = ranked.as("a").join(ranked.as("b"),
-          col("a.table_idx") === col("b.table_idx") &&
-            col("a.table_key") === col("b.table_key") &&
-            col("b.rn") > col("a.rn") &&
-            col("b.rn") <= col("a.rn") + initPairCap)
-        .select(col("a.table_idx").as("table_idx"),
-          col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
-      val dirPairs = fwdp.union(
-        fwdp.select(col("table_idx"), col("dst").as("src"), col("src").as("dst")))
-      val scoredT = dirPairs
-        .join(eHinted.select(col("vec_id").as("src"), col("embedding").as("se")), "src")
-        .join(eHinted.select(col("vec_id").as("dst"), col("embedding").as("de")), "dst")
-        .withColumn("cos", cosine_sim(col("se"), col("de")))
-      val wT = Window.partitionBy(col("table_idx"), col("src"))
-        .orderBy(col("cos").desc, col("dst").asc)
-      scoredT.withColumn("rt", row_number().over(wT))
-        .filter(col("rt") <= GraphDeg)
+      // Winners re-score in topM (a ≤ NTables·deg·n re-pass) —
+      // measured far cheaper than the pair-mass distinct it replaces.
+      Refine.topK(scored(Refine.ringPairs(tagged, initPairCap, ("src", "dst"))),
+          Seq("table_idx", "src"), ByCosDst, GraphDeg, "rt", longRank = false)
         .select(col("src"), col("dst"))
         .distinct()
     }
@@ -1580,11 +1491,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       // does the dedup after map-side scoring (the r18 shape,
       // byte-identical plan to what r18 shipped).
       val base = if (windowDedup) cand else cand.distinct()
-      val scored = base
-        .join(eHinted.select(col("vec_id").as("src"), col("embedding").as("se")), "src")
-        .join(eHinted.select(col("vec_id").as("dst"), col("embedding").as("de")), "dst")
-        .withColumn("cos", cosine_sim(col("se"), col("de")))
-      val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst").asc)
+      val w = Window.partitionBy(col("src")).orderBy(ByCosDst: _*)
       // r18 descent rework (the knn_join/dedup_fuzzy lesson, applied
       // to the build's LAST pair-mass distinct): the descent union
       // arrives RAW, so duplicate (src, dst) pairs are removed
@@ -1604,13 +1511,12 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       // same CPU-for-shuffle trade the dedup_fuzzy/knn_join reworks
       // measured as a clear win. Pre-deduplicated input (the init
       // branches) passes the lag filter untouched.
+      val s = scored(base)
       val deduped =
-        if (!windowDedup) scored // already distinct upstream
-        else scored
-          .withColumn("dup", lag(col("dst"), 1).over(w) === col("dst"))
+        if (!windowDedup) s // already distinct upstream
+        else s.withColumn("dup", lag(col("dst"), 1).over(w) === col("dst"))
           .filter(!coalesce(col("dup"), lit(false)))
-      deduped.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= GraphDeg)
+      Refine.topK(deduped, Seq("src"), ByCosDst, GraphDeg, "rn", longRank = false)
         .select("src", "dst")
     }
     var g = StateMode.cut(topM(cand0))

@@ -417,6 +417,24 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan("profile_table").contains("Expand"))
   }
 
+  test("agg_approx_distinct: no HyperLogLogPlusPlus aggregate sits above an Expand") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    // HLL++ buffers under an Expand are allocated once per expanded
+    // group — the 129 s full-materialization blow-up at sf0.1
+    val p = SparkEntry.queries("agg_approx_distinct")(spark, dir).queryExecution.sparkPlan
+    val hll = p.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(
+        _.aggregateFunction.isInstanceOf[HyperLogLogPlusPlus]) => a
+    }
+    assert(hll.nonEmpty, "the sketches must stay HLL++ aggregates")
+    hll.foreach(a => assert(a.collectFirst { case e: ExpandExec => e }.isEmpty,
+      s"HLL++ aggregate above an Expand:\n$a"))
+    // the two exact distincts keep their one Expand
+    assert(p.collectFirst { case e: ExpandExec => e }.nonEmpty)
+  }
+
   test("ann_pq pushes the shortlist rank limit and keeps all distance math in longs") {
     val p = plan("ann_pq")
     // the top-100 ADC cut must prune per map task, not post-exchange

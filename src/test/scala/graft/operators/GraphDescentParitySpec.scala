@@ -35,8 +35,9 @@ class GraphDescentParitySpec extends AnyFunSuite {
     * identical in both shapes; only the descent's dedup placement
     * differs). */
   private def oldNeighborGraph(dir: String): DataFrame = {
-    val eH = Similarity.vecHinted(graft.sources.Tables.embeddings(spark, dir))
-    val tagged = Similarity.tableKeys(spark, dir)
+    val e = graft.sources.Tables.embeddings(spark, dir)
+    val eH = Similarity.vecHinted(e)
+    val tagged = Similarity.embeddingTaggedOf(e, Similarity.NTables, Similarity.BitsPerTable)
     val cap = Similarity.GraphInitPairCap
     val deg = Similarity.GraphDeg
     def topMOld(cand: DataFrame): DataFrame = {

@@ -443,4 +443,76 @@ class PipelineOpsSpec extends AnyFunSuite {
     // each centroid is a full 64-dim lattice vector
     typed.values.foreach { case (_, c) => assert(c.split(",").length === 64) }
   }
+
+  // -- the Refine skeleton's contract on planted ties and collisions --
+
+  private def tagged(rows: (Long, Int, Int)*) = {
+    import spark.implicits._
+    rows.toDF("vec_id", "table_idx", "table_key").repartition(4)
+  }
+
+  test("Refine.topK: equal cosines rank the lower id first, rank is a long") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.functions.VectorFunctions.cosine_sim
+    val q = Seq((1L, Array(1.0f, 0.0f))).toDF("qid", "qe")
+    // 7 and 3 carry the same vector, so their cosines to q are equal;
+    // 5 is farther away
+    val c = Seq((7L, Array(1.0f, 0.5f)), (3L, Array(1.0f, 0.5f)), (5L, Array(0.0f, 1.0f)))
+      .toDF("nid", "ne").repartition(4)
+    val scored = c.crossJoin(q).withColumn("cos", cosine_sim(col("qe"), col("ne")))
+    def kept(k: Int) = Refine.topK(scored, Seq("qid"), Similarity.ByCos, k, "rnk",
+        longRank = true)
+      .select("rnk", "nid", "cos").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
+    val two = kept(2)
+    assert(two.map(r => (r._1, r._2)).toSeq === Seq((1L, 3L), (2L, 7L)))
+    assert(two(0)._3 === two(1)._3, "planted twins must score equal cosines")
+    assert(kept(1).map(_._2).toSeq === Seq(3L))
+  }
+
+  test("Refine.bucketPairs: a pair colliding in 3 buckets comes out once") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.col
+    // 1 and 2 share tables 0, 1 and 2; 1 and 3 share only table 3
+    val t = tagged((1L, 0, 10), (2L, 0, 10), (1L, 1, 11), (2L, 1, 11),
+      (1L, 2, 12), (2L, 2, 12), (1L, 3, 13), (2L, 3, 99), (3L, 3, 13))
+    def pairs(pred: Option[(Column, Column) => Column]) =
+      Refine.bucketPairs(t, t, Similarity.SignBucket, "vec_id", pred)(
+          (a, b) => Seq(a.as("a"), b.as("b")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(pairs(Some(_ < _)) === Seq((1L, 2L), (1L, 3L)))
+    assert(pairs(Some(_ =!= _)) === Seq((1L, 2L), (1L, 3L), (2L, 1L), (3L, 1L)))
+    val cross = Refine.bucketPairs(t.filter(col("vec_id") === 1L),
+        t.filter(col("vec_id") =!= 1L), Similarity.SignBucket, "vec_id", None)(
+        (a, b) => Seq(a.as("a"), b.as("b")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(cross === Seq((1L, 2L), (1L, 3L)))
+  }
+
+  test("Refine.ringPairs: at most 2·cap ring partners per vector and table") {
+    // table 0: one 10-member bucket; table 1: buckets of 6 and 4
+    val ids = 1L to 10L
+    val t = tagged(ids.map(i => (i, 0, 7)) ++ ids.map(i => (i, 1, if (i <= 6) 1 else 2)): _*)
+    val cap = 2
+    val ring = Refine.ringPairs(t, cap, ("src", "dst")).collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    val edges = ring.toSet
+    assert(edges.size === ring.length, "a ring pair came out twice in one direction")
+    edges.foreach { case (tb, a, b) => assert(edges.contains((tb, b, a)), s"($tb,$a,$b) unpaired") }
+    val partners = ring.groupBy(r => (r._1, r._2)).map { case (k, v) => k -> v.length }
+    assert(partners.values.max === 2 * cap)
+    // members ranked by vec_id pair with their neighbours within cap
+    // ranks: an interior member of the big bucket reaches all 2·cap
+    assert(partners((0, 5L)) === 2 * cap && partners((0, 1L)) === cap)
+    edges.foreach { case (_, a, b) => assert(math.abs(a - b) <= cap) }
+    // a cap past the bucket size pairs every bucket-mate, as the
+    // unbounded bucket self-join does
+    val all = Refine.ringPairs(t, 100, ("src", "dst")).collect()
+      .map(r => (r.getLong(1), r.getLong(2))).toSet
+    val mates = Refine.bucketPairs(t, t, Similarity.SignBucket, "vec_id", Some(_ =!= _))(
+        (a, b) => Seq(a, b))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(all === mates)
+  }
 }

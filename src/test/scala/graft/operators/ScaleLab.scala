@@ -348,13 +348,13 @@ object ScaleLab {
         val d = dirFor(f)
         val sj = Dedup.simjoinPrefixCandidates(spark, d).count()
         sweep()
-        val knnB = Similarity.tableKeys(spark, d)
+        val e = graft.sources.Tables.embeddings(spark, d)
+        val knnB = Similarity.embeddingTaggedOf(e, Similarity.NTables, Similarity.BitsPerTable)
           .groupBy("table_idx", "table_key").count()
         val (knnUb, knnCap) = (pairMass(knnB), ringMass(knnB, 64))
         sweep()
         val (embT, embBits) = Dedup.embTablesBits
-        val e = graft.sources.Tables.embeddings(spark, d)
-        val embB = Dedup.embeddingTaggedOf(e, embT, embBits)
+        val embB = Similarity.embeddingTaggedOf(e, embT, embBits)
           .groupBy("table_idx", "table_key").count()
         val embUb = pairMass(embB)
         sweep()

@@ -7,221 +7,83 @@ import org.apache.spark.sql.SparkSession
   *
   * A small warmup query runs first (untimed) so JVM/codegen/parquet-
   * footer warmup is not charged to whichever query happens to run
-  * first; queries then run in name order for stable output. The
-  * slowest ranks are re-timed once and report their MIN, damping
-  * ambient-load spikes out of the recorded line (see main).
+  * first; queries then run in name order for stable output.
+  *
+  * Rerun rule, the bench's only noise handling (it reads and keeps no
+  * state between runs): after the first pass, the successful queries
+  * are re-timed once, slowest first pass first, within
+  * [[RerunBudgetSec]] of rerun wall ([[dampWithBudget]]). Each
+  * re-timed query records the min of its two runs, is listed in the
+  * line's `damped` field, and prints `BENCH rerun <name> <first>s ->
+  * <second>s` to stderr. A load spike must hit the same query twice to
+  * survive into the line.
   */
 object Bench {
 
-  /** Parse the `"queries": { ... }` block of a committed
-    * `bench_detail_<sf>.json` (our own writeDetail output) into a
-    * name → seconds map. Regex-scoped to the queries block so the
-    * errors map's string values and the top-level meta numbers
-    * (n_queries/total_sec/nerr) can never leak in. Any malformed
-    * text yields an empty map — damping then falls back to the
-    * legacy top-rank heuristic rather than failing the bench. */
-  private[graft] def parseDetailQueries(text: String): Map[String, Double] = {
-    val start = text.indexOf("\"queries\"")
-    if (start < 0) Map.empty
-    else {
-      val body = text.substring(start)
-      val entry = """"([A-Za-z0-9_]+)"\s*:\s*([0-9]+(?:\.[0-9]+)?)""".r
-      entry.findAllMatchIn(body.drop(9))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
+  /** Rerun budget, in seconds of rerun wall. */
+  private[graft] val RerunBudgetSec = 60.0
 
-  /** The shared hot-vs-reference threshold (ADVICE r18: 1.5 was
-    * duplicated across pickReruns, the breaker count and the merge
-    * arm — one predicate, three call sites, no silent drift). */
-  private[graft] val RerunRatio = 1.5
-  private[graft] def hotVsRef(t: Double, c: Double): Boolean = t > c * RerunRatio
-
-  /** VERDICT r13 item 1 — which queries to re-time, worst first.
-    *
-    * The single-shot sweep is the only hard perf signal the judge
-    * reads, and ambient machine load has repeatedly inflated it
-    * (r13: 46 ops measured >2x their same-day committed time on
-    * identical code). With a committed reference run available,
-    * every op measuring >1.5x its committed time (and at least
-    * 150 ms over — sub-noise deltas aren't worth a rerun) is a
-    * re-time candidate, ordered by absolute excess so a capped
-    * budget buys down the biggest distortions first. Ops absent
-    * from the reference (new this round) get one damping pass when
-    * slow (>=1 s) — a single-shot first measurement of a slow op is
-    * exactly the noise-prone case; their ranking key is t/2 (the
-    * excess under an assumed half-time baseline) so a genuinely-new
-    * 5 s op no longer outranks an op inflated by 4 s (ADVICE r14).
-    * Without a reference (first run on a machine / new sf) fall back
-    * to the legacy top-12 ranks. */
-  private[graft] def pickReruns(
-      results: Seq[(String, Double)],
-      committed: Map[String, Double],
-      exclude: Set[String]): Seq[String] = {
-    val eligible = results.filterNot { case (n, _) => exclude(n) }
-    if (committed.isEmpty) eligible.sortBy(-_._2).take(12).map(_._1)
-    else eligible.flatMap { case (n, t) =>
-      committed.get(n) match {
-        case Some(c) if hotVsRef(t, c) && t - c >= 0.15 => Some((n, t - c))
-        case None if t >= 1.0                           => Some((n, t / 2))
-        case _                                          => None
-      }
-    }.sortBy(-_._2).map(_._1)
-  }
-
-  /** Re-time `ordered` (worst offender first) within `budgetSec` — a
-    * TRUE hard cap (ADVICE r14): a candidate whose first-pass time
+  /** The rerun rule: re-time the successful queries slowest-first by
+    * first-pass time within `budgetSec`. A query whose first-pass time
     * would overshoot the remaining budget is SKIPPED (the first pass
-    * upper-bounds an idle rerun), and scanning continues so a cheaper
-    * later candidate can still use the remainder. Consequence, by
-    * design: an op whose single first pass exceeds the entire budget
-    * is never re-timed — it stays honestly hot in the line, and the
-    * per-op min-merged reference ([[mergeReference]]) shields future
-    * rounds from inheriting it. Each re-timed query records the MIN
-    * of its two runs (a load spike must hit the same query twice to
-    * survive into the line) and is flagged `damped` for cross-round
-    * attribution. A failed rerun never replaces the first
-    * (successful) timing and is not flagged. */
+    * upper-bounds an idle rerun; a rerun slower than its first pass
+    * can overshoot by the difference), and scanning continues so a
+    * cheaper later query can still use the remainder.
+    * Consequence, by design: a query whose single first pass exceeds
+    * the entire budget is never re-timed — it stays honestly hot in the
+    * line. Each re-timed query records the MIN of its two runs and is
+    * flagged `damped`. Failed queries are never re-timed (their time is
+    * time-to-failure, not a measurement); a failed rerun never replaces
+    * the first (successful) timing and is not flagged. */
   private[graft] def dampWithBudget(
       results: Seq[(String, Double)],
-      ordered: Seq[String],
+      failed: collection.Set[String],
       budgetSec: Double)(
       rerun: String => (Double, Boolean)): (Seq[(String, Double)], Seq[String]) = {
-    val firstPass = results.toMap
     var spent = 0.0
     val mins = scala.collection.mutable.Map[String, Double]()
-    val flagged = scala.collection.mutable.ListBuffer[String]()
-    val it = ordered.iterator
+    val it = results.filterNot { case (n, _) => failed(n) }.sortBy(-_._2).iterator
     while (it.hasNext && spent < budgetSec) {
-      val name = it.next()
-      if (spent + firstPass.getOrElse(name, 0.0) <= budgetSec) {
+      val (name, first) = it.next()
+      if (spent + first <= budgetSec) {
         val (dt2, ok) = rerun(name)
         spent += dt2
-        if (ok) { mins(name) = dt2; flagged += name }
+        if (ok) mins(name) = dt2
       }
     }
     (results.map { case (n, t) => n -> math.min(t, mins.getOrElse(n, t)) },
-      flagged.toList.sorted)
+      mins.keys.toList.sorted)
   }
 
-  /** r15 (VERDICT r14 item 6): the damping reference is maintained
-    * PER OP, not per file — `bench_ref_<sf>.json` carries, for every
-    * registered op, the best-known-idle seconds, merged after each
-    * full run so one slightly-hot run can't degrade the reference for
-    * ops it happened to inflate. Merge rule per op:
-    *  - recorded < ref → recorded (a new best-known-idle);
-    *  - recorded > 1.5×ref AND the op was min-of-two damped this run
-    *    → recorded (TWO fresh measurements agreed the op is now
-    *    slower — a confirmed genuine change must move the reference,
-    *    or the op would burn rerun budget every round forever);
-    *  - otherwise → ref (ambient inflation never degrades it).
-    * Ops absent from this run's results are dropped (renames must not
-    * linger); ops new this run enter at their recorded time.
-    *
-    * Hot-run circuit breaker (r18, the r16 "heat-ratchet" item —
-    * observed live this round: a run where the whole machine sat
-    * ~25% above idle confirmed NINE unrelated ops >1.5× ref through
-    * min-of-two damping and ratcheted the reference up 16 s on
-    * unchanged code): one code change cannot plausibly slow many
-    * unrelated ops 50% at once — that signature is ambient load
-    * hitting both damping samples. When more than [[MaxRefRatchets]]
-    * ops qualify for the upward arm in a single run, ALL upward
-    * moves are suppressed for that run (downward min-merge always
-    * applies). A genuine localized regression (≤ the cap) still
-    * moves its refs the same run.
-    *
-    * Breaker escape (r19, ADVICE r18 medium: a genuine GLOBAL
-    * regression slowing >cap ops would re-qualify and re-trip the
-    * breaker every run forever, burning the rerun budget each time):
-    * the ref file persists a per-op consecutive-suppression streak
-    * (`pending_up`). An op that qualifies for the upward arm while
-    * the breaker is tripped increments its streak; on the
-    * [[PendingUpRuns]]-th consecutive qualifying run the move is
-    * ACCEPTED despite the breaker — independent full runs (typically
-    * hours/days apart) agreeing that many times is a regression, not
-    * one hot afternoon. Any run where the op stops qualifying (or
-    * ratchets normally) clears its streak. */
-  private[graft] val MaxRefRatchets = 3
-
-  /** Consecutive breaker-suppressed qualifying runs after which an
-    * op's upward ref move is accepted anyway (the r19 escape). */
-  private[graft] val PendingUpRuns = 3
-
-  /** Parse the `"pending_up"` block of a committed bench_ref file —
-    * brace-bounded (the block is flat) so the queries map's decimal
-    * entries can never leak in; malformed text yields empty. */
-  private[graft] def parsePendingUp(text: String): Map[String, Int] = {
-    val start = text.indexOf("\"pending_up\"")
-    if (start < 0) Map.empty
-    else {
-      val open = text.indexOf('{', start)
-      val close = if (open < 0) -1 else text.indexOf('}', open)
-      if (open < 0 || close < 0) Map.empty
-      else {
-        val entry = """"([A-Za-z0-9_]+)"\s*:\s*([0-9]+)""".r
-        entry.findAllMatchIn(text.substring(open + 1, close))
-          .map(m => m.group(1) -> m.group(2).toInt).toMap
-      }
-    }
-  }
-
-  /** Spec-facing 3-arg form: no persisted streaks in play. */
-  private[graft] def mergeReference(
-      ref: Map[String, Double],
-      recorded: Seq[(String, Double)],
-      damped: Set[String]): Map[String, Double] =
-    mergeReference(ref, recorded, damped, Map.empty)._1
-
-  private[graft] def mergeReference(
-      ref: Map[String, Double],
-      recorded: Seq[(String, Double)],
-      damped: Set[String],
-      pending: Map[String, Int]): (Map[String, Double], Map[String, Int]) = {
-    val qualifying = recorded.collect { case (n, t)
-      if damped(n) && ref.get(n).exists(c => hotVsRef(t, c)) => n }.toSet
-    val breaker = qualifying.size > MaxRefRatchets
-    val accepted =
-      if (!breaker) qualifying
-      else qualifying.filter(n => pending.getOrElse(n, 0) + 1 >= PendingUpRuns)
-    if (breaker) {
-      System.err.println(s"BENCH hot-run breaker: ${qualifying.size} ops " +
-        s"measured >${RerunRatio}x their idle reference even after damping " +
-        "— ambient signature, upward ref moves suppressed this run")
-      if (accepted.nonEmpty)
-        System.err.println(s"BENCH breaker escape: ${accepted.toSeq.sorted.mkString(" ")} " +
-          s"qualified on $PendingUpRuns consecutive runs — accepted as genuine")
-    }
-    val merged = recorded.map { case (n, t) =>
-      n -> (ref.get(n) match {
-        case Some(_) if accepted(n) => t
-        case Some(c)                => math.min(c, t)
-        case None                   => t
-      })
-    }.toMap
-    val nextPending =
-      if (!breaker) Map.empty[String, Int]
-      else (qualifying -- accepted).iterator
-        .map(n => n -> (pending.getOrElse(n, 0) + 1)).toMap
-    (merged, nextPending)
+  /** Validate a name selector against the `known` names: Right(the
+    * selected names) or Left(error naming the unknown entries). Pure so
+    * BenchLineSpec can pin it; Bench (SPARK_GRAFT_ONLY,
+    * SPARK_GRAFT_MODULE) and Verify (trailing names) exit loudly on
+    * Left — an empty or misspelt selector would otherwise filter the
+    * registry to nothing and read as a 0 s bench or an empty dump. */
+  private[graft] def resolveNames(
+      kind: String,
+      sel: Seq[String],
+      known: collection.Set[String]): Either[String, Set[String]] = {
+    val wanted = sel.map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted -- known
+    if (wanted.isEmpty) Left(s"empty $kind selector")
+    else if (unknown.nonEmpty) Left(s"unknown $kind(s): ${unknown.toSeq.sorted.mkString(",")}")
+    else Right(wanted)
   }
 
   /** Resolve a bench module selector ("relational" or "dedup,graph")
     * against SparkEntry.namedModules: Right(query-name set) or
     * Left(error message naming the unknown selectors and the valid
-    * ones). Pure so BenchLineSpec can pin it; main exits loudly on
-    * Left (an empty silent run would read as a 0 s bench). */
+    * ones). Case-insensitive; see [[resolveNames]]. */
   private[graft] def resolveModuleFilter(
       sel: String,
       modules: Seq[(String, Map[String, _])]): Either[String, Set[String]] = {
-    val wanted = sel.split(',').map(_.trim.toLowerCase).filter(_.nonEmpty).toSet
     val known = modules.map(_._1).toSet
-    val unknown = wanted -- known
-    if (wanted.isEmpty) Left(s"empty module selector; available: ${known.toSeq.sorted.mkString(",")}")
-    else if (unknown.nonEmpty)
-      Left(s"unknown module(s): ${unknown.toSeq.sorted.mkString(",")}; " +
-        s"available: ${known.toSeq.sorted.mkString(",")}")
-    else Right(modules.collect { case (n, qs) if wanted(n) => qs.keySet }
-      .foldLeft(Set.empty[String])(_ ++ _))
+    resolveNames("module", sel.split(',').toSeq.map(_.toLowerCase), known)
+      .left.map(_ + s"; available: ${known.toSeq.sorted.mkString(",")}")
+      .map(wanted => modules.collect { case (n, qs) if wanted(n) => qs.keySet }
+        .foldLeft(Set.empty[String])(_ ++ _))
   }
 
   /** 10 ms precision is plenty; full double precision made the r2
@@ -374,6 +236,22 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // dev-side subset runs (the driver leaves both unset):
+    // SPARK_GRAFT_ONLY="a,b" times named queries, SPARK_GRAFT_MODULE=
+    // relational (or -DbenchModule=relational) one module's registry.
+    // Checked before Spark starts.
+    def orExit(r: Either[String, Set[String]]): Set[String] = r match {
+      case Right(names) => names
+      case Left(msg) =>
+        System.err.println(s"BENCH $msg")
+        sys.exit(1)
+    }
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(s => orExit(resolveNames("query", s.split(',').toSeq, SparkEntry.queries.keySet)))
+    val moduleOnly = sys.props.get("benchModule").orElse(sys.env.get("SPARK_GRAFT_MODULE"))
+      .map(sel => orExit(resolveModuleFilter(sel, SparkEntry.namedModules)))
+    val subsetRun = only.nonEmpty || moduleOnly.nonEmpty
+
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -398,114 +276,55 @@ object Bench {
     catch { case _: Throwable => () }
     spark.catalog.clearCache()
 
-    // A failed query must never bench as ~0 s and read as a speedup:
-    // record its error and surface it in the JSON. Caches are cleared
-    // after every query so timings are order-independent (a query that
-    // persists intermediates is charged their build AND cannot donate
-    // them to a later query).
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // dev-side isolation runs: SPARK_GRAFT_ONLY="a,b" times a subset
-    // in the same harness (driver leaves it unset)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // VERDICT r13 item 4: SPARK_GRAFT_MODULE=relational (or
-    // -DbenchModule=relational) re-times ONE module without paying
-    // the other ~380 ops' wall — at +100 ops/round the full sweep
-    // pinches the driver's budget, and dev iteration needs the
-    // per-module path. Unknown module names fail loudly (an empty
-    // silent run would read as a 0 s bench).
-    val moduleSel = sys.props.get("benchModule").orElse(sys.env.get("SPARK_GRAFT_MODULE"))
-    val moduleOnly: Option[Set[String]] = moduleSel.map { sel =>
-      resolveModuleFilter(sel, SparkEntry.namedModules) match {
-        case Right(names) => names
-        case Left(msg) =>
-          System.err.println(s"BENCH $msg")
-          spark.stop()
-          sys.exit(1)
-      }
-    }
-    val subsetRun = only.nonEmpty || moduleOnly.nonEmpty
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_(name)) && moduleOnly.forall(_(name)) }
-      .map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
-            errors(name) = sanitize(Option(e.getMessage).getOrElse(e.getClass.getName))
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // clearCache() drops Dataset.persist entries; localCheckpoint
-        // blocks live OUTSIDE the SQL cache (raw RDD storage) and
-        // otherwise linger until driver GC — sweep them too, so
-        // iterative ops (dedup_cluster, cc_star) can't donate memory
-        // pressure to later queries. BLOCKING: a non-blocking sweep
-        // just queues removal on the async cleaner, and over 100+
-        // queries the backlog's block-removal work bleeds into later
-        // timings (r6 showed q3→q9 escalating 5→39 s; all fast in
-        // isolation). The removal cost lands here, OUTSIDE any query's
-        // timed window, which is where it belongs.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        name -> dt
-      }
-    // Ambient machine load has repeatedly inflated single-shot
-    // recorded timings 2–4× vs idle reruns of identical code (r6:
-    // recorded 270 s, reproduced 96 s; r13: 46 ops >2× the same-day
-    // stamped run — incl. a 0.23 s narrow map at 7.83 s). Damping
-    // (VERDICT r13 item 1): compare against the COMMITTED
-    // bench_detail for this sf (read before this run overwrites it)
-    // and re-time every op measuring >1.5× its committed time —
-    // worst absolute excess first, hard-capped at ~60 s of actual
-    // rerun wall — keeping the per-query MIN and flagging it damped.
-    // A load spike must now hit the same query in BOTH passes to
-    // survive into the line, and the flag set is exactly the ops
-    // that disagreed with the committed reference. No committed
-    // reference (fresh machine / new sf) → legacy top-12-ranks pass.
-    // r15 (VERDICT r14 item 2): the former noRerun streaming set
-    // (stream_sink/join/join_outer/dedup — persistent scratch made a
-    // rerun incremental: zero new files drained, warm-path time) is
-    // damp-eligible again — the scratch EPOCH flips before the rerun
-    // pass, so every TempDirs-scratch op re-runs against a fresh
-    // checkpoint/sink tree and its rerun is a genuine cold drain.
-    val detailDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL_DIR", ".")
-    val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    def readText(file: String): String = try {
-      val p = java.nio.file.Paths.get(detailDir, file)
-      if (java.nio.file.Files.exists(p))
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      else ""
-    } catch { case _: Throwable => "" }
-    val refText = readText(s"bench_ref_$sfShort.json")
-    // the per-op min-merged reference outranks the last run's detail
-    // file (which records ONE run honestly, hot or not)
-    val committed: Map[String, Double] = {
-      val ref = parseDetailQueries(refText)
-      if (ref.nonEmpty) ref
-      else parseDetailQueries(readText(s"bench_detail_$sfShort.json"))
-    }
-    val pendingUp: Map[String, Int] = parsePendingUp(refText)
-    val ordered = pickReruns(results, committed, errors.keySet.toSet)
-    val dampBudget = sys.env.get("SPARK_GRAFT_DAMP_BUDGET")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(60.0)
-    sys.props(graft.sources.TempDirs.EpochProp) = "damp"
-    val (damped, rerun) = dampWithBudget(results, ordered, dampBudget) { name =>
+    // One timed run, shared by the first pass and the rerun: the
+    // count() action, then the sanitized error if it failed (a failed
+    // query must never bench as ~0 s and read as a speedup), then the
+    // cache sweep. Caches are cleared after every query so timings are
+    // order-independent (a query that persists intermediates is
+    // charged their build AND cannot donate them to a later query).
+    def timedRun(name: String): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      // ADVICE r8: a rerun that fails fast must NOT record its
-      // time-to-failure as the min — only a successful count() may
-      // replace the first (successful) timing
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-      catch {
-        case e: Throwable =>
-          System.err.println(s"BENCH rerun of $name failed: " +
-            sanitize(Option(e.getMessage).getOrElse(e.getClass.getName)))
-          false
-      }
-      val dt2 = (System.nanoTime() - t0) / 1e9
+      val err =
+        try { SparkEntry.queries(name)(spark, sfDir).count(); None }
+        catch { case e: Throwable =>
+          Some(sanitize(Option(e.getMessage).getOrElse(e.getClass.getName)))
+        }
+      val dt = (System.nanoTime() - t0) / 1e9
+      // clearCache() drops Dataset.persist entries; localCheckpoint
+      // blocks live OUTSIDE the SQL cache (raw RDD storage) and
+      // otherwise linger until driver GC — sweep them too, so
+      // iterative ops (dedup_cluster, cc_star) can't donate memory
+      // pressure to later queries. BLOCKING: a non-blocking sweep
+      // just queues removal on the async cleaner, and over 100+
+      // queries the backlog's block-removal work bleeds into later
+      // timings (r6 showed q3→q9 escalating 5→39 s; all fast in
+      // isolation). The removal cost lands here, OUTSIDE any query's
+      // timed window, which is where it belongs.
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      (dt2, ok)
+      (dt, err)
+    }
+
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    val results = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_(name)) && moduleOnly.forall(_(name)))
+      .map { name =>
+        val (dt, err) = timedRun(name)
+        err.foreach(errors(name) = _)
+        name -> dt
+      }
+    // The rerun pass (see the object doc). The scratch EPOCH flips
+    // first, so every TempDirs-scratch op (the streaming sink gates,
+    // whose checkpoints persist per-JVM by design) re-runs against a
+    // fresh checkpoint/sink tree and its rerun is a genuine cold drain.
+    sys.props(graft.sources.TempDirs.EpochProp) = "damp"
+    val firstPass = results.toMap
+    val (recorded, damped) = dampWithBudget(results, errors.keySet, RerunBudgetSec) { name =>
+      val (dt2, err) = timedRun(name)
+      val head = s"BENCH rerun $name ${f2(firstPass(name))}s -> ${f2(dt2)}s"
+      System.err.println(err.fold(head)(msg => s"$head failed: $msg"))
+      (dt2, err.isEmpty)
     }
     // per-query exception lines go to stderr BEFORE the JSON line so
     // they can never crowd it out of the driver's tail capture, and a
@@ -522,56 +341,17 @@ object Bench {
     // regression below rank 40 invisible cross-round. Write the FULL
     // {query: sec} map (plus damped flags and errors) to a committable
     // detail file so rounds are diffable query-by-query. Failure to
-    // write must never take down the contract line.
-    // A subset run (SPARK_GRAFT_ONLY / SPARK_GRAFT_MODULE) must never
-    // overwrite the full-registry detail file — the next full run's
-    // damping reads it as the committed reference, and a 30-op file
-    // would mark the other ~370 ops as "new" (no reference at all).
+    // write must never take down the contract line. A subset run
+    // (SPARK_GRAFT_ONLY / SPARK_GRAFT_MODULE) never overwrites the
+    // full-registry record.
     if (subsetRun)
-      System.err.println("BENCH subset run: bench_detail/bench_ref not written")
-    else {
-      try writeDetail(damped, errors, sfDir, rerun)
+      System.err.println("BENCH subset run: bench_detail not written")
+    else
+      try writeDetail(recorded, errors, sfDir, damped)
       catch { case e: Throwable =>
         System.err.println(s"BENCH detail write failed: ${sanitize(String.valueOf(e.getMessage))}")
       }
-      // r15 (VERDICT r14 item 6): refresh the per-op min-merged
-      // damping reference — the file the NEXT run's pickReruns reads.
-      // Failed ops are excluded (their recorded time is time-to-
-      // failure, not a measurement).
-      try {
-        val (merged, nextPending) = mergeReference(
-          committed, damped.filterNot { case (n, _) => errors.contains(n) },
-          rerun.toSet, pendingUp)
-        val qs = merged.toSeq.sortBy(_._1)
-          .map { case (k, v) =>
-            s"""    "$k": ${"%.3f".formatLocal(java.util.Locale.ROOT, v)}""" }
-          .mkString(",\n")
-        // pending_up sits BEFORE queries: parseDetailQueries scans
-        // everything after the "queries" marker, so a trailing block
-        // would leak integer streaks into the reference map
-        val pend = nextPending.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"""    "$k": $v""" }.mkString(",\n")
-        val json =
-          s"""{
-             |  "sf": "$sfShort",
-             |  "note": "per-op min-merged damping reference (best-known-idle); see Bench.mergeReference",
-             |  "n_queries": ${merged.size},
-             |  "pending_up": {
-             |$pend
-             |  },
-             |  "queries": {
-             |$qs
-             |  }
-             |}
-             |""".stripMargin
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(detailDir, s"bench_ref_$sfShort.json"),
-          json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch { case e: Throwable =>
-        System.err.println(s"BENCH ref write failed: ${sanitize(String.valueOf(e.getMessage))}")
-      }
-    }
-    println(renderLine(damped, errors, sfDir, damped = rerun))
+    println(renderLine(recorded, errors, sfDir, damped = damped))
     spark.stop()
   }
 }

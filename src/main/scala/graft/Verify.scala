@@ -5,8 +5,17 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // dev-side: trailing names restrict the dump (driver passes none)
-    val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
+    // dev-side: trailing names restrict the dump (driver passes none);
+    // an unknown name fails loudly instead of dumping nothing
+    val (sfDir, outDir) = (args(0), args(1))
+    val only: Set[String] =
+      if (args.length <= 2) Set.empty
+      else Bench.resolveNames("query", args.toSeq.drop(2), SparkEntry.queries.keySet) match {
+        case Right(names) => names
+        case Left(msg) =>
+          System.err.println(s"[verify] $msg")
+          sys.exit(1)
+      }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

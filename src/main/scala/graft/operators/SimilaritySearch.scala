@@ -570,7 +570,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   /** Offset of the sampled-point seed window above the corpus'
     * SMALLEST vec_id — r15 (VERDICT r14 item 5): the seed slice is
     * corpus-RELATIVE (min(vec_id) + offset), not a literal id range,
-    * and this one constant is shared by the engine ([[seedCentroids]],
+    * and this one constant is shared by the engine ([[seedCentroidsFrom]],
     * `SimilarityPqIndex.pqSeedCodebook`) and the oracle replays
     * (`Similarity.seedWindowSql`), so both derive the identical slice
     * on any corpus. The offset preserves the shipped fixtures' slice
@@ -589,16 +589,12 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   /** Deterministic SEED centroids: a fixed corpus-relative slice
     * (vec_id ∈ [base, base+NCells), base = min(vec_id) +
     * [[SeedBaseOffset]]) — sampled-point initialization, the k-means
-    * analogue of a fixed seed. */
-  private[operators] def seedCentroids(spark: SparkSession, dir: String,
-      nCells: Int = NCells): Array[(Int, Array[Double])] =
-    seedCentroidsFrom(spark, dir, seedWindowBase(spark, dir), nCells)
-
-  /** [[seedCentroids]] with the seed-window base already resolved —
-    * callers that train BOTH the coarse quantizer and the PQ codebook
-    * (ann_index build, ann_ivfpq) resolve the corpus min once instead
-    * of paying the full-scan `min(vec_id)` job per trained artifact
-    * (r19, guide §2.4: the two jobs computed the identical scalar). */
+    * analogue of a fixed seed. `base` comes from [[seedWindowBase]],
+    * resolved by the caller: callers that train BOTH the coarse
+    * quantizer and the PQ codebook (ann_index build, ann_ivfpq)
+    * resolve the corpus min once instead of paying the full-scan
+    * `min(vec_id)` job per trained artifact (r19: the two jobs
+    * computed the identical scalar). */
   private[operators] def seedCentroidsFrom(spark: SparkSession, dir: String,
       base: Option[Long], nCells: Int = NCells): Array[(Int, Array[Double])] =
     base match {

@@ -108,12 +108,16 @@ class BenchLineSpec extends AnyFunSuite {
     // (at 117 names the full map's name mass alone crowds the window,
     // so this lands on the tail-only rung — the ranking detail must
     // survive the cut). The damped flag rides along exactly as main
-    // emits it: the 12 slowest names.
+    // emits it: the rerun rule on an idle host (reruns as fast as the
+    // first pass).
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
     val results = names.zipWithIndex.map { case (n, i) =>
       n -> (if (i % 4 == 0) 2.37 else 0.43)
     }
-    val dampedNames = results.sortBy(-_._2).take(12).map(_._1).sorted
+    val first = results.toMap
+    val (_, dampedNames) = Bench.dampWithBudget(results, Set.empty, Bench.RerunBudgetSec) { n =>
+      (first(n), true)
+    }
     val out = Bench.renderLine(results, Map.empty[String, String],
       "/root/testdata/sf0.1", damped = dampedNames)
     assert(out.length <= 1896,
@@ -185,61 +189,21 @@ class BenchLineSpec extends AnyFunSuite {
     assert(real.length <= 1900 && real.contains(""""_rest_n":"""))
   }
 
-  test("parseDetailQueries round-trips writeDetail and ignores meta/error entries (r13 item 1)") {
-    val results = Seq("q_alpha" -> 1.234, "q_beta" -> 0.056, "nerr_trap" -> 3.0)
-    val errors = scala.collection.mutable.LinkedHashMap("q_dead" -> "boom 42")
-    Bench.writeDetail(results, errors, "/root/testdata/sfparse", Seq("q_alpha"))
-    val p = java.nio.file.Paths.get("bench_detail_sfparse.json")
-    val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    java.nio.file.Files.delete(p)
-    val m = Bench.parseDetailQueries(text)
-    // exactly the queries block: the error entry is a string (not
-    // matched), and the top-level meta numbers (n_queries, total_sec,
-    // nerr) sit BEFORE the "queries" key so the scope cut drops them
-    assert(m === Map("q_alpha" -> 1.234, "q_beta" -> 0.056, "nerr_trap" -> 3.0))
-    // malformed / empty input degrades to empty, never throws
-    assert(Bench.parseDetailQueries("not json").isEmpty)
-    assert(Bench.parseDetailQueries("").isEmpty)
-  }
-
-  test("pickReruns targets committed-reference outliers, worst excess first (r13 item 1)") {
-    val committed = Map("q_a" -> 1.0, "q_b" -> 2.0, "q_c" -> 0.1, "q_d" -> 4.0, "q_s" -> 1.0)
-    val measured = Seq(
-      "q_a" -> 3.5,  // 3.5x, excess 2.5 → candidate
-      "q_b" -> 2.4,  // 1.2x → NOT a candidate (within noise)
-      "q_c" -> 0.2,  // 2x but excess 0.1 < 0.15 floor → not worth a rerun
-      "q_d" -> 9.0,  // 2.25x, excess 5.0 → worst offender, first
-      "q_s" -> 8.0,  // hot but excluded (persistent-scratch contract)
-      "q_new" -> 2.0) // absent from committed, slow → one damping pass
-    val picked = Bench.pickReruns(measured, committed, exclude = Set("q_s"))
-    assert(picked === Seq("q_d", "q_a", "q_new"))
-    // fast new ops (sub-second) are not re-timed
-    val picked2 = Bench.pickReruns(Seq("q_tiny" -> 0.4), committed, Set.empty)
-    assert(picked2.isEmpty)
-    // ADVICE r14: a new op ranks by t/2 (assumed half-time baseline),
-    // so a genuinely-new 5 s op no longer outranks an op inflated by
-    // 4 s and can't drain the capped budget ahead of real distortions
-    val mixed = Bench.pickReruns(
-      Seq("q_inflated" -> 5.0, "q_brandnew" -> 5.0),
-      Map("q_inflated" -> 1.0), Set.empty)
-    assert(mixed === Seq("q_inflated", "q_brandnew"),
-      "excess 4.0 must outrank a new op's assumed excess 2.5")
-    // no committed reference (fresh machine / new sf): legacy top-12
-    val many = (1 to 20).map(i => f"q$i%02d" -> i.toDouble)
-    val legacy = Bench.pickReruns(many, Map.empty, exclude = Set("q20"))
-    assert(legacy.size === 12 && legacy.head === "q19" && !legacy.contains("q20"))
-  }
-
   test("dampWithBudget hard-caps rerun wall, keeps mins, flags only successful reruns (r13 item 1)") {
-    val results = Seq("q_d" -> 9.0, "q_a" -> 3.5, "q_new" -> 2.0, "q_b" -> 2.4)
+    // unordered input; q_b FAILED its first pass
+    val results = Seq("q_a" -> 3.5, "q_new" -> 2.0, "q_b" -> 2.4, "q_d" -> 9.0)
+    val failed = Set("q_b")
     val rerunTimes = Map("q_d" -> 4.1, "q_a" -> 2.5, "q_new" -> 1.9)
     val ran = scala.collection.mutable.ListBuffer[String]()
-    val (damped, flagged) = Bench.dampWithBudget(results, Seq("q_d", "q_a", "q_new"), 60.0) { n =>
+    val (damped, flagged) = Bench.dampWithBudget(results, failed, 60.0) { n =>
       ran += n; (rerunTimes(n), n != "q_a") // q_a's rerun FAILS
     }
-    // estimates (first-pass): 9.0 + 3.5 + 2.0 all fit inside 60
+    // estimates (first-pass): 9.0 + 3.5 + 2.0 all fit inside 60, and
+    // the reruns go slowest first pass first whatever the input order
     assert(ran.toList === List("q_d", "q_a", "q_new"))
+    assert(!ran.contains("q_b"), "a failed query is never re-timed")
     val m = damped.toMap
+    assert(damped.map(_._1) === results.map(_._1), "results keep their input order")
     assert(m("q_d") === 4.1, "min of two runs recorded")
     assert(m("q_a") === 3.5, "failed rerun must NOT replace the first successful timing")
     assert(m("q_new") === 1.9)
@@ -251,7 +215,7 @@ class BenchLineSpec extends AnyFunSuite {
     // wall could exceed the 'hard cap' by one slow query), and the
     // scan continues so a cheaper later candidate uses the remainder
     val ran3 = scala.collection.mutable.ListBuffer[String]()
-    val (_, flagged3) = Bench.dampWithBudget(results, Seq("q_d", "q_a", "q_new"), 6.0) { n =>
+    val (_, flagged3) = Bench.dampWithBudget(results, failed, 6.0) { n =>
       ran3 += n; (rerunTimes(n), true)
     }
     assert(ran3.toList === List("q_a", "q_new"),
@@ -261,117 +225,10 @@ class BenchLineSpec extends AnyFunSuite {
     // an op whose single first pass exceeds the ENTIRE budget is never
     // re-timed, by design — it stays honestly hot in the line
     val ran4 = scala.collection.mutable.ListBuffer[String]()
-    Bench.dampWithBudget(Seq("q_huge" -> 99.0), Seq("q_huge"), 60.0) { n =>
+    Bench.dampWithBudget(Seq("q_huge" -> 99.0), Set.empty, 60.0) { n =>
       ran4 += n; (1.0, true)
     }
     assert(ran4.isEmpty)
-  }
-
-  test("mergeReference keeps per-op best-known-idle; confirmed regressions move it (r14 item 6)") {
-    val ref = Map("q_a" -> 2.0, "q_b" -> 3.0, "q_c" -> 1.0, "q_gone" -> 5.0)
-    val recorded = Seq(
-      "q_a" -> 1.5, // faster → new best-known-idle
-      "q_b" -> 9.0, // slower but NOT damped → ambient, reference holds
-      "q_c" -> 2.0, // slower AND min-of-two damped → two fresh
-                    // measurements agree: a confirmed change moves it
-      "q_new" -> 4.0) // new op enters at its recorded time
-    val merged = Bench.mergeReference(ref, recorded, damped = Set("q_c"))
-    assert(merged === Map("q_a" -> 1.5, "q_b" -> 3.0, "q_c" -> 2.0, "q_new" -> 4.0),
-      "and q_gone (absent from this run) must be dropped, not linger")
-    // a damped op INSIDE the 1.5x band keeps the min (both honest)
-    val m2 = Bench.mergeReference(Map("q_d" -> 2.0), Seq("q_d" -> 2.4), Set("q_d"))
-    assert(m2 === Map("q_d" -> 2.0))
-  }
-
-  test("mergeReference hot-run breaker: many simultaneous upward ratchets = ambient, suppressed (r18)") {
-    // MaxRefRatchets+1 unrelated ops all confirmed >1.5x ref through
-    // damping in ONE run — the hot-afternoon signature observed live
-    // in r18 (9 ops, +16 s of ref pollution on unchanged code). All
-    // upward moves must be suppressed; downward merges still apply.
-    val n = Bench.MaxRefRatchets + 1
-    val ref = (1 to n).map(i => s"q_$i" -> 1.0).toMap + ("q_fast" -> 2.0)
-    val recorded = (1 to n).map(i => s"q_$i" -> 2.0) :+ ("q_fast" -> 1.0)
-    val damped = (1 to n).map(i => s"q_$i").toSet
-    val merged = Bench.mergeReference(ref, recorded, damped)
-    assert((1 to n).forall(i => merged(s"q_$i") == 1.0),
-      s"hot run must not ratchet any ref upward: $merged")
-    assert(merged("q_fast") == 1.0, "downward min-merge must survive the breaker")
-    // at or below the cap the upward arm still works (a genuine
-    // localized regression must move its ref, r14 item 6 unchanged)
-    val refOk = (1 to Bench.MaxRefRatchets).map(i => s"r_$i" -> 1.0).toMap
-    val recOk = (1 to Bench.MaxRefRatchets).map(i => s"r_$i" -> 2.0)
-    val mOk = Bench.mergeReference(refOk, recOk, recOk.map(_._1).toSet)
-    assert((1 to Bench.MaxRefRatchets).forall(i => mOk(s"r_$i") == 2.0),
-      s"<=cap confirmed regressions must still move the ref: $mOk")
-  }
-
-  test("breaker escape: a genuine global regression ratchets after PendingUpRuns agreeing runs (r19, ADVICE r18)") {
-    // A code change slows MaxRefRatchets+2 ops >1.5x on EVERY run.
-    // Pre-escape this re-tripped the breaker forever; now the streak
-    // persists in pending_up and the PendingUpRuns-th consecutive
-    // qualifying run accepts the move despite the breaker.
-    val n = Bench.MaxRefRatchets + 2
-    val ref = (1 to n).map(i => s"q_$i" -> 1.0).toMap
-    val recorded = (1 to n).map(i => s"q_$i" -> 2.0)
-    val damped = recorded.map(_._1).toSet
-    var pending = Map.empty[String, Int]
-    for (run <- 1 until Bench.PendingUpRuns) {
-      val (m, p) = Bench.mergeReference(ref, recorded, damped, pending)
-      assert((1 to n).forall(i => m(s"q_$i") == 1.0),
-        s"run $run must still suppress: $m")
-      assert(p.values.forall(_ == run) && p.size == n,
-        s"run $run must persist streak=$run for every qualifying op: $p")
-      pending = p
-    }
-    val (mFinal, pFinal) = Bench.mergeReference(ref, recorded, damped, pending)
-    assert((1 to n).forall(i => mFinal(s"q_$i") == 2.0),
-      s"run ${Bench.PendingUpRuns} must accept the confirmed regression: $mFinal")
-    assert(pFinal.isEmpty, s"accepted ops must clear their streak: $pFinal")
-  }
-
-  test("breaker escape: a broken streak resets; ambient runs never accumulate to an accept") {
-    // n - 1 must still exceed the cap after one op calms down, or the
-    // remaining ops ratchet legitimately (no breaker) instead of
-    // continuing their streaks
-    val n = Bench.MaxRefRatchets + 2
-    val ref = (1 to n).map(i => s"q_$i" -> 1.0).toMap
-    val hot = (1 to n).map(i => s"q_$i" -> 2.0)
-    val damped = hot.map(_._1).toSet
-    val (_, p1) = Bench.mergeReference(ref, hot, damped, Map.empty)
-    assert(p1.size == n && p1.values.forall(_ == 1))
-    // next run is calm for q_1 (inside the band) — its streak must
-    // clear even though the other ops keep the breaker tripped
-    val mixed = ("q_1" -> 1.2) +: (2 to n).map(i => s"q_$i" -> 2.0)
-    val (m2, p2) = Bench.mergeReference(ref, mixed, damped, p1)
-    assert(!p2.contains("q_1"), s"q_1's streak must reset: $p2")
-    assert((2 to n).forall(i => p2(s"q_$i") == 2), s"others keep counting: $p2")
-    assert(m2("q_1") == 1.0, "q_1 keeps its idle ref")
-    // a calm run (no breaker) clears every streak
-    val calm = (1 to n).map(i => s"q_$i" -> 1.1)
-    val (_, p3) = Bench.mergeReference(ref, calm, Set.empty, p2)
-    assert(p3.isEmpty, s"a calm run must clear all streaks: $p3")
-  }
-
-  test("parsePendingUp: brace-bounded, never leaks queries entries; absent/malformed is empty") {
-    val json =
-      """{
-        |  "sf": "sf0.1",
-        |  "pending_up": {
-        |    "q_slow": 2,
-        |    "q_other": 1
-        |  },
-        |  "queries": {
-        |    "q_slow": 3.141,
-        |    "q_other": 1.0
-        |  }
-        |}
-        |""".stripMargin
-    assert(Bench.parsePendingUp(json) === Map("q_slow" -> 2, "q_other" -> 1))
-    assert(Bench.parseDetailQueries(json) === Map("q_slow" -> 3.141, "q_other" -> 1.0),
-      "queries parse must not see the pending block (it sits before the marker)")
-    assert(Bench.parsePendingUp("""{"queries": {"a": 1.0}}""") === Map.empty)
-    assert(Bench.parsePendingUp("not json") === Map.empty)
-    assert(Bench.parsePendingUp("""{"pending_up": {}}""") === Map.empty)
   }
 
   test("damped flag caps at 15 names + count so a loaded run can't crowd the line (r13 item 1)") {
@@ -413,23 +270,6 @@ class BenchLineSpec extends AnyFunSuite {
     assert(SparkEntry.namedModules.map(_._1).distinct.size === SparkEntry.namedModules.size)
   }
 
-  test("the committed bench detail is a usable damping reference") {
-    // since r14 the committed bench_detail_sf0.1.json is load-bearing:
-    // Bench's damping reads it to pick re-time candidates. A corrupt or
-    // subset-overwritten file would silently disable (or misdirect)
-    // damping — assert it parses and substantially matches the registry.
-    val p = java.nio.file.Paths.get("bench_detail_sf0.1.json")
-    assert(java.nio.file.Files.exists(p), "committed damping reference missing")
-    val m = Bench.parseDetailQueries(
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    val reg = SparkEntry.queries.keySet
-    val overlap = m.keySet.intersect(reg).size.toDouble
-    assert(m.nonEmpty && overlap / reg.size >= 0.9,
-      s"detail covers only ${overlap.toInt}/${reg.size} registry ops — " +
-        "was it overwritten by a subset run?")
-    assert(m.values.forall(v => v >= 0 && v < 3600), "nonsense seconds in detail")
-  }
-
   test("resolveModuleFilter: valid selectors union, unknown/empty fail loudly (r13 item 4)") {
     val mods: Seq[(String, Map[String, Int])] =
       Seq("alpha" -> Map("a1" -> 1, "a2" -> 2), "beta" -> Map("b1" -> 3))
@@ -444,5 +284,18 @@ class BenchLineSpec extends AnyFunSuite {
     SparkEntry.namedModules.foreach { case (n, qs) =>
       assert(Bench.resolveModuleFilter(n, SparkEntry.namedModules) === Right(qs.keySet))
     }
+  }
+
+  test("resolveNames: a misspelt or empty query selector fails loudly, naming the unknown entries") {
+    // SPARK_GRAFT_ONLY and Verify's trailing names: a typo used to
+    // filter the registry to nothing — "value":0,"nerr":0, or an
+    // empty dump
+    val known = SparkEntry.queries.keySet
+    assert(Bench.resolveNames("query", Seq("wordcount", " q1 "), known) ===
+      Right(Set("wordcount", "q1")))
+    val bad = Bench.resolveNames("query", Seq("wordcount", "no_such_op", "q_typo"), known)
+    assert(bad === Left("unknown query(s): no_such_op,q_typo"))
+    assert(Bench.resolveNames("query", "".split(',').toSeq, known) ===
+      Left("empty query selector"))
   }
 }

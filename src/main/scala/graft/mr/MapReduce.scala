@@ -4,6 +4,8 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
+import graft.functions.TextFunctions
+
 /** The `key\tvalue` wire codec of the reference platform.
   *
   * Contract (reference `cpp/worker/src/mapreduce/mapper.cc:87–90` and
@@ -96,14 +98,10 @@ object MapReduceJob {
 
   /** The reference's example map UDF (`cpp/worker/map.cc:12–21`):
     * lowercase, non-alphanumeric → space, whitespace-split, emit
-    * `(word, "1")`. */
+    * `(word, "1")` — the [[graft.functions.Tokenize]] kernel, so the
+    * MapReduce and declarative wordcounts share one tokenizer. */
   val tokenizeMap: String => Iterator[(String, String)] =
-    line =>
-      line.toLowerCase(java.util.Locale.ROOT)
-        .map(c => if (c.isLetterOrDigit && c < 128) c else ' ')
-        .split("\\s+").iterator
-        .filter(_.nonEmpty)
-        .map(w => (w, "1"))
+    line => TextFunctions.tokenize(line).iterator.map(w => (w, "1"))
 
   /** Literal binary-contract variant of the reference job: pipes text
     * lines through external commands over stdin/stdout, exactly the

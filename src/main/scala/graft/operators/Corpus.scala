@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedDataset
+import graft.functions.TextFunctions
 import graft.sources.Tables
 
 /** Training-corpus assembly operators — the steps between "cleaned
@@ -586,8 +587,7 @@ object Corpus {
   def epochPlan(spark: SparkSession, dir: String): DataFrame = {
     val per = Tables.documents(spark, dir)
       .select(col("source"),
-        size(filter(split(lower(regexp_replace(col("text"), "[^a-zA-Z0-9]+", " ")), " "),
-          t => length(t) > 0)).cast("long").as("n_toks"))
+        size(TextAnalysis.toksOf(col("text"))).cast("long").as("n_toks"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
       .persistScoped()
@@ -626,8 +626,7 @@ object Corpus {
     val d = Tables.documents(spark, dir)
     val base = d.agg(
       count(lit(1)).as("n_docs"),
-      sum(size(filter(split(lower(regexp_replace(col("text"), "[^a-zA-Z0-9]+", " ")), " "),
-        t => length(t) > 0)).cast("long")).as("n_tokens"),
+      sum(size(TextAnalysis.toksOf(col("text"))).cast("long")).as("n_tokens"),
       countDistinct(col("lang")).as("n_langs"),
       countDistinct(col("source")).as("n_sources"))
     val dups = d.groupBy(md5(col("text").cast("binary")).as("h"))
@@ -763,13 +762,12 @@ object Corpus {
     * per-doc WindowGroupLimit rank — the shuffle never carries text,
     * and N rides a scalar subquery. */
   def tfidfTopk(spark: SparkSession, dir: String): DataFrame = {
+    TextFunctions.registerSql(spark)
     SqlViews.withViews(spark, "documents" -> Tables.documents(spark, dir))(
       s"""WITH toks AS (
          |  SELECT doc_id, tok
          |  FROM documents
-         |  LATERAL VIEW explode(filter(
-         |    split(lower(regexp_replace(text, '[^a-zA-Z0-9]+', ' ')), ' '),
-         |    t -> length(t) > 0)) AS tok),
+         |  LATERAL VIEW explode(tokenize(text)) AS tok),
          |tc AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
          |dfreq AS (SELECT tok, count(*) AS df FROM tc GROUP BY 1),
          |scored AS (
@@ -843,15 +841,15 @@ object Corpus {
     * top-k is a WindowGroupLimit. The query-term filter lands
     * directly on the token stream, so the scored relation is
     * |terms| × matching docs, not the full posting list. */
-  def bm25Topk(spark: SparkSession, dir: String): DataFrame =
+  def bm25Topk(spark: SparkSession, dir: String): DataFrame = {
+    TextFunctions.registerSql(spark)
     SqlViews.withViews(spark, "documents" -> Tables.documents(spark, dir))(
       s"""WITH toks AS (
          |  SELECT doc_id, tok
          |  FROM documents
-         |  LATERAL VIEW explode(filter(
-         |    split(lower(regexp_replace(text, '[^a-zA-Z0-9]+', ' ')), ' '),
-         |    t -> length(t) > 0)) AS tok),
+         |  LATERAL VIEW explode(tokenize(text)) AS tok),
          |$bm25TailSql""".stripMargin)
+  }
 
   /** The full C4-style cleaning decision, end to end: one row per
     * document with the keep/drop verdict a corpus run would act on and
@@ -1207,15 +1205,11 @@ object Corpus {
          |FROM c""".stripMargin,
     "contamination" ->
       s"""WITH toks AS (
-         |  SELECT doc_id,
-         |         unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS w,
-         |         unnest(range(1, len(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))+1)) AS pos
-         |  FROM documents),
-         |tok2 AS (SELECT * FROM toks WHERE w <> ''),
+         |  ${TextAnalysis.PosToksSql}),
          |tri AS (
          |  SELECT doc_id, w || ' ' || lead(w,1) OVER win || ' ' || lead(w,2) OVER win AS shingle,
          |         lead(w,2) OVER win AS w2
-         |  FROM tok2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+         |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
          |sh AS (SELECT DISTINCT doc_id, shingle FROM tri WHERE w2 IS NOT NULL),
          |lab AS (
          |  SELECT doc_id,

@@ -34,33 +34,12 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  /** Distinct k-word shingles of the reference-tokenized text.
-    * Empty array when the document has fewer than k tokens.
-    *
-    * NOTE: Column-expression variant kept for composability, but the
-    * higher-order-function chain (transform+slice+concat_ws) is not
-    * codegen'd and measured ~12× slower than the typed flatMap in
-    * [[docShingles]] — use that on hot paths. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = filter(
-      split(lower(regexp_replace(text, "[^a-zA-Z0-9]+", " ")), " "),
-      t => length(t) > 0)
-    when(size(toks) >= k,
-      array_distinct(transform(
-        sequence(lit(0), size(toks) - k),
-        i => concat_ws(" ", slice(toks, i + 1, lit(k))))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** (doc_id, span) rows — one per distinct k-word window per
     * document; documents with fewer than k tokens emit nothing.
-    * Typed flatMap: tokenize rule identical to the oracle SQL (lower,
-    * then split on non-alnum runs, drop empties). `Locale.ROOT`
-    * lowercasing: the default-locale overload would tokenize
-    * differently on e.g. a Turkish-locale JVM ("I" → dotless ı, a
-    * separator under [^a-z0-9]) and diverge from the
-    * locale-independent DuckDB lower() — and heterogeneous executor
-    * locales could even disagree with each other. */
+    * Typed flatMap over [[TextAnalysis.tokenize]], the Tokenize
+    * kernel: the oracle SQL's rule (lower, then split on non-alnum
+    * runs, drop empties), lowered per code point and so independent
+    * of the executors' default locale. */
   private[operators] def docSpansOf(docs: DataFrame, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -450,9 +429,7 @@ object Dedup {
     * is why both operators exist. */
   private def tokenWeights(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        explode(split(lower(regexp_replace(col("text"), "[^a-zA-Z0-9]+", " ")), " ")).as("tok"))
-      .filter(length(col("tok")) > 0)
+      .select(col("doc_id"), explode(TextAnalysis.toksOf(col("text"))).as("tok"))
       .groupBy("doc_id", "tok")
       .agg(count(lit(1)).as("w"))
 
@@ -1099,7 +1076,12 @@ object Dedup {
   /** Normalized fixed-width fuzzy key: tokenizer-style ASCII fold,
     * first [[FuzzyPrefixLen]] chars, '#'-padded to exactly that
     * width — fixed width makes the pigeonhole segment boundaries
-    * position-stable so the filter needs no per-length grouping. */
+    * position-stable so the filter needs no per-length grouping.
+    * Not a tokenizer, so it keeps its own regex rather than
+    * [[graft.functions.Tokenize]]: the key is a character string that
+    * keeps the separating spaces (leading and trailing ones included)
+    * and the edit distance counts them, where a token array would
+    * drop them. */
   private[operators] def fuzzyKey(c: Column): Column =
     rpad(substring(lower(regexp_replace(c, "[^a-zA-Z0-9]+", " ")), 1, FuzzyPrefixLen),
       FuzzyPrefixLen, "#")
@@ -1515,16 +1497,12 @@ object Dedup {
 
   /** Shared DuckDB shingle pipeline (window-based trigram build). */
   private val ShinglesCte =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS w,
-      |         unnest(range(1, len(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))+1)) AS pos
-      |  FROM documents),
-      |tok2 AS (SELECT * FROM toks WHERE w <> ''),
+    s"""WITH toks AS (
+      |  ${TextAnalysis.PosToksSql}),
       |tri AS (
       |  SELECT doc_id, w || ' ' || lead(w,1) OVER win || ' ' || lead(w,2) OVER win AS shingle,
       |         lead(w,2) OVER win AS w2
-      |  FROM tok2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+      |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
       |sh AS (SELECT DISTINCT doc_id, shingle FROM tri WHERE w2 IS NOT NULL),
       |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
       |pairs AS (
@@ -1574,18 +1552,14 @@ object Dedup {
   /** Full replay of [[dedupSubstring]]: 5-gram spans via lead windows,
     * per-doc distinct spans, cross-doc shared set, per-doc counts. */
   private val SubstringSql =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS w,
-      |         unnest(range(1, len(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))+1)) AS pos
-      |  FROM documents),
-      |tok2 AS (SELECT * FROM toks WHERE w <> ''),
+    s"""WITH toks AS (
+      |  ${TextAnalysis.PosToksSql}),
       |g AS (
       |  SELECT doc_id,
       |    w || ' ' || lead(w,1) OVER win || ' ' || lead(w,2) OVER win
       |      || ' ' || lead(w,3) OVER win || ' ' || lead(w,4) OVER win AS span,
       |    lead(w,4) OVER win AS w4
-      |  FROM tok2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+      |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
       |sp AS (SELECT DISTINCT doc_id, span FROM g WHERE w4 IS NOT NULL),
       |shared AS (SELECT span FROM sp GROUP BY span HAVING count(*) >= 2),
       |tot AS (SELECT doc_id, count(*) AS n_spans FROM sp GROUP BY 1),
@@ -1789,11 +1763,8 @@ object Dedup {
     // candidate join → chunk-wise hamming. Engine-agnostic because
     // every intermediate is integral.
     "dedup_simhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS tok
-        |  FROM documents),
-        |tw AS (SELECT doc_id, tok, count(*) AS w FROM toks WHERE tok <> '' GROUP BY 1, 2),
+      s"""WITH toks AS (SELECT doc_id, unnest(${TextAnalysis.ToksSql}) AS tok FROM documents),
+        |tw AS (SELECT doc_id, tok, count(*) AS w FROM toks GROUP BY 1, 2),
         |th AS (
         |  SELECT doc_id, w,
         |    CAST('0x' || substring(md5(tok), 1, 8) AS BIGINT) AS hi,

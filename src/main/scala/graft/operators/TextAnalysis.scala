@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedDataset
+import graft.functions.TextFunctions
 import graft.sources.Tables
 
 /** Text-analysis operators over `documents` (north-star ops; absent
@@ -21,33 +22,30 @@ object TextAnalysis {
   private[operators] val Stopwords =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "on", "for", "with", "as", "at", "by", "from")
 
-  /** THE Scala-side tokenizer: lowercase (Locale.ROOT), split on
-    * non-[a-z0-9] runs, drop empties — ONE definition for every typed
-    * call site (ADVICE r8: this loop was inlined six times across
-    * TextAnalysis/Corpus/Dedup, and call-site drift would silently
-    * disagree on n_tokens). Locale.ROOT keeps executors with
-    * heterogeneous default locales bit-identical (the docSpansOf
-    * Turkish-İ lesson). */
+  /** THE Scala-side tokenizer for typed call sites: the
+    * [[graft.functions.Tokenize]] kernel on a JVM string — same rule,
+    * same code as [[toksOf]] and every DuckDB oracle ([[ToksSql]]), so
+    * typed and Column sites cannot disagree on n_tokens. */
   private[graft] def tokenize(text: String): Array[String] =
-    text.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+").filter(_.nonEmpty)
+    TextFunctions.tokenize(text)
 
-  /** Reference tokenization as a Column expression — shared by the
-    * quality/language operators AND corpus_clean's fused scan, so all
-    * consumers stay in lockstep with the oracle regex.
-    *
-    * Edge-case note vs [[tokenize]] (documented per ADVICE r8): this
-    * form strips non-alnum BEFORE lowercasing, the typed form
-    * lowercases first — the two differ only on codepoints whose
-    * LOWERCASE is ASCII alnum while the original is not (U+212A
-    * KELVIN SIGN → k, U+0130 İ → i): there `tokenize` keeps the
-    * lowered char inside a token, `toksOf` treats the original as a
-    * separator. No such codepoint appears in any fixture (the
-    * oracles' regexes replay each operator's own rule, so both gates
-    * stay hash-exact); a unicode-heavy corpus should pick one rule
-    * and use its matching oracle regex. */
+  /** Reference tokenization as a Column expression, `array<string>` —
+    * shared by the quality/language operators AND corpus_clean's fused
+    * scan, so all consumers stay in lockstep with the oracles'
+    * [[ToksSql]]. */
   private[operators] def toksOf(text: Column): Column =
-    filter(split(lower(regexp_replace(text, "[^a-zA-Z0-9]+", " ")), " "),
-      t => length(t) > 0)
+    TextFunctions.tokenize(text)
+
+  /** The DuckDB form of the same rule over a `text` column: the one
+    * tokenizer fragment every oracle interpolates. */
+  private[operators] val ToksSql =
+    "list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '), t -> t <> '')"
+
+  /** [[ToksSql]] unnested to (doc_id, w, pos) rows, `pos` the token's
+    * 1-based position in its document — the input of the oracles'
+    * lead-window n-gram builds. */
+  private[operators] val PosToksSql =
+    s"SELECT doc_id, unnest(toks) AS w, unnest(range(1, len(toks) + 1)) AS pos FROM (SELECT doc_id, $ToksSql AS toks FROM documents) d"
 
   /** Stopword-hit ratio over a tokenized column. */
   private[operators] def stopRatioOf(toks: Column): Column =
@@ -267,8 +265,7 @@ object TextAnalysis {
     * per doc AND interpreted). Zero-token docs are absent by
     * construction on both engines. */
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(regexp_replace(col("text"), "[^a-zA-Z0-9]+", " ")), " "),
-      t => length(t) > 0)
+    val toks = toksOf(col("text"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), explode(toks).as("tok"))
       .groupBy("doc_id", "tok")
@@ -400,16 +397,12 @@ object TextAnalysis {
   /** The DuckDB trigram pipeline (the Dedup ShinglesCte window build,
     * re-stated here up to `sh`) + first-occurrence novelty. */
   private def shingleNoveltySql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS w,
-      |         unnest(range(1, len(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))+1)) AS pos
-      |  FROM documents),
-      |tok2 AS (SELECT * FROM toks WHERE w <> ''),
+    s"""WITH toks AS (
+      |  $PosToksSql),
       |tri AS (
       |  SELECT doc_id, w || ' ' || lead(w,1) OVER win || ' ' || lead(w,2) OVER win AS shingle,
       |         lead(w,2) OVER win AS w2
-      |  FROM tok2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+      |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
       |sh AS (SELECT DISTINCT doc_id, shingle FROM tri WHERE w2 IS NOT NULL),
       |f AS (SELECT shingle, min(doc_id) AS first_doc FROM sh GROUP BY 1)
       |SELECT doc_id, count(*) AS n_shingles,
@@ -434,8 +427,7 @@ object TextAnalysis {
     * ≤ 10-row metadata. n_docs is one scalar (the pagerank-N rule). */
   def vocabGrowth(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val toks = filter(split(lower(regexp_replace(col("text"), "[^a-zA-Z0-9]+", " ")), " "),
-      t => length(t) > 0)
+    val toks = toksOf(col("text"))
     val docs = Tables.documents(spark, dir)
     val nDocs = docs.count()
     // least(9, ·): the quotient reaches 10+ when doc_ids are sparse or
@@ -468,10 +460,7 @@ object TextAnalysis {
   }
 
   private def vocabGrowthSql: String =
-    """WITH d AS (
-      |  SELECT doc_id,
-      |    unnest(list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '), t -> t <> '')) AS tok
-      |  FROM documents),
+    s"""WITH d AS (SELECT doc_id, unnest($ToksSql) AS tok FROM documents),
       |n AS (SELECT count(*) AS n FROM documents),
       |t AS (SELECT least(9, (doc_id * 10) // (SELECT n FROM n)) AS bucket, doc_id, tok FROM d),
       |occ AS (SELECT bucket, count(*) AS n_tokens FROM t GROUP BY 1),
@@ -490,8 +479,7 @@ object TextAnalysis {
     * rank-limit pushdown (TakeOrderedAndProject); the shuffle carries
     * (token, partial tf, partial df) — never positions or text. */
   def vocabTopk(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(regexp_replace(col("text"), "[^a-zA-Z0-9]+", " ")), " "),
-      t => length(t) > 0)
+    val toks = toksOf(col("text"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), explode(toks).as("tok"))
       .groupBy("tok")
@@ -519,9 +507,7 @@ object TextAnalysis {
     * Document-frequency semantics: tokens count once per doc
     * (array_distinct before the explode). */
   def cooccurLift(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(
-      split(lower(regexp_replace(col("text"), "[^a-zA-Z0-9]+", " ")), " "),
-      t => length(t) > 0)
+    val toks = toksOf(col("text"))
     val docTok = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(array_distinct(toks)).as("tok"))
     val vocab = docTok.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -1277,8 +1263,7 @@ object TextAnalysis {
     val t = lower(col("text"))
     def runs(c: Column, pat: String): Column =
       length(regexp_replace(regexp_replace(c, pat, "\u0001"), "[^\u0001]", ""))
-    val words = size(filter(
-      split(t, "[^a-z0-9]+"), x => length(x) > 0)).cast("long")
+    val words = size(toksOf(col("text"))).cast("long")
     val sents = greatest(runs(col("text"), "[.!?]+"), lit(1)).cast("long")
     val vgrps = runs(t, "[aeiou]+").cast("long")
     Tables.documents(spark, dir)
@@ -1293,10 +1278,9 @@ object TextAnalysis {
   }
 
   private def readabilitySql: String =
-    """WITH p AS (
+    s"""WITH p AS (
       |  SELECT source,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-      |      x -> len(x) > 0)) AS BIGINT) AS w,
+      |    CAST(len($ToksSql) AS BIGINT) AS w,
       |    CAST(greatest(len(regexp_replace(regexp_replace(text, '[.!?]+', chr(1), 'g'),
       |      concat('[^', chr(1), ']'), '', 'g')), 1) AS BIGINT) AS s,
       |    CAST(len(regexp_replace(regexp_replace(lower(text), '[aeiou]+', chr(1), 'g'),
@@ -1658,11 +1642,7 @@ object TextAnalysis {
       val list = ws.map(w => s"'$w'").mkString(", ")
       s"SELECT doc_id, '$l' AS lg, CAST(len(list_filter(toks, t -> t IN ($list))) AS BIGINT) AS s FROM toks"
     }.mkString("\n  UNION ALL ")
-    s"""WITH toks AS (
-       |  SELECT doc_id,
-       |    list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-       |      t -> t <> '') AS toks
-       |  FROM documents),
+    s"""WITH toks AS (SELECT doc_id, $ToksSql AS toks FROM documents),
        |scores AS (
        |  $scoreSelects),
        |r AS (
@@ -1739,14 +1719,11 @@ object TextAnalysis {
   private def keywordRakeSql: String = {
     val stops = Stopwords.map(s => s"'$s'").mkString(", ")
     s"""WITH toks AS (
-       |  SELECT doc_id,
-       |         unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS w,
-       |         unnest(range(1, len(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))+1)) AS pos
-       |  FROM documents),
+       |  $PosToksSql),
        |t2 AS (
        |  SELECT doc_id, w, pos,
        |    CASE WHEN w IN ($stops) THEN 1 ELSE 0 END AS stop
-       |  FROM toks WHERE w <> ''),
+       |  FROM toks),
        |m0 AS (
        |  SELECT doc_id, w, pos, stop,
        |    sum(stop) OVER (PARTITION BY doc_id ORDER BY pos ASC
@@ -1818,9 +1795,6 @@ object TextAnalysis {
     "char_profile"    -> charProfile,
     "gopher_quality"  -> gopherQuality,
     "blocklist_filter" -> blocklistFilter)
-
-  private[operators] val ToksSql =
-    "list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '), t -> t <> '')"
 
   private[operators] def markerSql(ws: Seq[String]): String =
     s"len(list_filter($ToksSql, t -> t IN (${ws.map(w => s"'$w'").mkString(",")})))"
@@ -2017,13 +1991,10 @@ object TextAnalysis {
     * `chunk_overhead` oracles (the ClusterCtes rule — a rollup must
     * not be able to drift from its source relation). */
   private val DocChunksSql: String =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |         unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS w,
-      |         unnest(range(1, len(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))+1)) AS pos
-      |  FROM documents),
+    s"""WITH toks AS (
+      |  $PosToksSql),
       |tok2 AS (SELECT doc_id, w, row_number() OVER (PARTITION BY doc_id ORDER BY pos) - 1 AS p
-      |         FROM toks WHERE w <> ''),
+      |         FROM toks),
       |n AS (SELECT doc_id, count(*) AS n_tok FROM tok2 GROUP BY 1),
       |ch AS (SELECT doc_id, unnest(range(greatest((n_tok - 64 + 47) // 48, 0) + 1)) AS i FROM n)
       |SELECT t.doc_id, CAST(c.i AS BIGINT) AS chunk_idx,
@@ -2178,16 +2149,12 @@ object TextAnalysis {
         |  CAST(len(list_distinct(regexp_extract_all(text, '\w+|[^\w\s]'))) AS BIGINT) AS n_distinct_bpe
         |FROM documents""".stripMargin,
     "doc_fingerprint" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |         unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS w,
-        |         unnest(range(1, len(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '))+1)) AS pos
-        |  FROM documents),
-        |tok2 AS (SELECT * FROM toks WHERE w <> ''),
+      s"""WITH toks AS (
+        |  $PosToksSql),
         |tri AS (
         |  SELECT doc_id, w || ' ' || lead(w,1) OVER win || ' ' || lead(w,2) OVER win AS shingle,
         |         lead(w,2) OVER win AS w2
-        |  FROM tok2 WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+        |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
         |sh AS (SELECT DISTINCT doc_id, md5(shingle) AS h FROM tri WHERE w2 IS NOT NULL),
         |rk AS (SELECT doc_id, h, row_number() OVER (PARTITION BY doc_id ORDER BY h) AS rn FROM sh)
         |SELECT doc_id, string_agg(h, '|' ORDER BY h) AS fingerprint

@@ -3,18 +3,21 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions
 import graft.sources.Tables
 
 /** Wordcount — the reference's one golden-verified query — plus the
   * tokenize surface it is built from.
   *
-  * Tokenize rule is exactly the reference map UDF
-  * (`cpp/worker/map.cc:12–21`): lowercase, `[^a-zA-Z0-9]` → space,
-  * whitespace split, drop empty tokens.  Sum rule is the reference
-  * reduce UDF (`cpp/worker/reduce.cc:10–23`).  Expressed declaratively
-  * the whole reference dataflow (scan → flatMap → hash-shuffle →
-  * reduce, SURVEY.md §3.1) collapses to
-  * scan → project → Generate(explode) → partial HashAggregate →
+  * Tokenize rule is the reference map UDF (`cpp/worker/map.cc:12–21`):
+  * lowercase, split on runs outside `[a-z0-9]`, drop empty tokens — the
+  * codegen'd [[graft.functions.Tokenize]] expression, the one tokenizer
+  * every Spark-side site and every DuckDB oracle ([[TextAnalysis.ToksSql]])
+  * share.  Sum rule is the reference reduce UDF
+  * (`cpp/worker/reduce.cc:10–23`).  Expressed declaratively the whole
+  * reference dataflow (scan → flatMap → hash-shuffle → reduce,
+  * SURVEY.md §3.1) collapses to
+  * scan → project(tokenize) → Generate(explode) → partial HashAggregate →
   * shuffle → final HashAggregate.  Catalyst's map-side partial
   * aggregation is the combiner the reference lacks (SURVEY.md §4) —
   * at 100 TB it is the difference between shuffling every `(word, 1)`
@@ -24,7 +27,7 @@ object TextOps {
 
   /** `text` column → one row per token, column name `word`. */
   def tokenize(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    explode(split(lower(regexp_replace(text, "[^a-zA-Z0-9]+", " ")), " "))
+    explode(TextFunctions.tokenize(text))
 
   /** The reference's golden query, declarative form: tokenize +
     * groupBy(word).count() — partial+final combine does the
@@ -32,7 +35,6 @@ object TextOps {
   def wordcount(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(tokenize(col("text")).as("word"))
-      .filter(length(col("word")) > 0)
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
@@ -41,7 +43,6 @@ object TextOps {
   def tokenStats(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), tokenize(col("text")).as("word"))
-      .filter(length(col("word")) > 0)
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_tokens"),
@@ -53,18 +54,16 @@ object TextOps {
     "wordcount"   -> wordcount,
     "token_stats" -> tokenStats)
 
+  private val ToksSql = TextAnalysis.ToksSql
+
   val oracles: Map[String, String] = Map(
     "wordcount" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS word
-        |      FROM documents) t
-        |WHERE word <> ''
+      s"""SELECT word, count(*) AS cnt
+        |FROM (SELECT unnest($ToksSql) AS word FROM documents) t
         |GROUP BY word""".stripMargin,
     "token_stats" ->
-      """SELECT doc_id, count(*) AS n_tokens, count(DISTINCT word) AS n_distinct,
+      s"""SELECT doc_id, count(*) AS n_tokens, count(DISTINCT word) AS n_distinct,
         |       CAST(sum(length(word)) AS BIGINT) AS sum_len, CAST(max(length(word)) AS BIGINT) AS max_len
-        |FROM (SELECT doc_id, unnest(string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' ')) AS word
-        |      FROM documents) t
-        |WHERE word <> ''
+        |FROM (SELECT doc_id, unnest($ToksSql) AS word FROM documents) t
         |GROUP BY doc_id""".stripMargin)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSimilarity, DotProduct}
+import graft.functions.{CosineSimilarity, DotProduct, Tokenize}
 
 /** SparkSessionExtensions registering the engine's custom Catalyst
   * expressions as SQL functions, so `spark.sql("... cosine_sim(a,b)
@@ -20,9 +20,9 @@ import graft.functions.{CosineSimilarity, DotProduct}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
+  private def info(cls: Class[_], name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(
-      classOf[CosineSimilarity].getName, null, name, usage,
+      cls.getName, null, name, usage,
       /* arguments */ "", /* examples */ "", /* note */ "",
       /* group */ "misc_funcs", /* since */ "1.0.0", /* deprecated */ "",
       /* source */ "built-in")
@@ -30,11 +30,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
       FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float arrays"),
+      info(classOf[CosineSimilarity], "cosine_sim", "cosine_sim(a, b) - cosine similarity of two float arrays"),
       (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
     e.injectFunction((
       FunctionIdentifier("dot_product"),
-      info("dot_product", "dot_product(a, b) - dot product of two float arrays"),
+      info(classOf[DotProduct], "dot_product", "dot_product(a, b) - dot product of two float arrays"),
       (args: Seq[Expression]) => DotProduct(args(0), args(1))))
+    e.injectFunction((
+      FunctionIdentifier("tokenize"),
+      info(classOf[Tokenize], "tokenize", "tokenize(text) - lowercased [a-z0-9] runs of a string, as array<string>"),
+      (args: Seq[Expression]) => Tokenize(args(0))))
   }
 }

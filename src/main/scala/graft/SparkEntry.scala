@@ -20,25 +20,35 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TextOps.wordcount(spark, "/root/testdata/sf0.001")
 
-  /** Module name → its registry slice, for Bench's per-module subset
-    * path (SPARK_GRAFT_MODULE / -DbenchModule — VERDICT r13 item 4). */
+  private type Builder = (SparkSession, String) => DataFrame
+
+  /** Every registry module once: (name, queries, oracles). The
+    * name selects it in Bench's per-module subset path
+    * (SPARK_GRAFT_MODULE / -DbenchModule — VERDICT r13 item 4). */
+  private val registry: Seq[(String, Map[String, Builder], Map[String, String])] = Seq(
+    ("textops", TextOps.queries, TextOps.oracles),
+    ("mrops", MrOps.queries, MrOps.oracles),
+    ("relational", Relational.queries, Relational.oracles),
+    ("asofjoin", AsOfJoin.queries, AsOfJoin.oracles),
+    ("reshape", Reshape.queries, Reshape.oracles),
+    ("dedup", Dedup.queries, Dedup.oracles),
+    ("similarity", Similarity.queries, Similarity.oracles),
+    ("textanalysis", TextAnalysis.queries, TextAnalysis.oracles),
+    ("multimodal", Multimodal.queries, Multimodal.oracles),
+    ("streamops", StreamOps.queries, StreamOps.oracles),
+    ("corpus", Corpus.queries, Corpus.oracles),
+    ("graph", Graph.queries, Graph.oracles),
+    ("dataquality", DataQuality.queries, DataQuality.oracles))
+
+  /** Module name → its registry slice. */
   private[graft] val namedModules: Seq[(String, Map[String, (SparkSession, String) => DataFrame])] =
-    Seq("textops" -> TextOps.queries, "mrops" -> MrOps.queries,
-      "relational" -> Relational.queries, "asofjoin" -> AsOfJoin.queries,
-      "reshape" -> Reshape.queries, "dedup" -> Dedup.queries,
-      "similarity" -> Similarity.queries, "textanalysis" -> TextAnalysis.queries,
-      "multimodal" -> Multimodal.queries, "streamops" -> StreamOps.queries,
-      "corpus" -> Corpus.queries, "graph" -> Graph.queries,
-      "dataquality" -> DataQuality.queries)
+    registry.map { case (name, qs, _) => name -> qs }
 
   private[graft] val modules: Seq[Map[String, (SparkSession, String) => DataFrame]] =
     namedModules.map(_._2)
 
   private[graft] val oracleModules: Seq[Map[String, String]] =
-    Seq(TextOps.oracles, MrOps.oracles, Relational.oracles, AsOfJoin.oracles,
-      Reshape.oracles, Dedup.oracles, Similarity.oracles, TextAnalysis.oracles,
-      Multimodal.oracles, StreamOps.oracles, Corpus.oracles, Graph.oracles,
-      DataQuality.oracles)
+    registry.map(_._3)
 
   /** Operator names registered by MORE than one module — the names
     * `modules.reduce(_ ++ _)` would silently shadow (last module

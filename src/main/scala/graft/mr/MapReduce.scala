@@ -32,14 +32,15 @@ object TabCodec {
   * shuffle gives the identical guarantee the reference relies on
   * (equal keys co-located, no ordering), plus what it lacks: spill to
   * disk instead of in-memory partition buffers, and map-side combine
-  * when the reduce is algebraic (use [[MapReduceJob.runAggregated]]).
+  * when the reduce is algebraic (write it declaratively, as
+  * [[graft.operators.TextOps.wordcount]] does).
   *
   * Scale notes (100 TB): `run` shuffles every mapped pair — exactly
-  * the reference's behavior. For algebraic reducers prefer
-  * `runAggregated`, which expresses the reduce as a DataFrame
-  * aggregation so Catalyst inserts a partial aggregate before the
-  * shuffle; on wordcount-like workloads that shrinks shuffle bytes by
-  * orders of magnitude. R maps to `spark.sql.shuffle.partitions`, not
+  * the reference's behavior. For algebraic reducers prefer the
+  * declarative form (`TextOps.wordcount`: a DataFrame `groupBy().agg`)
+  * so Catalyst inserts a partial aggregate before the shuffle; on
+  * wordcount-like workloads that shrinks shuffle bytes by orders of
+  * magnitude. R maps to `spark.sql.shuffle.partitions`, not
   * a hard-coded reducer count.
   */
 final case class MapReduceJob(

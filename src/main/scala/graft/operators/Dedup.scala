@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedDataset
 import graft.StateMode
-import graft.functions.VectorFunctions.{cosine_sim, xxhash64Seeded}
+import graft.functions.VectorFunctions.cosine_sim
 import graft.sources.Tables
 
 /** Deduplication suite over the `documents` / `embeddings` fixtures —
@@ -21,10 +21,9 @@ import graft.sources.Tables
   *    aggregate), 16 bands × 4 rows — the 100 TB path: the only
   *    persisted state is the 520 B/doc sketch; candidates verify
   *    exactly against re-derived shingles of candidate docs only.
-  *  - simhash: 64-bit weighted token fingerprint + 4×16-bit pigeonhole
-  *    banding for hamming ≤ 3; registered md5 variant is replayed
-  *    end-to-end by the DuckDB oracle, XxHash64 variant is the perf
-  *    path.
+  *  - simhash: 64-bit weighted token fingerprint (md5-derived token
+  *    hashes) + 4×16-bit pigeonhole banding for hamming ≤ 3, replayed
+  *    end-to-end by the DuckDB oracle.
   *  - embedding-cosine: sign-LSH bucketed candidates (32×4, measured
   *    recall 1.0 on the fixture) + exact codegen'd cosine verify; the
   *    all-pairs form survives as spec-side ground truth only.
@@ -312,10 +311,6 @@ object Dedup {
         graft.functions.MinhashSigAgg.minhash_sig(col("h0"), SeedBase, NumPerms).as("sig"),
         count(lit(1)).as("n"))
 
-  /** Signature-only view (compat + tests). */
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    minhashSketch(spark, dir).select(col("doc_id"), col("sig"))
-
   /** (doc_id, band_idx, band_key) LSH banding of a sketch — shared by
     * the self-join ([[dedupMinhash]]) and two-sided
     * ([[dedupIncremental]]) paths. Band keys are codegen'd multi-arg
@@ -433,24 +428,13 @@ object Dedup {
       .groupBy("doc_id", "tok")
       .agg(count(lit(1)).as("w"))
 
-  private def simhashOf(tokens: DataFrame, h: Column): DataFrame =
-    // custom TypedImperativeAggregate: one 64-lane buffer instead of
-    // 64 conditional sum expressions (see SimhashAgg scaladoc)
-    tokens.withColumn("h", h)
-      .groupBy("doc_id")
-      .agg(graft.functions.SimhashAgg.simhash_agg(col("h"), col("w")).as("simhash"))
-
-  def simhashes(spark: SparkSession, dir: String): DataFrame =
-    simhashOf(tokenWeights(spark, dir), xxhash64Seeded(SeedBase, col("tok")))
-
   /** 64-bit token hash from the md5 hex prefix: top 32 bits from hex
     * chars 1-8, low 32 from 9-16. Each half parses as an unsigned
     * 32-bit value (fits a signed long), then shiftleft wraps the high
     * half through the sign bit — bit-identical to what DuckDB
     * reproduces chunk-wise ('0x…'::BIGINT, no 64-bit shift needed
-    * there). Slower than XxHash64 (hex round-trip per token) but
-    * cross-engine checkable; the fingerprint math downstream is
-    * identical. */
+    * there): a hex round-trip per token buys a fingerprint the
+    * oracle can replay. */
   private def md5Hash64(tok: Column): Column = {
     val m = md5(tok.cast("binary"))
     val hi = conv(substring(m, 1, 8), 16, 10).cast("long")
@@ -458,21 +442,21 @@ object Dedup {
     shiftleft(hi, 32).bitwiseOR(lo)
   }
 
-  /** Oracle-reproducible simhash table (md5-derived token hashes). */
-  def simhashesMd5(spark: SparkSession, dir: String): DataFrame =
-    simhashOf(tokenWeights(spark, dir), md5Hash64(col("tok")))
+  /** The (doc_id, simhash) fingerprint table. A custom
+    * TypedImperativeAggregate folds the votes: one 64-lane buffer
+    * instead of 64 conditional sum expressions (see SimhashAgg
+    * scaladoc). */
+  def simhashes(spark: SparkSession, dir: String): DataFrame =
+    tokenWeights(spark, dir).withColumn("h", md5Hash64(col("tok")))
+      .groupBy("doc_id")
+      .agg(graft.functions.SimhashAgg.simhash_agg(col("h"), col("w")).as("simhash"))
 
-  /** XxHash64 fingerprints — the perf path (no hex round-trip per
-    * token); spec-gated vs the shingle-Jaccard ground truth. */
+  /** Near-dup pairs over [[simhashes]], oracle-gated end to end: the
+    * DuckDB SQL replays tokenize → weights → bit votes → chunk
+    * banding → hamming, so the registered row checks the simhash
+    * operator itself, not just row counts. */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
     simhashPairs(simhashes(spark, dir))
-
-  /** md5 fingerprints — bit-identical pipeline, oracle-gated end to
-    * end: the DuckDB SQL replays tokenize → weights → bit votes →
-    * chunk banding → hamming, so the registered row checks the
-    * simhash OPERATOR itself, not just row counts. */
-  def dedupSimhashMd5(spark: SparkSession, dir: String): DataFrame =
-    simhashPairs(simhashesMd5(spark, dir))
 
   /** 4×16-bit pigeonhole banding + hamming ≤ 3 over any fingerprint
     * table (doc_id, simhash). */
@@ -516,8 +500,6 @@ object Dedup {
     Refine.bucketPairs(tagged, tagged, Similarity.SignBucket, "vec_id",
       Some(_ < _))((a, b) => Seq(a.as("vec_a"), b.as("vec_b")))
   }
-
-  private[graft] def embTablesBits: (Int, Int) = (EmbTables, EmbBits)
 
   // the τ ≥ 0.8 operating point: FEW tables × LONG keys — random
   // pairs collide at ~2⁻¹⁶/table while near-dup pairs still share a
@@ -576,9 +558,6 @@ object Dedup {
   def dedupEmbeddingTightOn(emb: DataFrame): DataFrame =
     embeddingDedupOn(emb, EmbTightTables, EmbTightBits, 0.8)
 
-  def dedupEmbeddingTight(spark: SparkSession, dir: String): DataFrame =
-    dedupEmbeddingTightOn(Tables.embeddings(spark, dir))
-
   // fixture synthesis for the registered tight-dedup gate: the id
   // stride parks planted copies beyond every fixture id space, and
   // the zero-prefix widths place planted pair cosines at ~1.0 /
@@ -587,7 +566,7 @@ object Dedup {
   private[graft] val PlantStride = 1L << 20
   private[graft] val PlantZeroCounts = Seq(0, 1, 2, 24)
 
-  /** The planted cos ≥ 0.8 corpus that makes [[dedupEmbeddingTight]]
+  /** The planted cos ≥ 0.8 corpus that makes the tight operating point
     * registry-gateable: every driver fixture's max pairwise cosine is
     * 0.5128, so the tight op over raw fixtures is permanently empty —
     * vacuous evidence. This derives a DETERMINISTIC superset in-query:
@@ -638,27 +617,17 @@ object Dedup {
     *
     * Scale shape: one narrow assignment pass, one shuffle of
     * (vec_id, cell, embedding) co-locating each cluster, intra-cell
-    * self-join bounded by Σ cell² with NCells scaling ∝ corpus size
-    * (the paper runs 50k clusters at web scale — cluster count is
-    * the knob, the shape is fixed); the dup-id set joins back LEFT
-    * so every vector appears exactly once. Hot cells are the same
-    * skew trade as LSH buckets — AQE skew-split territory. */
+    * self-join bounded by Σ cell²; the dup-id set joins back LEFT so
+    * every vector appears exactly once. Hot cells are the same skew
+    * trade as LSH buckets — AQE skew-split territory. At the fixed
+    * [[Similarity.NCells]] the Σ cell² mass is quadratic in the
+    * corpus (124,729 → 1.26G pairs from 1× to 100×), while cells ∝
+    * corpus measured ~linear (14.4M at 100×) but cost more wall up to
+    * 100× (18.9 s vs 3.3 s: assignment is n × cells cosines), so the
+    * shared 16-cell quantizer stays (PLANS.md §"Round 17", counts2
+    * and batch-2 tables; the paper runs 50k clusters at web scale). */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame =
     dedupSemanticOf(Similarity.cellAssignments(spark, dir)
-      .join(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), "vec_id"))
-
-  /** [[dedupSemantic]] with the cluster COUNT as the scale dial (r17
-    * ScaleLab batch 2): the intra-cell self-join is Σ cell², so at a
-    * FIXED cell count an F× corpus pays F² — linear-ish only when
-    * cells scale ∝ corpus (the SemDeDup paper runs 50k clusters at
-    * web scale). This trains its OWN nCells-centroid quantizer (same
-    * deterministic seed-window + Lloyd machinery, wider window)
-    * instead of ann_ivf's shared [[Similarity.NCells]]-cell artifact;
-    * nCells == NCells reproduces the registered op bit-for-bit. */
-  private[graft] def dedupSemanticCells(spark: SparkSession, dir: String,
-      nCells: Int): DataFrame =
-    dedupSemanticOf(Similarity.cellAssignmentsWith(spark, dir,
-        Similarity.learnedCentroids(spark, dir, nCells = nCells))
       .join(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), "vec_id"))
 
   /** Verdict over any (vec_id, cell, embedding) frame — the planted
@@ -1124,7 +1093,7 @@ object Dedup {
     * ScaleLab measured 219k → 39.9M candidates on a 10× corpus with
     * replica-hot prefixes) bounds the join volume to cap×(2K+1)×NSeg
     * ×n — linear in n; the recall contract is in
-    * [[dedupFuzzyCandidatesRawOn]], and the fixture never approaches
+    * [[dedupFuzzyWitnessesOn]], and the fixture never approaches
     * the cap (hottest bucket = 3). Both engines
     * compute classic unit-cost levenshtein — the verify threshold is
     * exact integer arithmetic, hash-replayed end to end. */
@@ -1150,19 +1119,10 @@ object Dedup {
 
   /** The pigeonhole candidate set before verification — exposed so
     * DedupScaleSpec can count it (the simjoinPrefixCandidates
-    * precedent). */
+    * precedent). Column pruning drops the witness keys from this
+    * plan: it scans ids and grams only. */
   private[operators] def dedupFuzzyCandidatesOn(docs: DataFrame): DataFrame =
-    dedupFuzzyCandidatesRawOn(docs).distinct()
-
-  /** [[dedupFuzzyCandidatesOn]] BEFORE witness dedup — one row per
-    * (pair, matching segment window), i.e. the volume the segment
-    * join's shuffle and the distinct actually process; exposed for
-    * ScaleLab's candidate-growth audit. (Column pruning drops the
-    * witness keys from this plan — it scans ids and grams only, as
-    * before the r18 rework.) */
-  private[operators] def dedupFuzzyCandidatesRawOn(docs: DataFrame,
-      maxGramDf: Long = FuzzyMaxGramDf): DataFrame =
-    dedupFuzzyWitnessesOn(docs, maxGramDf).select(col("doc_a"), col("doc_b"))
+    dedupFuzzyWitnessesOn(docs).select(col("doc_a"), col("doc_b")).distinct()
 
   /** Raw witness rows WITH both normalized keys attached —
     * (doc_a, doc_b, ta, tb), one row per matching segment window,
@@ -1172,8 +1132,7 @@ object Dedup {
     * through them widens a LINEAR shuffle; in exchange the verify in
     * [[dedupFuzzyOn]] runs pipelined on the join output and the
     * candidate pair mass never shuffles at all. */
-  private[operators] def dedupFuzzyWitnessesOn(docs: DataFrame,
-      maxGramDf: Long = FuzzyMaxGramDf): DataFrame = {
+  private[operators] def dedupFuzzyWitnessesOn(docs: DataFrame): DataFrame = {
     // lc = content length of the key BEFORE '#'-padding. The pad char
     // never occurs in content ([[fuzzyKey]] folds every non-
     // alphanumeric to a space), so one edit changes a key's '#'-count
@@ -1213,7 +1172,7 @@ object Dedup {
     // broadcasts.
     val hot = segsAll.groupBy(col("i"), col("s"))
       .agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxGramDf).select(col("i"), col("s"))
+      .filter(col("df") > FuzzyMaxGramDf).select(col("i"), col("s"))
       .observe("fuzzy_hot_grams", count(lit(1)).as("hot_gram_count"))
     val segs = segsAll.join(hot, Seq("i", "s"), "left_anti")
     // Probe-window shift bound (r19, the PassJoin "multi-match-aware"
@@ -1483,7 +1442,7 @@ object Dedup {
     "simjoin_prefix"  -> simjoinPrefix,
     "dedup_minhash"   -> dedupMinhash,
     "dedup_incr"      -> dedupIncremental,
-    "dedup_simhash"   -> dedupSimhashMd5,
+    "dedup_simhash"   -> dedupSimhash,
     "dedup_embedding" -> dedupEmbedding,
     "dedup_embedding_tight" -> dedupEmbeddingTightPlanted,
     "dedup_semantic"  -> dedupSemantic,
@@ -1799,10 +1758,4 @@ object Dedup {
         |  JOIN wide wa ON doc_a = wa.doc_id
         |  JOIN wide wb ON doc_b = wb.doc_id)
         |SELECT doc_a, doc_b, hamming FROM ham WHERE hamming <= 3""".stripMargin)
-    // dedupSimhash (XxHash64 perf variant) is deliberately NOT
-    // registered: its hashes are not reproducible in DuckDB, so its
-    // row would be rows-only. It stays library API, gated by
-    // PipelineOpsSpec (recall/precision vs shingle ground truth,
-    // partition stability); the md5 twin above runs the identical
-    // SimhashAgg + banding pipeline under a full SQL oracle.
 }

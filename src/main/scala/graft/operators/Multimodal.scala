@@ -293,81 +293,37 @@ object Multimodal {
     * path is [[phashDedupGrouped]] (r18 default flip): an exact-hash
     * pre-group runs the banding over DISTINCT hashes only and
     * expands member pairs at the end — output-IDENTICAL to the
-    * per-document banded join (EdgeCaseSpec pins set equality on the
-    * fixture and a planted duplication-heavy corpus) while the
-    * realistic 100 TB image-corpus shape, where duplicate mass is
-    * re-encodes hashing identically, pays Σ bucket² over distinct
-    * hashes instead of documents. [[phashDedupBanded]] stays as the
-    * per-document dial; the (k, nBands) width trade is its scaladoc.
-    * Hashes compute ONCE (persisted — encode/decode must not rerun
-    * for the self-join's two sides), and the wide joins carry only
-    * (rep, band, bits) / (doc_id, rep) — never media. */
-  def phashDedup(spark: SparkSession, dir: String): DataFrame =
-    phashDedupGrouped(phashesPersisted(spark, dir))
+    * per-document banded join (EdgeCaseSpec pins equality with the
+    * brute-force hamming join on the fixture and a planted
+    * duplication-heavy corpus) while the realistic 100 TB
+    * image-corpus shape, where duplicate mass is re-encodes hashing
+    * identically, pays Σ bucket² over distinct hashes instead of
+    * documents. Hashes compute ONCE (persisted — encode/decode must
+    * not rerun for the self-join's two sides), and the wide joins
+    * carry only (rep, band, bits) / (doc_id, rep) — never media. */
+  def phashDedup(spark: SparkSession, dir: String): DataFrame = {
+    import graft.CacheScope.ScopedDataset
+    phashDedupGrouped(multimodalPhash(spark, dir)
+      .select(col("doc_id"), col("phash_lo"), col("phash_hi"))
+      .persistScoped())
+  }
 
-  /** Default operating point: hamming ≤ 6 over 8 bands of 8 bits —
-    * the widest threshold the 64-bit hash supports losslessly with
-    * byte-aligned bands. */
+  /** Operating point: hamming ≤ [[PhashK]] = 6 over
+    * [[PhashBands]] = 8 bands of 8 bits — the widest threshold the
+    * 64-bit hash supports losslessly with byte-aligned bands (the
+    * pigeonhole needs only PhashBands > PhashK: k flips touch ≤ k
+    * bands, so one band survives untouched). At a fixed band width
+    * the per-band bucket population over near-uniform perceptual
+    * hashes grows ~n/2^bits, so per-document candidate volume is
+    * ~nBands·n²/2^bits, QUADRATIC in the corpus. The r17 counts2
+    * audit priced 8×8 at 3.46M → 35.4G pairs from 1× to 100×, and a
+    * k=3, 4×16-bit layout at 8.6× less mass for a lower threshold
+    * (PLANS.md §"Round 17"); the shipped answer is the exact-hash
+    * pre-group of [[phashDedupGrouped]] (PLANS.md §"Round 18"). */
   private[operators] val PhashK = 6
   private[operators] val PhashBands = 8
 
-  /** [[phashDedup]] with the (threshold, band-count) SCALE dials
-    * exposed (r17 ScaleLab batch 2): at a fixed band width the
-    * per-band bucket population over near-uniform perceptual hashes
-    * grows ~n/2^bits, so candidate volume is ~nBands·n²/2^bits —
-    * QUADRATIC in the corpus at the shipped 8×8 layout (the knob the
-    * r16 scaladoc named, now measurable). Lowering the hamming
-    * threshold k lets bands WIDEN while staying lossless — the
-    * pigeonhole needs only nBands ≥ k+1 (k flips touch ≤ k bands, so
-    * one band survives untouched) — and each extra band bit halves
-    * candidate mass: (k=3, 4×16-bit) divides it ~256× vs (6, 8×8).
-    * Band b takes bits [off(b), off(b)+w(b)) of the combined 64-bit
-    * hash (lo | hi<<32; widths split 64 as evenly as possible,
-    * remainder to the low bands) — at the default 8×8 the keys are
-    * bit-identical to the historical per-byte layout, so the
-    * registered operator and its oracle are unchanged. */
-  private[graft] def phashDedupBanded(spark: SparkSession, dir: String,
-      k: Int = PhashK, nBands: Int = PhashBands): DataFrame =
-    phashDedupBandedOn(phashesPersisted(spark, dir), k, nBands)
-
-  /** [[phashDedupBanded]] over a supplied hash frame — lets ScaleLab
-    * drive the per-document plan on planted corpora (the
-    * phashDedupGrouped signature precedent). */
-  private[graft] def phashDedupBandedOn(hashes: DataFrame,
-      k: Int = PhashK, nBands: Int = PhashBands): DataFrame = {
-    import graft.CacheScope.ScopedDataset
-    val p = hashes.select(col("doc_id"), col("phash_lo"), col("phash_hi"))
-      .persistScoped()
-    val bands = phashBandsOf(p, k, nBands)
-    bands.as("a")
-      .join(bands.as("b"),
-        col("a.k") === col("b.k") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-      .join(p.select(col("doc_id").as("doc_a"),
-        col("phash_lo").as("lo_a"), col("phash_hi").as("hi_a")), "doc_a")
-      .join(p.select(col("doc_id").as("doc_b"),
-        col("phash_lo").as("lo_b"), col("phash_hi").as("hi_b")), "doc_b")
-      .withColumn("hamming",
-        (bit_count(col("lo_a").bitwiseXOR(col("lo_b")))
-          + bit_count(col("hi_a").bitwiseXOR(col("hi_b")))).cast("long"))
-      .filter(col("hamming") <= k)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
-
-  /** Hashes computed once for both the band and the verify side —
-    * the two call sites build the IDENTICAL plan, so plan-equality
-    * cache dedup shares one persisted copy (the
-    * simjoinPrefixCandidates universe precedent). */
-  private def phashesPersisted(spark: SparkSession, dir: String): DataFrame = {
-    import graft.CacheScope.ScopedDataset
-    multimodalPhash(spark, dir)
-      .select(col("doc_id"), col("phash_lo"), col("phash_hi"))
-      .persistScoped()
-  }
-
-  /** [[phashDedupBanded]] with EXACT-HASH pre-grouping — the
+  /** Banded phash near-dup join with EXACT-HASH pre-grouping — the
     * linearization for the REALISTIC image-corpus shape (r17): at
     * 100 TB the mass of visual duplicates is re-encodes and mirrors
     * of the SAME image, which hash identically, so the banded
@@ -378,26 +334,23 @@ object Multimodal {
     * representatives only (the pigeonhole losslessness argument is
     * unchanged — reps are just hashes), and member pairs expand at
     * the end (cross-group pairs inherit their reps' hamming; same-
-    * hash pairs are hamming 0). Output-IDENTICAL to
-    * [[phashDedupBanded]] — pinned by EdgeCaseSpec on the fixture
-    * and on a planted 20×-duplicated corpus where the banded join
-    * would pay 400× the candidate mass. The expansion is
+    * hash pairs are hamming 0). Output-IDENTICAL to the per-document
+    * banded join — EdgeCaseSpec pins equality with the brute-force
+    * hamming join on the fixture and on a planted 5×-duplicated
+    * corpus, where a per-document banded join would pay 25× the
+    * candidate mass. The expansion is
     * output-sized (m² pairs among m identical docs is the ANSWER,
     * not overhead). Takes the hash frame directly so corpora with
     * precomputed hashes (and tests) can drive it. */
-  private[graft] def phashDedupGrouped(hashes: DataFrame,
-      k: Int = PhashK, nBands: Int = PhashBands): DataFrame = {
+  private[graft] def phashDedupGrouped(hashes: DataFrame): DataFrame = {
     import graft.CacheScope.ScopedDataset
-    require(nBands > k && nBands <= 64,
-      s"pigeonhole needs nBands > k for losslessness: got k=$k, nBands=$nBands")
     val p = hashes.select(col("doc_id"), col("phash_lo"), col("phash_hi"))
       .persistScoped()
     val reps = p.groupBy(col("phash_lo"), col("phash_hi"))
       .agg(min(col("doc_id")).as("rep"))
       .persistScoped()
     val bands = phashBandsOf(
-        reps.select(col("rep").as("doc_id"), col("phash_lo"), col("phash_hi")),
-        k, nBands)
+        reps.select(col("rep").as("doc_id"), col("phash_lo"), col("phash_hi")))
       .select(col("doc_id").as("rep"), col("k"), col("bv"))
     val candReps = bands.as("a")
       .join(bands.as("b"),
@@ -413,7 +366,7 @@ object Multimodal {
       .withColumn("hamming",
         (bit_count(col("lo_a").bitwiseXOR(col("lo_b")))
           + bit_count(col("hi_a").bitwiseXOR(col("hi_b")))).cast("long"))
-      .filter(col("hamming") <= k)
+      .filter(col("hamming") <= PhashK)
       .select(col("rep_a"), col("rep_b"), col("hamming"))
     val members = p.join(reps, Seq("phash_lo", "phash_hi"))
       .select(col("doc_id"), col("rep"))
@@ -431,23 +384,14 @@ object Multimodal {
     cross.unionByName(within)
   }
 
-  /** The (doc_id, band k, band value) bucket frame — exposed so
-    * ScaleLab can price Σ bucket² analytically from bucket sizes. */
-  private[graft] def phashBands(spark: SparkSession, dir: String,
-      k: Int, nBands: Int): DataFrame =
-    phashBandsOf(phashesPersisted(spark, dir), k, nBands)
-
-  /** [[phashBands]] over a supplied (doc_id, phash_lo, phash_hi)
-    * frame — the shared band-key layout for the per-document and
-    * per-representative joins and ScaleLab's planted corpora. */
-  private[graft] def phashBandsOf(hashes: DataFrame,
-      k: Int, nBands: Int): DataFrame = {
-    require(nBands > k && nBands <= 64,
-      s"pigeonhole needs nBands > k for losslessness: got k=$k, nBands=$nBands")
-    val widths = Array.tabulate(nBands)(b => 64 / nBands + (if (b < 64 % nBands) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    val bandExprs = (0 until nBands).map { b =>
-      s"struct(${b}L AS k, shiftrightunsigned(ph, ${offsets(b)}) & ${(1L << widths(b)) - 1} AS bv)"
+  /** The (doc_id, band k, band value) bucket frame of a supplied
+    * (doc_id, phash_lo, phash_hi) frame: band b takes bits
+    * [8b, 8b+8) of the combined 64-bit hash (lo | hi<<32) — the
+    * historical per-byte layout the oracle replays. */
+  private[graft] def phashBandsOf(hashes: DataFrame): DataFrame = {
+    val width = 64 / PhashBands
+    val bandExprs = (0 until PhashBands).map { b =>
+      s"struct(${b}L AS k, shiftrightunsigned(ph, ${b * width}) & ${(1L << width) - 1} AS bv)"
     }
     hashes
       .withColumn("ph", col("phash_lo").bitwiseOR(shiftleft(col("phash_hi"), 32)))

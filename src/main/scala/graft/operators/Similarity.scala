@@ -658,24 +658,18 @@ object Similarity extends SimilaritySearch with SimilarityPqIndex {
     // DescentRounds so engine and replay share the one constant
     val gcte = s"e$DescentRounds"
     // the init CTE is likewise generated from GraphInitPairCap
-    // (r17 flip): finite cap → the linear ring-bounded init the
-    // registered op runs (rank bucket members by vec_id, pair each
-    // with its next `cap` in-bucket successors, symmetrize — UNION
-    // dedups exactly like the engine's union().distinct());
-    // Int.MaxValue → the historical unbounded bucket-mate self-join,
-    // so turning the dial back keeps engine and oracle in lockstep
+    // (r17 flip): the linear ring-bounded init the registered op
+    // runs (rank bucket members by vec_id, pair each with its next
+    // `cap` in-bucket successors, symmetrize — UNION dedups exactly
+    // like the engine's union().distinct())
     val initCte =
-      if (GraphInitPairCap == Int.MaxValue)
-        s"""cand0 AS MATERIALIZED (SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-           |  FROM keys a JOIN keys b ON a.t = b.t AND a.key = b.key AND b.vec_id <> a.vec_id),""".stripMargin
-      else
-        s"""rk AS MATERIALIZED (SELECT vec_id, t, key,
-           |    row_number() OVER (PARTITION BY t, key ORDER BY vec_id) AS rn FROM keys),
-           |fwdp AS MATERIALIZED (SELECT a.vec_id AS src, b.vec_id AS dst
-           |  FROM rk a JOIN rk b ON a.t = b.t AND a.key = b.key
-           |    AND b.rn > a.rn AND b.rn <= a.rn + $GraphInitPairCap),
-           |cand0 AS MATERIALIZED (SELECT src, dst FROM fwdp
-           |  UNION SELECT dst AS src, src AS dst FROM fwdp),""".stripMargin
+      s"""rk AS MATERIALIZED (SELECT vec_id, t, key,
+         |    row_number() OVER (PARTITION BY t, key ORDER BY vec_id) AS rn FROM keys),
+         |fwdp AS MATERIALIZED (SELECT a.vec_id AS src, b.vec_id AS dst
+         |  FROM rk a JOIN rk b ON a.t = b.t AND a.key = b.key
+         |    AND b.rn > a.rn AND b.rn <= a.rn + $GraphInitPairCap),
+         |cand0 AS MATERIALIZED (SELECT src, dst FROM fwdp
+         |  UNION SELECT dst AS src, src AS dst FROM fwdp),""".stripMargin
     def ndRound(r: Int, prev: String): String =
       s"""cand$r AS MATERIALIZED (SELECT src, dst FROM $prev
          |  UNION SELECT a.src, b.dst FROM $prev a JOIN $prev b ON a.dst = b.src AND b.dst <> a.src

@@ -54,19 +54,13 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
     * of window+join), not the width, dominates cost. Rejected; 48
     * stays. Hop count likewise (same round): 3 hops → recall 0.880,
     * 2 → 0.860, savings inside ambient variance; 4 stays. The
-    * build side's candidate cap is settled in [[neighborGraph]]. */
-  def annGraph(spark: SparkSession, dir: String): DataFrame =
-    annGraphBeam(spark, dir)
-
-  /** [[annGraph]] over a graph built with an explicit LSH-init pair
-    * cap — the seam ScaleLab uses to time the unbounded
-    * (`Int.MaxValue`) init curve. Beam width and hop count are the
-    * shipped [[BeamWidth]]/[[BeamHops]], which the oracle
-    * interpolates too. */
-  private[graft] def annGraphBeam(spark: SparkSession, dir: String,
-      initPairCap: Int = GraphInitPairCap): DataFrame = {
+    * build side's candidate cap is settled in [[neighborGraph]]
+    * ([[GraphInitPairCap]]; the uncapped init's 100× ENOSPC and the
+    * capped curve are in PLANS.md §"Round 16" and §"Round 17"). The
+    * oracle interpolates [[BeamWidth]] and [[BeamHops]] too. */
+  def annGraph(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val g = neighborGraph(spark, dir, initPairCap)
+    val g = neighborGraph(spark, dir)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     def scored(cand: DataFrame): DataFrame =
@@ -242,14 +236,11 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
   /** Sampled-point SEED codebook, as lattice integers:
     * codebook(s)(c)(d) = component s·SubDim+d of seed vector c
     * (vec_id ∈ [base, base+NCodes), base corpus-derived via
-    * `seedWindowBase` — the IVF seed-slice trick, one codebook entry
-    * per seed per subspace). Driver metadata: 256×64 longs. */
-  private[operators] def pqSeedCodebook(spark: SparkSession, dir: String): Array[Array[Array[Long]]] =
-    pqSeedCodebookFrom(spark, dir, seedWindowBase(spark, dir))
-
-  /** [[pqSeedCodebook]] with the seed-window base pre-resolved (see
-    * [[SimilaritySearch.seedCentroidsFrom]] — one `min(vec_id)` scan
-    * shared between the coarse quantizer and the codebook). */
+    * `seedWindowBase` and resolved by the caller — the IVF seed-slice
+    * trick, one codebook entry per seed per subspace; see
+    * [[SimilaritySearch.seedCentroidsFrom]] for why one `min(vec_id)`
+    * scan is shared between the coarse quantizer and the codebook).
+    * Driver metadata: 256×64 longs. */
   private[operators] def pqSeedCodebookFrom(spark: SparkSession, dir: String,
       baseOpt: Option[Long]): Array[Array[Array[Long]]] = {
     val base = baseOpt.getOrElse(SeedBaseOffset)

@@ -522,10 +522,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   /** The (vec_id, table_idx, table_key) sign-bucket frame of an
     * (vec_id, embedding) relation at a (tables × bits) operating
     * point — the candidate input of every sign-LSH operator; the ANN
-    * family uses [[NTables]] × [[BitsPerTable]]. Exposed so ScaleLab
-    * can price the Σ bucket² pair mass analytically from bucket sizes
-    * (a groupBy, not the pair join). */
-  private[graft] def embeddingTaggedOf(
+    * family uses [[NTables]] × [[BitsPerTable]]. */
+  private[operators] def embeddingTaggedOf(
       emb: DataFrame, nTables: Int, bits: Int): DataFrame = {
     import emb.sparkSession.implicits._
     val ps = makePlanes(nTables * bits)
@@ -571,7 +569,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * SMALLEST vec_id — r15 (VERDICT r14 item 5): the seed slice is
     * corpus-RELATIVE (min(vec_id) + offset), not a literal id range,
     * and this one constant is shared by the engine ([[seedCentroidsFrom]],
-    * `SimilarityPqIndex.pqSeedCodebook`) and the oracle replays
+    * `SimilarityPqIndex.pqSeedCodebookFrom`) and the oracle replays
     * (`Similarity.seedWindowSql`), so both derive the identical slice
     * on any corpus. The offset preserves the shipped fixtures' slice
     * bit-for-bit (their min(vec_id) is 0), keeping all eight
@@ -596,12 +594,12 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * `min(vec_id)` job per trained artifact (r19: the two jobs
     * computed the identical scalar). */
   private[operators] def seedCentroidsFrom(spark: SparkSession, dir: String,
-      base: Option[Long], nCells: Int = NCells): Array[(Int, Array[Double])] =
+      base: Option[Long]): Array[(Int, Array[Double])] =
     base match {
       case None => Array.empty
       case Some(b) =>
         Tables.embeddings(spark, dir)
-          .filter(col("vec_id") >= b && col("vec_id") < (b + nCells))
+          .filter(col("vec_id") >= b && col("vec_id") < (b + NCells))
           .select(col("vec_id"), col("embedding"))
           .collect()
           .sortBy(_.getLong(0))
@@ -623,16 +621,14 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * would raise rounds, not change shape — each round is the same
     * single scan + tiny aggregate. */
   private[operators] def learnedCentroids(spark: SparkSession, dir: String,
-      trainFilter: Column = lit(true),
-      nCells: Int = NCells): Array[(Int, Array[Double])] =
-    learnedCentroidsFrom(spark, dir, seedWindowBase(spark, dir), trainFilter, nCells)
+      trainFilter: Column = lit(true)): Array[(Int, Array[Double])] =
+    learnedCentroidsFrom(spark, dir, seedWindowBase(spark, dir), trainFilter)
 
   /** [[learnedCentroids]] with the seed-window base pre-resolved (see
     * [[seedCentroidsFrom]]). */
   private[operators] def learnedCentroidsFrom(spark: SparkSession, dir: String,
-      base: Option[Long], trainFilter: Column = lit(true),
-      nCells: Int = NCells): Array[(Int, Array[Double])] =
-    (1 to LloydRounds).foldLeft(seedCentroidsFrom(spark, dir, base, nCells))((c, _) =>
+      base: Option[Long], trainFilter: Column = lit(true)): Array[(Int, Array[Double])] =
+    (1 to LloydRounds).foldLeft(seedCentroidsFrom(spark, dir, base))((c, _) =>
       lloydRound(spark, dir, c, trainFilter))
 
   /** ONE deterministic Lloyd round: assignment runs distributed (one
@@ -657,8 +653,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       .filter(trainFilter)
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .mapPartitions { rows =>
-        // sized by the SEED (== NCells on the default path; the
-        // dedup_semantic cluster-count dial passes larger seeds)
+        // sized by the SEED (NCells, or empty on an empty corpus)
         val acc = Array.ofDim[Long](seed.length, dim)
         val cnt = new Array[Long](seed.length)
         rows.foreach { r =>
@@ -1229,7 +1224,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
 
   /** Registered default for the kNN-join bucket-mate ring cap (r17,
     * same arc as [[GraphInitPairCap]] but with a STRONGER measured
-    * license: ScaleLab `knncap` found the cap-64 output EXACTLY
+    * license: the r17 `knncap` sweep found the cap-64 output EXACTLY
     * EQUAL to the uncapped op at every swept SF — recall 1.0000,
     * set-identical rows — because a true top-[[KnnK]] neighbor
     * shares a bucket with its query in many of the 16 tables, so at
@@ -1238,7 +1233,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * QUADRATIC, the ann_graph-init ENOSPC class — vs capped
     * 543k → 18.4M → 203M, linear once saturated. The oracle's
     * candidate CTE is generated from this constant, so engine and
-    * replay flip together; ∞ stays reachable as the dial. */
+    * replay flip together (PLANS.md §"Round 17"). */
   private[operators] val KnnBucketCap = 64
 
   /** All-vectors approximate k-NN JOIN: every vector finds its
@@ -1260,14 +1255,16 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   def knnJoin(spark: SparkSession, dir: String): DataFrame =
     knnJoinCapped(spark, dir, KnnBucketCap)
 
-  /** [[knnJoin]] with the bucket-mate pair cap as a dial (r17
-    * ScaleLab batch 2 — the same inherent quadratic as the
+  /** [[knnJoin]] at an explicit bucket-mate pair cap. Uncapped, the
+    * bucket-mate self-join has the same inherent quadratic as the
     * NN-descent init: at fixed key bits the per-table bucket
-    * population grows ~n/2^bits, so the bucket-mate self-join is
-    * Σ bucket² ~ n²). A finite cap takes the [[Refine.ringPairs]]
-    * candidates (symmetrized — every vector is a query here), LINEAR
-    * in n. The registered op ships [[KnnBucketCap]]; Int.MaxValue
-    * reproduces the historical unbounded self-join for A/B. */
+    * population grows ~n/2^bits, so it is Σ bucket² ~ n² (r17
+    * counts2, PLANS.md §"Round 17"). A finite cap takes the
+    * [[Refine.ringPairs]] candidates (symmetrized — every vector is a
+    * query here), LINEAR in n. The registered op ships
+    * [[KnnBucketCap]]; `Int.MaxValue` runs the unbounded self-join,
+    * which EdgeCaseSpec uses as the reference the ring cap must
+    * match set-for-set on the fixture. */
   private[graft] def knnJoinCapped(spark: SparkSession, dir: String,
       bucketCap: Int): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -1277,9 +1274,10 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       .join(vecHinted(e.select(col("vec_id").as("qid"), col("embedding").as("qe"))), "qid")
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
     val scored = if (bucketCap == Int.MaxValue) {
-      // historical unbounded A/B branch: global pair distinct, then
+      // historical unbounded branch: global pair distinct, then
       // score + rank — the Σ bucket² mass this shape shuffles is the
-      // measured ENOSPC class at 100×; kept only as the dial
+      // measured ENOSPC class at 100×; kept as the reference
+      // EdgeCaseSpec holds the ring cap to
       attach(Refine.bucketPairs(tagged, tagged, SignBucket, "vec_id",
         Some(_ =!= _))((a, b) => Seq(a.as("qid"), b.as("nid"))))
     } else {
@@ -1350,8 +1348,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * random-init NN-descent argument, and bucket-mates are already
     * LSH-close. The oracle's init CTE is generated from this constant
     * (the DescentRounds precedent), so engine and replay cannot
-    * drift; `Int.MaxValue` remains reachable as the dial for corpora
-    * small enough that the self-join is cheaper than the window. */
+    * drift. */
   private[operators] val GraphInitPairCap = 64
 
   /** Broadcast hint for a vector relation attached to a CANDIDATE-
@@ -1390,7 +1387,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * once through the one-switch [[graft.StateMode]] because the next
     * round references it six times (edges + fwd×2 + rev + co×2) and
     * the FINAL graph is referenced once per beam hop by
-    * [[annGraphBeam]] — the same once-materialized-reuse invariant as
+    * [[annGraph]] — the same once-materialized-reuse invariant as
     * the kcore/ktruss peel rounds. The r15 interleaved A/B (parity-
     * gated, sf0.1, whole-operator colds, 3 reps; PLANS.md r15 batch
     * H): cut 3.9/3.5/3.2 s vs per-round persist 6.2/5.6/5.8 — ~40%
@@ -1402,12 +1399,9 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * saved only 0.2 s at sf0.1 — the per-round fixed structure
     * dominates the n·M² term at fixture scale — so no cap ships.
     *
-    * Two seams stay for callers that cannot change the constants:
-    * `initPairCap` (ScaleLab times the unbounded init curve with
-    * Int.MaxValue) and `bcBytes` (a CI spec forces the past-gate
-    * shape on fixture data with 0). */
+    * One seam stays: `bcBytes` (GraphDescentParitySpec forces the
+    * past-gate shape on fixture data with 0). */
   private[operators] def neighborGraph(spark: SparkSession, dir: String,
-      initPairCap: Int = GraphInitPairCap,
       bcBytes: Long = GraphBroadcastVecBytes): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     // r19 (VERDICT r18 item 3): the descent's pair-dedup SHAPE
@@ -1450,36 +1444,32 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     // population grows linearly with the corpus, so this bucket-mate
     // self-join is inherently QUADRATIC in n — the measured x100 run
     // generated ~10⁴× the init pairs and died ENOSPC before the
-    // descent even started. `initPairCap` is the scale dial: the
-    // [[Refine.ringPairs]] init is LINEAR in n, while descent
+    // descent even started. The [[Refine.ringPairs]] init at
+    // [[GraphInitPairCap]] (r17) is LINEAR in n, while descent
     // rounds repair init quality (the classic random-init NN-descent
-    // argument; bucket-mates are already LSH-close). The REGISTERED
-    // op ships cap = [[GraphInitPairCap]] (r17) and the oracle
-    // replays the same ring from the same constant; Int.MaxValue
-    // stays reachable as the small-corpus dial — or grow
-    // BitsPerTable with log n, which keeps bucket sizes constant.
-    val cand0 = if (initPairCap == Int.MaxValue) {
-      Refine.bucketPairs(tagged, tagged, SignBucket, "vec_id",
-        Some(_ =!= _))((a, b) => Seq(a.as("src"), b.as("dst")))
-    } else {
-      // r18 rework (the knn_join/dedup_fuzzy lesson): the ring pairs'
-      // global distinct shuffled ~405M directional rows at the 100×
-      // corpus with a duplication factor of only ~1.16. Instead,
-      // score the raw directional rows (vectors arrive broadcast, so
-      // this is map-side over the ring join's bucket-partitioned
-      // output) and keep a per-(table, src) top-[[GraphDeg]] FIRST —
-      // lossless: each table's candidate set is a subset of the
-      // union, so every global top-M neighbor ranks ≤ M inside each
-      // table that generated it, and [[topM]] over these winners
-      // (dedup'd at winner scale, ≤ NTables·deg·n rows) returns the
-      // identical graph under the same (cos desc, dst asc) order.
-      // Winners re-score in topM (a ≤ NTables·deg·n re-pass) —
-      // measured far cheaper than the pair-mass distinct it replaces.
-      Refine.topK(scored(Refine.ringPairs(tagged, initPairCap, ("src", "dst"))),
-          Seq("table_idx", "src"), ByCosDst, GraphDeg, "rt", longRank = false)
-        .select(col("src"), col("dst"))
-        .distinct()
-    }
+    // argument; bucket-mates are already LSH-close); the oracle
+    // replays the same ring from the same constant. The structural
+    // alternative is growing BitsPerTable with log n, which keeps
+    // bucket sizes constant.
+    //
+    // r18 rework (the knn_join/dedup_fuzzy lesson): the ring pairs'
+    // global distinct shuffled ~405M directional rows at the 100×
+    // corpus with a duplication factor of only ~1.16. Instead,
+    // score the raw directional rows (vectors arrive broadcast, so
+    // this is map-side over the ring join's bucket-partitioned
+    // output) and keep a per-(table, src) top-[[GraphDeg]] FIRST —
+    // lossless: each table's candidate set is a subset of the
+    // union, so every global top-M neighbor ranks ≤ M inside each
+    // table that generated it, and [[topM]] over these winners
+    // (dedup'd at winner scale, ≤ NTables·deg·n rows) returns the
+    // identical graph under the same (cos desc, dst asc) order.
+    // Winners re-score in topM (a ≤ NTables·deg·n re-pass) —
+    // measured far cheaper than the pair-mass distinct it replaces.
+    val cand0 = Refine.topK(
+        scored(Refine.ringPairs(tagged, GraphInitPairCap, ("src", "dst"))),
+        Seq("table_idx", "src"), ByCosDst, GraphDeg, "rt", longRank = false)
+      .select(col("src"), col("dst"))
+      .distinct()
     def topM(cand: DataFrame): DataFrame = {
       // past-gate shape: dedup the pair mass BEFORE the (now
       // shuffling) attach joins — see the gate note above.
@@ -1505,8 +1495,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       // distinct's, then the per-src window's. The score is computed
       // per RAW row (duplication ≈ the union overlap factor), the
       // same CPU-for-shuffle trade the dedup_fuzzy/knn_join reworks
-      // measured as a clear win. Pre-deduplicated input (the init
-      // branches) passes the lag filter untouched.
+      // measured as a clear win. Pre-deduplicated input (the init)
+      // passes the lag filter untouched.
       val s = scored(base)
       val deduped =
         if (!windowDedup) s // already distinct upstream

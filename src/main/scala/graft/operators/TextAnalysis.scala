@@ -1188,8 +1188,9 @@ object TextAnalysis {
     * "repeated line" pass a web-corpus pipeline runs before training
     * (boilerplate navigation/footer sentences recur across pages;
     * [[textRepetition]] is the INTRA-doc cousin): sentences split on
-    * terminal punctuation runs, normalized (lowercase, non-alnum runs
-    * collapsed to single spaces, trimmed), deduplicated per document,
+    * terminal punctuation runs, normalized (the [[toksOf]] tokens
+    * joined by single spaces — the oracle's lowercase, non-alnum runs
+    * collapsed to spaces, trimmed), deduplicated per document,
     * and a sentence is BOILERPLATE when its normalized form appears
     * in ≥ 2 distinct documents. Per doc: distinct-sentence count,
     * boilerplate count, and the 2²⁰-lattice boilerplate share. Scale
@@ -1202,8 +1203,7 @@ object TextAnalysis {
   def sentenceDedup(spark: SparkSession, dir: String): DataFrame = {
     val sents = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), "[.!?]+")).as("raw"))
-      .select(col("doc_id"),
-        trim(regexp_replace(lower(col("raw")), "[^a-z0-9]+", " ")).as("s"))
+      .select(col("doc_id"), array_join(toksOf(col("raw")), " ").as("s"))
       .filter(length(col("s")) > 0)
       .select(col("doc_id"), substring(md5(col("s")), 1, 16).as("sh"))
       .distinct()
@@ -1251,7 +1251,9 @@ object TextAnalysis {
     * of the classic float score (whose 206.835/1.015/84.6 constants
     * would only obscure the two ratios that carry all the signal):
     * per source, Σwords, Σsentences, Σvowel-groups (the standard
-    * syllable-count heuristic — maximal [aeiou]+ runs), then
+    * syllable-count heuristic — maximal [aeiou]+ runs, counted over
+    * the [[toksOf]] tokens joined by spaces: every character outside
+    * [a-z0-9] breaks a run in the oracle's lowered text too), then
     * words-per-sentence and vowel-groups-per-word as 2²⁰-lattice
     * quotients of the corpus-level sums. Sentences count terminal
     * punctuation runs ([.!?]+), floored at 1 per document so
@@ -1260,7 +1262,7 @@ object TextAnalysis {
     * length difference after collapsing matches) — one scan, no UDF,
     * no explode; the rollup is one partial+final aggregate. */
   def readability(spark: SparkSession, dir: String): DataFrame = {
-    val t = lower(col("text"))
+    val t = array_join(toksOf(col("text")), " ")
     def runs(c: Column, pat: String): Column =
       length(regexp_replace(regexp_replace(c, pat, "\u0001"), "[^\u0001]", ""))
     val words = size(toksOf(col("text"))).cast("long")

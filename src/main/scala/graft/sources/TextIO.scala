@@ -17,7 +17,6 @@ import graft.mr.TabCodec
   *   anti-pattern; the Spark-native equivalent is a partitioned text
   *   directory whose `_SUCCESS` marker plays the role of the
   *   reference's final.txt existence poll (`gridmr_submit.py:76–86`).
-  *   `writeSingle` exists for byte-level parity in tests only.
   */
 object TextIO {
 
@@ -118,15 +117,6 @@ object TextIO {
   def writeTabbed(pairs: Dataset[(String, String)], path: String): Unit = {
     import pairs.sparkSession.implicits._
     pairs.map(kv => TabCodec.encode(kv._1, kv._2))
-      .write.mode(SaveMode.Overwrite).text(path)
-  }
-
-  /** Single-file variant (coalesce(1)) — test/parity use ONLY; never
-    * at scale. */
-  def writeSingle(pairs: Dataset[(String, String)], path: String): Unit = {
-    import pairs.sparkSession.implicits._
-    pairs.map(kv => TabCodec.encode(kv._1, kv._2))
-      .coalesce(1)
       .write.mode(SaveMode.Overwrite).text(path)
   }
 }

@@ -88,6 +88,33 @@ class TokenizeSpec extends AnyFunSuite {
     assert(exploded.toSeq.sorted === want.flatten.sorted)
   }
 
+  test("sentence_dedup and readability lower like DuckDB on non-ASCII text") {
+    // String.toLowerCase turns U+0130 (dotted capital I) into "i"
+    // plus a combining dot, which splits a sentence key ("senti nel")
+    // and a vowel run ("i", "a"); DuckDB 1.0.0 lowers it to "i".
+    // Expected rows are the two oracles' SQL run in DuckDB over these
+    // three documents.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tok_ops").toString
+    try {
+      import spark.implicits._
+      Seq((1L, "a", "Sent\u0130nel. x"), (2L, "a", "sentinel! y"), (3L, "b", "\u0130a"))
+        .toDF("doc_id", "source", "text").write.parquet(s"$tmp/documents.parquet")
+      val sd = TextAnalysis.sentenceDedup(spark, tmp)
+        .select("doc_id", "n_sents", "n_boiler", "boiler_q").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sorted
+      assert(sd === Seq((1L, 2L, 1L, 524288L), (2L, 2L, 1L, 524288L), (3L, 1L, 0L, 0L)))
+      val rd = TextAnalysis.readability(spark, tmp)
+        .select("source", "n_docs", "n_words", "n_sents", "n_vgroups", "wps_q", "vpw_q").collect()
+        .map(r => (r.getString(0), (1 to 6).map(r.getLong))).toSeq.sortBy(_._1)
+      assert(rd === Seq(
+        "a" -> Seq(2L, 4L, 2L, 6L, 2097152L, 1572864L),
+        "b" -> Seq(1L, 1L, 1L, 1L, 1048576L, 1048576L)))
+    } finally {
+      graft.CacheScope.release()
+      new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
   test("null gives null; empty and all-separator text give []") {
     val in = Seq(null, "", " ", "!!! ??? ...", "\u00E9\u00DF\u4E2D", "\uD83D\uDE00")
     val want = None +: Seq.fill(in.size - 1)(Some(Seq.empty[String]))

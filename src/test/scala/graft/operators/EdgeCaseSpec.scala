@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Edge-case behavior of the tokenizing operators on inputs the
@@ -615,18 +615,28 @@ class EdgeCaseSpec extends AnyFunSuite {
     graft.CacheScope.release()
   }
 
-  test("phash_dedup banding is lossless: banded pairs equal the brute-force hamming join") {
+  /** Brute-force hamming self-join over a (doc_id, phash_lo,
+    * phash_hi) frame: every pair within hamming `k`, no banding. */
+  private def phashBrute(p: DataFrame, k: Int): Set[(Long, Long, Long)] = {
     import org.apache.spark.sql.functions.{col, bit_count}
-    val dir = "/root/testdata/sf0.001"
-    val p = Multimodal.multimodalPhash(spark, dir)
-      .select(col("doc_id"), col("phash_lo"), col("phash_hi"))
-    val brute = p.as("a").join(p.as("b"), col("a.doc_id") < col("b.doc_id"))
+    p.as("a").join(p.as("b"), col("a.doc_id") < col("b.doc_id"))
       .withColumn("h",
         (bit_count(col("a.phash_lo").bitwiseXOR(col("b.phash_lo")))
           + bit_count(col("a.phash_hi").bitwiseXOR(col("b.phash_hi")))).cast("long"))
-      .filter(col("h") <= 6)
+      .filter(col("h") <= k)
       .select(col("a.doc_id"), col("b.doc_id"), col("h"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  }
+
+  private def phashFixture(dir: String): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    Multimodal.multimodalPhash(spark, dir)
+      .select(col("doc_id"), col("phash_lo"), col("phash_hi"))
+  }
+
+  test("phash_dedup banding is lossless: banded pairs equal the brute-force hamming join") {
+    val dir = "/root/testdata/sf0.001"
+    val brute = phashBrute(phashFixture(dir), 6)
     val banded = Multimodal.phashDedup(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(banded === brute, "pigeonhole banding must lose no qualifying pair")
@@ -634,59 +644,39 @@ class EdgeCaseSpec extends AnyFunSuite {
     graft.CacheScope.release()
   }
 
-  test("phash widened-band dial (k=3, 4×16-bit) is lossless at its own threshold") {
-    import org.apache.spark.sql.functions.{col, bit_count}
-    // the r17 scale dial: lowering the hamming threshold lets bands
-    // WIDEN (pigeonhole needs only nBands > k), dividing bucket
-    // collision mass ~256× — this pins that the widened layout is
-    // still lossless, so the dial trades THRESHOLD, never recall
+  test("phash grouped banding at the shipped PhashK/PhashBands equals the brute-force hamming join") {
+    import org.apache.spark.sql.functions.col
+    // the operating point is a pair of constants: every brute pair
+    // within PhashK shares >= PhashBands - PhashK byte bands (the
+    // pigeonhole), and the grouped join over a supplied hash frame
+    // returns exactly the brute pair set
     val dir = "/root/testdata/sf0.001"
-    val p = Multimodal.multimodalPhash(spark, dir)
-      .select(col("doc_id"), col("phash_lo"), col("phash_hi"))
-    val brute = p.as("a").join(p.as("b"), col("a.doc_id") < col("b.doc_id"))
-      .withColumn("h",
-        (bit_count(col("a.phash_lo").bitwiseXOR(col("b.phash_lo")))
-          + bit_count(col("a.phash_hi").bitwiseXOR(col("b.phash_hi")))).cast("long"))
-      .filter(col("h") <= 3)
-      .select(col("a.doc_id"), col("b.doc_id"), col("h"))
+    val hashes = phashFixture(dir)
+    val brute = phashBrute(hashes, Multimodal.PhashK)
+    val grouped = Multimodal.phashDedupGrouped(hashes)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val banded = Multimodal.phashDedupBanded(spark, dir, k = 3, nBands = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(banded === brute, "4×16-bit banding must lose no pair within hamming 3")
-    // an unsound layout (nBands ≤ k) is refused, not silently lossy
-    intercept[IllegalArgumentException] {
-      Multimodal.phashDedupBanded(spark, dir, k = 6, nBands = 6)
+    assert(brute.nonEmpty && grouped === brute)
+    val bands = Multimodal.phashBandsOf(hashes).collect()
+      .groupBy(_.getLong(0)).map { case (d, rs) => d -> rs.map(r => (r.getLong(1), r.getLong(2))).toSet }
+    assert(bands.values.forall(_.size == Multimodal.PhashBands))
+    brute.foreach { case (a, b, _) =>
+      assert((bands(a) intersect bands(b)).size >= Multimodal.PhashBands - Multimodal.PhashK,
+        s"pair ($a, $b) shares too few bands")
     }
     graft.CacheScope.release()
   }
 
-  test("phash exact-hash pre-grouping: output-identical to the banded join, linear on a duplicated corpus") {
+  test("phash exact-hash pre-grouping equals the brute hamming join on a duplicated corpus") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val hashes = Multimodal.multimodalPhash(spark, dir)
-      .select(col("doc_id"), col("phash_lo"), col("phash_hi"))
-    // parity on the fixture: grouped (the r18 registered default) ==
-    // the per-document banded join, row set exact — the license that
-    // keeps the oracle untouched across the default flip
-    val banded = Multimodal.phashDedupBanded(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val grouped = Multimodal.phashDedupGrouped(hashes)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(banded.nonEmpty && grouped === banded)
     // the realistic re-encode-heavy corpus: 5 identical-hash copies
     // per doc (fresh ids) — grouped must equal the brute hamming
     // join while its banding self-join sees only DISTINCT hashes
-    val base = hashes.filter(col("doc_id") < 300)
+    val base = phashFixture(dir).filter(col("doc_id") < 300)
     val dup = base.withColumn("c", explode(expr("sequence(0, 4)")))
       .select((col("doc_id") * 8 + col("c")).as("doc_id"),
         col("phash_lo"), col("phash_hi"))
-    val brute = dup.as("a").join(dup.as("b"), col("a.doc_id") < col("b.doc_id"))
-      .withColumn("h",
-        (bit_count(col("a.phash_lo").bitwiseXOR(col("b.phash_lo")))
-          + bit_count(col("a.phash_hi").bitwiseXOR(col("b.phash_hi")))).cast("long"))
-      .filter(col("h") <= 6)
-      .select(col("a.doc_id"), col("b.doc_id"), col("h"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val brute = phashBrute(dup, Multimodal.PhashK)
     val g2 = Multimodal.phashDedupGrouped(dup)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(g2 === brute,
@@ -704,9 +694,9 @@ class EdgeCaseSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val dir = "/root/testdata/sf0.001"
     // the REGISTERED op ships the ring cap (r17 flip); the unbounded
-    // self-join is the dial. ScaleLab `knncap` measured the capped
-    // output set-EQUAL to the uncapped at every swept SF — pin that
-    // license here so fixture drift that breaks it is loud
+    // self-join is the reference. The r17 `knncap` sweep measured the
+    // capped output set-EQUAL to the uncapped at every swept SF — pin
+    // that license here so fixture drift that breaks it is loud
     val full = Similarity.knnJoinCapped(spark, dir, Int.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val cappedDf = Similarity.knnJoin(spark, dir)
@@ -717,17 +707,6 @@ class EdgeCaseSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.max("count")).head().getLong(0)
     assert(maxPerQ <= Similarity.KnnK.toLong)
     assert(full.nonEmpty)
-    graft.CacheScope.release()
-  }
-
-  test("dedupSemanticCells at the default cell count reproduces the registered op row-for-row") {
-    // the r17 cluster-count dial must be the shipped construction at
-    // nCells == NCells
-    val dir = "/root/testdata/sf0.001"
-    val shipped = Dedup.dedupSemantic(spark, dir)
-    val dialed = Dedup.dedupSemanticCells(spark, dir, Similarity.NCells)
-    assert(shipped.exceptAll(dialed).isEmpty && dialed.exceptAll(shipped).isEmpty,
-      "nCells=NCells must be row-for-row identical to dedupSemantic")
     graft.CacheScope.release()
   }
 

@@ -125,13 +125,13 @@ class PipelineOpsSpec extends AnyFunSuite {
     val declarative = sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
       .select(col("doc_id"), array((0 until 64).map(i => col(s"h$i")): _*).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val imperative = Dedup.minhashSignatures(spark, dir)
+    val imperative = Dedup.minhashSketch(spark, dir).select("doc_id", "sig")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(imperative === declarative)
   }
 
   test("minhash signature estimates jaccard for a planted near-dup pair") {
-    val sigs = Dedup.minhashSignatures(spark, dir).collect()
+    val sigs = Dedup.minhashSketch(spark, dir).select("doc_id", "sig").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val exact = Dedup.dedupNgramJaccard(spark, dir).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))

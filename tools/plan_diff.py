@@ -20,6 +20,11 @@ compare equal:
   * object hash suffixes      `SomeClass@6d3f2a1`          -> `SomeClass@`
   * per-process scratch dirs  `graft_zorder_<host>_p30365` -> `graft_zorder_<host>_p`
   * AQE runtime statistics    `Statistics(sizeInBytes=..)` -> `Statistics()`
+  * lambda variable counters  `lambda x_87#`               -> `lambda x_#`
+
+Lambda variables are numbered JVM-wide in build order, so a change that
+builds more or fewer higher-order lambdas in one op renumbers them in
+every op built after it.
 
 A lambda's class name names the file that defines the closure, so
 moving a closure between files is not reported as a plan change.
@@ -51,6 +56,7 @@ NORMALIZERS = [
     (re.compile(r"@[0-9a-f]{5,}\b"), "@"),
     (re.compile(r"(graft_\w+?)_p\d+"), r"\1_p"),
     (re.compile(r"Statistics\([^)]*\)"), "Statistics()"),
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1_#"),
 ]
 DETAIL = re.compile(r"^\(\d+\) ")
 CONTEXT = 12  # diff lines shown per differing op

@@ -13,8 +13,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *
   * Folds (token-hash, weight) rows into a 64-lane signed counter
   * buffer; `eval` packs the counter signs into the fingerprint long
-  * (counter ≥ 0 ⇒ bit set — same convention as the declarative
-  * formulation it replaces).
+  * (counter ≥ 0 ⇒ bit set). The vote and pack steps are
+  * [[SimhashKernel]]'s, shared with the one-row [[Simhash]]
+  * expression, which is what `dedup_simhash` runs: its tokens sit in
+  * one row, so they need no group-by.
   *
   * Why an imperative aggregate instead of 64 conditional `sum`s: the
   * declarative version generates a 64-expression aggregate whose
@@ -42,15 +44,8 @@ case class SimhashAgg(
   override def update(buf: Array[Int], input: InternalRow): Array[Int] = {
     val h = hash.eval(input)
     val w = weight.eval(input)
-    if (h != null && w != null) {
-      val hv = h.asInstanceOf[Long]
-      val wv = w.asInstanceOf[Long].toInt
-      var j = 0
-      while (j < 64) {
-        if (((hv >>> j) & 1L) == 1L) buf(j) += wv else buf(j) -= wv
-        j += 1
-      }
-    }
+    if (h != null && w != null)
+      SimhashKernel.vote(buf, h.asInstanceOf[Long], w.asInstanceOf[Long].toInt)
     buf
   }
 
@@ -60,12 +55,7 @@ case class SimhashAgg(
     b1
   }
 
-  override def eval(buf: Array[Int]): Any = {
-    var r = 0L
-    var j = 0
-    while (j < 64) { if (buf(j) >= 0) r |= (1L << j); j += 1 }
-    java.lang.Long.valueOf(r)
-  }
+  override def eval(buf: Array[Int]): Any = java.lang.Long.valueOf(SimhashKernel.pack(buf))
 
   override def serialize(buf: Array[Int]): Array[Byte] = {
     val bb = ByteBuffer.allocate(64 * 4)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XxHash64}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -130,6 +131,41 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** `first_shared(a, b)`: the smallest index `i` with `a[i] = b[i]`
+  * over two `array<int>` or two `array<bigint>` columns, or −1 when
+  * no index matches. Null elements match nothing. It is the ownership
+  * test of a bucket join: two ids whose per-table key arrays are `a`
+  * and `b` meet in every table where they share a key, and only the
+  * meeting in table `first_shared(a, b)` keeps the pair
+  * (`Refine.bucketPairs`). */
+case class FirstShared(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "first_shared"
+
+  private def longs: Boolean =
+    left.dataType.asInstanceOf[ArrayType].elementType == LongType
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(a, _), ArrayType(b, _)) if a == b && (a == IntegerType || a == LongType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) =>
+      TypeCheckResult.TypeCheckFailure(
+        s"first_shared takes two array<int> or two array<bigint>, not ${l.simpleString}, ${r.simpleString}")
+  }
+
+  protected override def nullSafeEval(a: Any, b: Any): Any =
+    VectorFunctions.firstShared(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], longs)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorFunctions.firstShared($a, $b, $longs)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 object VectorFunctions {
 
   /** Codegen'd cosine similarity over two float-array columns. */
@@ -141,6 +177,23 @@ object VectorFunctions {
   def dot_product(a: Column, b: Column): Column =
     ColumnBridge.column(
       DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** The kernel of [[FirstShared]]. */
+  def firstShared(a: ArrayData, b: ArrayData, longs: Boolean): Int = {
+    val n = math.min(a.numElements(), b.numElements())
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) &&
+          (if (longs) a.getLong(i) == b.getLong(i) else a.getInt(i) == b.getInt(i))) return i
+      i += 1
+    }
+    -1
+  }
+
+  /** Codegen'd [[FirstShared]] over two int- or long-array columns. */
+  def first_shared(a: Column, b: Column): Column =
+    ColumnBridge.column(
+      FirstShared(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** XxHash64 with an explicit seed — the functions-API `xxhash64`
     * pins seed=42; MinHash needs one independent hash per permutation.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedDataset
 import graft.StateMode
+import graft.functions.SimhashKernel
 import graft.functions.VectorFunctions.cosine_sim
 import graft.sources.Tables
 
@@ -311,17 +312,22 @@ object Dedup {
         graft.functions.MinhashSigAgg.minhash_sig(col("h0"), SeedBase, NumPerms).as("sig"),
         count(lit(1)).as("n"))
 
-  /** (doc_id, band_idx, band_key) LSH banding of a sketch — shared by
-    * the self-join ([[dedupMinhash]]) and two-sided
+  /** (doc_id, band_keys, band_idx, band_key) LSH banding of a sketch
+    * — shared by the self-join ([[dedupMinhash]]) and two-sided
     * ([[dedupIncremental]]) paths. Band keys are codegen'd multi-arg
-    * hashes of the 4 signature columns, not string concats. */
+    * hashes of the 4 signature columns, not string concats; each band
+    * row keeps the doc's whole key array for [[Refine.bucketPairs]]'
+    * pair ownership. */
   private[operators] def bandsOf(sketch: DataFrame): DataFrame = {
     val bandKeys = (0 until Bands).map(b =>
       xxhash64((0 until RowsPerBand).map(r =>
         element_at(col("sig"), b * RowsPerBand + r + 1)): _*))
-    sketch.select(col("doc_id"), posexplode(array(bandKeys: _*)))
-      .withColumnsRenamed(Map("pos" -> "band_idx", "col" -> "band_key"))
+    Refine.bucketRows(sketch.select(col("doc_id"), array(bandKeys: _*).as("band_keys")),
+      BandBucket)
   }
+
+  /** The bucket columns of [[bandsOf]], for [[Refine.bucketPairs]]. */
+  private val BandBucket = ("band_idx", "band_key", "band_keys")
 
   /** MinHash + LSH near-dup pairs, exact-verified.
     * Banding: 16 bands × 4 rows ⇒ P(candidate) = 1-(1-j⁴)¹⁶ — at
@@ -343,7 +349,7 @@ object Dedup {
     val sketch = minhashSketch(spark, dir)
       .persistScoped()
     val bands = bandsOf(sketch)
-    val cands = Refine.bucketPairs(bands, bands, ("band_idx", "band_key"), "doc_id",
+    val cands = Refine.bucketPairs(bands, bands, BandBucket, "doc_id",
       Some(_ < _))((a, b) => Seq(a.as("doc_a"), b.as("doc_b")))
     minhashVerified(spark, dir, sketch, cands, ("doc_a", "doc_b"))
   }
@@ -403,17 +409,36 @@ object Dedup {
       .persistScoped()
     val bands = bandsOf(sketch)
     val cands = Refine.bucketPairs(bands.filter(col("doc_id") % 10 === 0),
-        bands.filter(col("doc_id") % 10 =!= 0), ("band_idx", "band_key"), "doc_id",
+        bands.filter(col("doc_id") % 10 =!= 0), BandBucket, "doc_id",
         None)((a, b) => Seq(a.as("doc_new"), b.as("doc_old")))
     minhashVerified(spark, dir, sketch, cands, ("doc_new", "doc_old"))
   }
 
-  /** 64-bit SimHash per doc (token-frequency weighted), plus near-dup
-    * pairs at hamming ≤ 3 found by 4×16-bit pigeonhole banding — the
-    * standard crawl-dedup configuration: a pair within hamming 3 must
-    * agree exactly on ≥1 of 4 disjoint chunks, so a bucket-join finds
-    * all of them without an all-pairs scan; bit_count(xor)
-    * verification removes chunk-collision false positives.
+  /** The (doc_id, simhash) fingerprint table: 64-bit SimHash per doc,
+    * token-frequency weighted, one [[graft.functions.Simhash]] kernel
+    * call per document over its tokens, so the table is a projection
+    * of the scan with no shuffle. A token's hash is the first 8 bytes
+    * of its MD5 as a long, the form the DuckDB oracle replays
+    * chunk-wise from the hex digest. A document without tokens has no
+    * fingerprint and no row: the filter is on the token count, which
+    * Catalyst pushes down to the scan, so each document is tokenized
+    * twice but hashed once. */
+  def simhashes(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("doc_id"), TextAnalysis.toksOf(col("text")).as("toks"))
+      .filter(size(col("toks")) > 0)
+      .select(col("doc_id"), SimhashKernel.simhash(col("toks")).as("simhash"))
+
+  /** Near-dup pairs at hamming ≤ 3 over [[simhashes]], found by
+    * 4×16-bit pigeonhole banding — the standard crawl-dedup
+    * configuration: a pair within hamming 3 must agree exactly on ≥1
+    * of 4 disjoint chunks, so the chunk join ([[Refine.bucketPairs]])
+    * finds all of them without an all-pairs scan, and the
+    * bit_count(xor) predicate inside it removes chunk-collision false
+    * positives. Oracle-gated end to end: the DuckDB SQL replays
+    * tokenize → weights → bit votes → chunk banding → hamming, so the
+    * registered row checks the simhash operator itself, not just row
+    * counts.
     *
     * Operating point measured on the fixture: planted shingle-level
     * near-dups sit at hamming 0–5 but the corpus's token-frequency
@@ -422,58 +447,16 @@ object Dedup {
     * shingle-Jaccard ground truth is ~0.6 — SimHash's documented
     * weakness vs MinHash when near-dup is defined on shingles, which
     * is why both operators exist. */
-  private def tokenWeights(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(TextAnalysis.toksOf(col("text"))).as("tok"))
-      .groupBy("doc_id", "tok")
-      .agg(count(lit(1)).as("w"))
-
-  /** 64-bit token hash from the md5 hex prefix: top 32 bits from hex
-    * chars 1-8, low 32 from 9-16. Each half parses as an unsigned
-    * 32-bit value (fits a signed long), then shiftleft wraps the high
-    * half through the sign bit — bit-identical to what DuckDB
-    * reproduces chunk-wise ('0x…'::BIGINT, no 64-bit shift needed
-    * there): a hex round-trip per token buys a fingerprint the
-    * oracle can replay. */
-  private def md5Hash64(tok: Column): Column = {
-    val m = md5(tok.cast("binary"))
-    val hi = conv(substring(m, 1, 8), 16, 10).cast("long")
-    val lo = conv(substring(m, 9, 8), 16, 10).cast("long")
-    shiftleft(hi, 32).bitwiseOR(lo)
-  }
-
-  /** The (doc_id, simhash) fingerprint table. A custom
-    * TypedImperativeAggregate folds the votes: one 64-lane buffer
-    * instead of 64 conditional sum expressions (see SimhashAgg
-    * scaladoc). */
-  def simhashes(spark: SparkSession, dir: String): DataFrame =
-    tokenWeights(spark, dir).withColumn("h", md5Hash64(col("tok")))
-      .groupBy("doc_id")
-      .agg(graft.functions.SimhashAgg.simhash_agg(col("h"), col("w")).as("simhash"))
-
-  /** Near-dup pairs over [[simhashes]], oracle-gated end to end: the
-    * DuckDB SQL replays tokenize → weights → bit votes → chunk
-    * banding → hamming, so the registered row checks the simhash
-    * operator itself, not just row counts. */
-  def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    simhashPairs(simhashes(spark, dir))
-
-  /** 4×16-bit pigeonhole banding + hamming ≤ 3 over any fingerprint
-    * table (doc_id, simhash). */
-  private def simhashPairs(sh: DataFrame): DataFrame = {
-    val chunks = sh.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(c =>
-        shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL)): _*)))
-      .withColumnsRenamed(Map("pos" -> "chunk_idx", "col" -> "chunk_key"))
-    chunks.as("x")
-      .join(chunks.as("y"),
-        col("x.chunk_idx") === col("y.chunk_idx") &&
-          col("x.chunk_key") === col("y.chunk_key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= 3)
+  def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
+    val chunkKeys = array((0 until 4).map(c =>
+      shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL)): _*)
+    val chunk = ("chunk_idx", "chunk_key", "chunk_keys")
+    val chunks = Refine.bucketRows(
+      simhashes(spark, dir).select(col("doc_id"), col("simhash"), chunkKeys.as("chunk_keys")), chunk)
+    val hamming = bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long")
+    Refine.bucketPairs(chunks, chunks, chunk, "doc_id",
+        Some((a, b) => a < b && hamming <= 3))(
+        (a, b) => Seq(a.as("doc_a"), b.as("doc_b"), hamming.as("hamming")))
   }
 
   /** Embedding dedup LSH operating point: 32 tables × 4-bit keys.
@@ -486,9 +469,9 @@ object Dedup {
   private val EmbTables = 32
   private val EmbBits = 4
 
-  /** Sign-LSH candidate pairs (vec_a < vec_b, distinct) over an
+  /** Sign-LSH candidate pairs (vec_a < vec_b, each once) over an
     * arbitrary (vec_id, embedding) relation and banding scheme: the
-    * [[Refine.bucketPairs]] self-join of [[Similarity.embeddingTaggedOf]].
+    * [[Refine.bucketPairs]] self-join of [[Similarity.embeddingKeyedOf]].
     * At real near-dup thresholds the right operating point is FEW
     * tables × LONG keys (e.g. 8×16 — random pairs collide at
     * ~2⁻¹⁶/table while cos ≥ 0.99 pairs still share a table w.h.p.),
@@ -496,8 +479,8 @@ object Dedup {
     * resulting candidate volume is ≪ n²/2 with zero lost pairs. */
   private[graft] def embeddingCandidatesOf(
       emb: DataFrame, nTables: Int, bits: Int): DataFrame = {
-    val tagged = Similarity.embeddingTaggedOf(emb, nTables, bits)
-    Refine.bucketPairs(tagged, tagged, Similarity.SignBucket, "vec_id",
+    val keyed = Similarity.embeddingKeyedOf(emb, nTables, bits)
+    Refine.bucketPairs(keyed, keyed, Similarity.SignBucket, "vec_id",
       Some(_ < _))((a, b) => Seq(a.as("vec_a"), b.as("vec_b")))
   }
 
@@ -513,8 +496,10 @@ object Dedup {
     * codegen'd cosine expression, so every surviving pair is exact.
     *
     * Scale shape: no BroadcastNestedLoopJoin — the candidate join
-    * shuffles narrow (table, key, id) tuples, partitioned by bucket
-    * key, spillable and AQE-skew-splittable. The candidates are the
+    * shuffles narrow (table, key, id, key-array) rows, partitioned by
+    * bucket key, spillable and AQE-skew-splittable, and emits each
+    * pair once from the first table it shares, so no pair aggregate
+    * follows it. The candidates are the
     * Σ bucket² side, so vectors attach through the size-gated
     * broadcast ([[Similarity.vecHinted]], the r16 descent-build
     * lesson) and the pair shuffle carries ids, never vectors. Honest

@@ -5,20 +5,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The filter-and-refine skeleton of the dedup and vector-search
-  * families: generate candidates from bucket collisions, dedup the
-  * pairs, verify them exactly, then keep by threshold or per-key
+  * families: generate candidates from bucket collisions, each pair
+  * once, verify them exactly, then keep by threshold or per-key
   * top-k. It is the partition/filter → exact-refine split of Odyssey
   * (VLDB 2023) and REPOSE (ICDE 2021).
   *
   * The blocks cover the candidate and keep stages; exact scoring stays
   * with each operator, because the score (cosine, lattice L2, Jaccard
-  * over re-derived shingles) is what distinguishes them. Each block
-  * builds exactly the plan its callers used to hand-roll, so a site
-  * moves onto it without changing output or plan.
+  * over re-derived shingles, hamming) is what distinguishes them.
   *
   * Sites that stay bespoke, and why:
-  *  - `Dedup.simhashPairs` verifies hamming distance inside the chunk
-  *    join;
   *  - `neighborGraph`'s topM drops duplicate pairs with a lag over its
   *    rank window before the keep;
   *  - rank-1 argmax picks filter `= 1` and keep-flag columns keep every
@@ -26,22 +22,47 @@ import org.apache.spark.sql.functions._
   *  - `dedupFuzzy`, `simjoinPrefix` and the PQ/ADC candidate code are
   *    later migrations. */
 private[operators] object Refine {
+  import graft.functions.VectorFunctions.first_shared
 
-  /** Distinct id pairs of two bucket-tagged frames that share a
-    * bucket: `x ⋈ y` on both `bucket` columns (index, key), filtered
-    * by `pred` over (x id, y id) — `<` for unordered self-join pairs,
-    * `=!=` for ordered ones, none for a two-sided join — and projected
-    * by `out`. The join shuffles only (index, key, id) tuples, and a
-    * pair that collides in several buckets comes out once. */
-  def bucketPairs(x: DataFrame, y: DataFrame, bucket: (String, String), id: String,
+  /** Id pairs of two bucket-tagged frames that share a bucket, each
+    * pair exactly once: `x ⋈ y` on both `bucket` index and key
+    * columns, filtered by `pred` over (x id, y id) — `<` for unordered
+    * self-join pairs, `=!=` for ordered ones, none for a two-sided
+    * join — and projected by `out`. The sides are aliased `x` and `y`,
+    * so `pred` and `out` may also read any other column of either side
+    * as `col("x.c")` / `col("y.c")`.
+    *
+    * Ownership instead of a pair distinct: every row also carries its
+    * id's whole key array (`bucket._3`), and a pair that meets in
+    * several buckets is kept only from the first one it shares,
+    * `first_shared(x.keys, y.keys) = x.index`. So the join emits each
+    * pair once and no aggregate folds duplicates back. Precondition:
+    * each id has one key array, and on each of its rows
+    * `keys[index] = key`. */
+  def bucketPairs(x: DataFrame, y: DataFrame, bucket: Bucket, id: String,
       pred: Option[(Column, Column) => Column])(
       out: (Column, Column) => Seq[Column]): DataFrame = {
     val (xi, yi) = (col(s"x.$id"), col(s"y.$id"))
-    val (idx, key) = bucket
-    val onBucket = col(s"x.$idx") === col(s"y.$idx") && col(s"x.$key") === col(s"y.$key")
-    x.as("x").join(y.as("y"), pred.fold(onBucket)(p => onBucket && p(xi, yi)))
+    val (idx, key, keys) = bucket
+    val owned = col(s"x.$idx") === col(s"y.$idx") && col(s"x.$key") === col(s"y.$key") &&
+      first_shared(col(s"x.$keys"), col(s"y.$keys")) === col(s"x.$idx")
+    x.as("x").join(y.as("y"), pred.fold(owned)(p => owned && p(xi, yi)))
       .select(out(xi, yi): _*)
-      .distinct()
+  }
+
+  /** The (index, key, key-array) column names of a bucket frame. */
+  type Bucket = (String, String, String)
+
+  /** A bucket frame as [[bucketPairs]] takes it: each row of `df`,
+    * whose key array is column `bucket._3`, once per key, with the
+    * key's index and value in `bucket._1` and `bucket._2`. */
+  def bucketRows(df: DataFrame, bucket: Bucket): DataFrame = {
+    val (idx, key, keys) = bucket
+    // explode a slice of the array, not the column itself: over a bare
+    // column Spark infers a size(keys) > 0 filter and pushes it below
+    // the projection that computes the keys, which then run twice
+    df.select(col("*"), posexplode(slice(col(keys), 1, Int.MaxValue)))
+      .withColumnsRenamed(Map("pos" -> idx, "col" -> key))
   }
 
   /** Ring-bounded bucket-mate pairs of a (vec_id, table_idx,

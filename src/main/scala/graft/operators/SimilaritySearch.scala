@@ -521,8 +521,9 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
 
   /** The (vec_id, table_idx, table_key) sign-bucket frame of an
     * (vec_id, embedding) relation at a (tables × bits) operating
-    * point — the candidate input of every sign-LSH operator; the ANN
-    * family uses [[NTables]] × [[BitsPerTable]]. */
+    * point — the input of the ring-bounded sign-LSH candidates
+    * ([[Refine.ringPairs]]); the ANN family uses [[NTables]] ×
+    * [[BitsPerTable]]. */
   private[operators] def embeddingTaggedOf(
       emb: DataFrame, nTables: Int, bits: Int): DataFrame = {
     import emb.sparkSession.implicits._
@@ -535,8 +536,20 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       .toDF("vec_id", "table_idx", "table_key")
   }
 
-  /** The bucket columns of [[embeddingTaggedOf]], for [[Refine.bucketPairs]]. */
-  private[operators] val SignBucket = ("table_idx", "table_key")
+  /** The (vec_id, table_keys, table_idx, table_key) frame of the same
+    * keys: one row per table, each carrying the vector's whole key
+    * array, as [[Refine.bucketPairs]] needs for pair ownership. */
+  private[operators] def embeddingKeyedOf(
+      emb: DataFrame, nTables: Int, bits: Int): DataFrame = {
+    import emb.sparkSession.implicits._
+    val ps = makePlanes(nTables * bits)
+    Refine.bucketRows(emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .map(r => (r._1, signKeys(r._2, ps, nTables, bits)))
+      .toDF("vec_id", "table_keys"), SignBucket)
+  }
+
+  /** The bucket columns of [[embeddingKeyedOf]], for [[Refine.bucketPairs]]. */
+  private[operators] val SignBucket = ("table_idx", "table_key", "table_keys")
 
   /** LSH-bucketed ANN: candidates are vectors sharing ≥1 of 16 table
     * keys with the broadcast query set ([[Refine.bucketPairs]]),
@@ -545,9 +558,9 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * asserted in PipelineOpsSpec on the fixed-seed fixtures. */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val tagged = embeddingTaggedOf(e, NTables, BitsPerTable)
-    val candPairs = Refine.bucketPairs(tagged,
-        broadcast(tagged.filter(col("vec_id") < NQueries)), SignBucket, "vec_id",
+    val keyed = embeddingKeyedOf(e, NTables, BitsPerTable)
+    val candPairs = Refine.bucketPairs(keyed,
+        broadcast(keyed.filter(col("vec_id") < NQueries)), SignBucket, "vec_id",
         Some(_ =!= _))((c, q) => Seq(q.as("qid"), c.as("nid")))
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -1028,13 +1041,14 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * candidate graph knn_join gates (no all-pairs; candidates =
     * bucket-mates), so the oracle replays planes → keys → candidates
     * → lattice distances end to end. Scale shape: the candidate join
-    * ([[Refine.bucketPairs]]) shuffles (table, key, id) tuples only;
+    * ([[Refine.bucketPairs]]) shuffles (table, key, id, key-array)
+    * rows and emits each pair once, with no pair distinct;
     * distances attach by two equi-joins on the surviving pairs; the
     * rank window is keyed by qid; the final fold is 10 rows. */
   def twonnRatio(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val tagged = embeddingTaggedOf(e, NTables, BitsPerTable)
-    val cand = Refine.bucketPairs(tagged, tagged, SignBucket, "vec_id",
+    val keyed = embeddingKeyedOf(e, NTables, BitsPerTable)
+    val cand = Refine.bucketPairs(keyed, keyed, SignBucket, "vec_id",
       Some(_ =!= _))((a, b) => Seq(a.as("qid"), b.as("nid")))
     val lat = e.select(col("vec_id"), latArrCol(col("embedding")).as("q"))
     val d = aggregate(zip_with(col("qq"), col("nq"), (x, y) => (x - y) * (x - y)),
@@ -1268,17 +1282,18 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   private[graft] def knnJoinCapped(spark: SparkSession, dir: String,
       bucketCap: Int): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val tagged = embeddingTaggedOf(e, NTables, BitsPerTable)
     def attach(pairs: DataFrame): DataFrame = pairs
       .join(vecHinted(e.select(col("vec_id").as("nid"), col("embedding").as("ne"))), "nid")
       .join(vecHinted(e.select(col("vec_id").as("qid"), col("embedding").as("qe"))), "qid")
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
     val scored = if (bucketCap == Int.MaxValue) {
-      // historical unbounded branch: global pair distinct, then
-      // score + rank — the Σ bucket² mass this shape shuffles is the
-      // measured ENOSPC class at 100×; kept as the reference
-      // EdgeCaseSpec holds the ring cap to
-      attach(Refine.bucketPairs(tagged, tagged, SignBucket, "vec_id",
+      // historical unbounded branch: every bucket-mate pair once
+      // (owned by its first shared table), then score + rank — the
+      // Σ bucket² mass this shape shuffles is the measured ENOSPC
+      // class at 100×; kept as the reference EdgeCaseSpec holds the
+      // ring cap to
+      val keyed = embeddingKeyedOf(e, NTables, BitsPerTable)
+      attach(Refine.bucketPairs(keyed, keyed, SignBucket, "vec_id",
         Some(_ =!= _))((a, b) => Seq(a.as("qid"), b.as("nid"))))
     } else {
       // r18 rework (the dedup_fuzzy lesson re-applied): the global
@@ -1296,6 +1311,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       // ≤ NTables·K rows per query reach any exchange. Cross-table
       // duplicates then dedup at winner scale (≤ 16·K·n rows, vs 350M
       // before) ahead of the global rank.
+      val tagged = embeddingTaggedOf(e, NTables, BitsPerTable)
       Refine.topK(attach(Refine.ringPairs(tagged, bucketCap, ("qid", "nid"))),
           Seq("table_idx", "qid"), ByCos, KnnK, "rt", longRank = false)
         .select(col("qid"), col("nid"), col("cos"))

@@ -318,7 +318,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("dedup_embedding_tight: vectors attach by broadcast; embeddings never key-shuffle") {
     // the r18 registered τ≥0.8 gate: candidate generation shuffles
-    // (table, key, id) tuples only; the confirm side attaches the
+    // (table, key, id, key-array) rows only; the confirm side attaches the
     // planted corpus's vectors through the vecHinted size gate — a
     // sort-merge here would drag embeddings per candidate pair
     val p = plan("dedup_embedding_tight")
@@ -326,7 +326,76 @@ class PlanAuditSpec extends AnyFunSuite {
       "both vector-attach joins must broadcast under the size gate")
     assert(!p.linesIterator.exists(l => l.contains("Exchange hashpartitioning")
         && l.contains("embedding")),
-      "embeddings must never key-shuffle — only (table, key, id) tuples do")
+      "embeddings must never key-shuffle — only (table, key, id, key-array) rows do")
+  }
+
+  /** The inputs of a physical-plan node, looking through AQE wrappers
+    * and into the plans of cached relations. */
+  private def inputs(p: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }
+  }
+
+  /** Root-first path from `p` to each node `pick` selects. */
+  private def pathsTo(p: org.apache.spark.sql.execution.SparkPlan)(
+      pick: org.apache.spark.sql.execution.SparkPlan => Boolean)
+      : Seq[List[org.apache.spark.sql.execution.SparkPlan]] =
+    (if (pick(p)) Seq(List(p)) else Nil) ++ inputs(p).flatMap(pathsTo(_)(pick)).map(p :: _)
+
+  /** Root-first paths to the op's bucket joins: the joins keyed on a
+    * bucket index column of `Refine.bucketPairs`' callers. */
+  private def bucketJoinPaths(name: String) = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val idx = Set("band_idx", "table_idx", "chunk_idx")
+    val p = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
+    graft.CacheScope.release(blocking = true)
+    val paths = pathsTo(p) {
+      case j: BaseJoinExec => j.leftKeys.exists { case a: Attribute => idx(a.name); case _ => false }
+      case _ => false
+    }
+    assert(paths.nonEmpty, s"$name plans no bucket join")
+    paths
+  }
+
+  test("bucket joins emit each pair once: no pair aggregate above dedup_embedding/minhash/simhash's bucket join") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    // Refine.bucketPairs keeps a pair only from the first bucket it
+    // shares, so nothing regroups the join's output by pair before
+    // the next join (or the op's end)
+    val regrouped = for {
+      name <- Seq("dedup_embedding", "dedup_minhash", "dedup_simhash")
+      path <- bucketJoinPaths(name)
+      agg <- path.reverse.tail.takeWhile(inputs(_).size == 1)
+        .collectFirst { case a: BaseAggregateExec => a }
+    } yield s"$name: ${agg.simpleString(200)}"
+    assert(regrouped.isEmpty, s"aggregates above a bucket join:\n${regrouped.mkString("\n")}")
+  }
+
+  test("dedup_simhash plans no Exchange below its chunk join: the fingerprint is a projection of the scan") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
+    // below the join's own input exchanges, only the scan's fan-out
+    // repartition (Tables.documents on few files) may shuffle
+    def ownInputs(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: SortExec | _: Exchange => inputs(p).flatMap(ownInputs)
+      case _ => Seq(p)
+    }
+    def below(p: SparkPlan): Seq[SparkPlan] = p +: inputs(p).flatMap(below)
+    bucketJoinPaths("dedup_simhash").foreach { path =>
+      val stray = inputs(path.last).flatMap(ownInputs).flatMap(below).filter {
+        case e: ShuffleExchangeExec => e.shuffleOrigin != REPARTITION_BY_NUM
+        case _: Exchange => true
+        case _ => false
+      }
+      assert(stray.isEmpty, s"dedup_simhash shuffles below its chunk join:\n${stray.mkString("\n")}")
+    }
   }
 
   test("knn_join plans rank-limit pushdown; embed_q8 plans no wide shuffle at all") {

@@ -446,9 +446,17 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   // -- the Refine skeleton's contract on planted ties and collisions --
 
+  /** (vec_id, table_idx, table_key, table_keys) bucket rows, as
+    * [[Refine.bucketPairs]] takes them: each id's key array holds its
+    * key in every table it has a row for, and a null, which equals
+    * nothing, in the tables it lacks. */
   private def tagged(rows: (Long, Int, Int)*) = {
     import spark.implicits._
-    rows.toDF("vec_id", "table_idx", "table_key").repartition(4)
+    val nTables = rows.map(_._2).max + 1
+    val keys = rows.groupBy(_._1).map { case (id, rs) =>
+      id -> (0 until nTables).map(t => rs.collectFirst { case (_, `t`, k) => k }) }
+    rows.map { case (id, t, k) => (id, t, k, keys(id)) }
+      .toDF("vec_id", "table_idx", "table_key", "table_keys").repartition(4)
   }
 
   test("Refine.topK: equal cosines rank the lower id first, rank is a long") {
@@ -488,6 +496,47 @@ class PipelineOpsSpec extends AnyFunSuite {
         (a, b) => Seq(a.as("a"), b.as("b")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(cross === Seq((1L, 2L), (1L, 3L)))
+  }
+
+  test("property: Refine.bucketPairs equals join + distinct, and emits no pair twice") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.col
+    import org.scalacheck.{Gen, Prop, Test}
+    // 2–10 ids over 1–8 tables with 1–3 keys per table, so most pairs
+    // collide in several tables; an id lacks a table's row 1 time in 6
+    val keyVectors = for {
+      nTables <- Gen.choose(1, 8)
+      alphabet <- Gen.choose(1, 3)
+      nIds <- Gen.choose(2, 10)
+      key = Gen.frequency(5 -> Gen.choose(0, alphabet - 1).map(Option(_)), 1 -> Gen.const(None))
+      ks <- Gen.listOfN(nIds, Gen.listOfN(nTables, key))
+    } yield ks
+    type Row = (Long, Int, Int)
+    def reference(xs: Seq[Row], ys: Seq[Row], p: (Long, Long) => Boolean) =
+      (for (a <- xs; b <- ys if a._2 == b._2 && a._3 == b._3 && p(a._1, b._1))
+        yield (a._1, b._1)).distinct.sorted
+    def pairs(x: org.apache.spark.sql.DataFrame, y: org.apache.spark.sql.DataFrame,
+        pred: Option[(Column, Column) => Column]) =
+      Refine.bucketPairs(x, y, Similarity.SignBucket, "vec_id", pred)(
+          (a, b) => Seq(a.as("a"), b.as("b")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val prop = Prop.forAll(keyVectors) { ks =>
+      val rows = for ((v, i) <- ks.zipWithIndex; (k, t) <- v.zipWithIndex; key <- k)
+        yield (i.toLong, t, key)
+      if (rows.isEmpty) Prop.passed
+      else {
+        val t = tagged(rows: _*)
+        val (even, odd) = rows.partition(_._1 % 2 == 0)
+        val checks = Seq(
+          "<" -> (pairs(t, t, Some(_ < _)) == reference(rows, rows, _ < _)),
+          "=!=" -> (pairs(t, t, Some(_ =!= _)) == reference(rows, rows, _ != _)),
+          "two-sided" -> (pairs(t.filter(col("vec_id") % 2 === 0), t.filter(col("vec_id") % 2 =!= 0),
+            None) == reference(even, odd, (_, _) => true)))
+        checks.foldLeft(Prop.passed) { case (acc, (name, ok)) => acc && (Prop(ok) :| s"$name on $ks") }
+      }
+    }
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(r.passed, org.scalacheck.util.Pretty.pretty(r))
   }
 
   test("Refine.ringPairs: at most 2·cap ring partners per vector and table") {

@@ -1,8 +1,12 @@
 package graft.mr
 
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.functions.{col, xxhash64}
 
 import graft.functions.TextFunctions
 
@@ -27,13 +31,15 @@ object TabCodec {
   * through a user map binary emitting `key\tvalue` lines → hash-
   * partition by key into R partitions (`mapper.cc:91–93`) → unsorted
   * concat per partition (`reducer.cc:56–66`) → pipe through a user
-  * reduce binary → concat outputs. Here the same semantics are one
-  * declarative chain: `flatMap → groupByKey → flatMapGroups`. Spark's
-  * shuffle gives the identical guarantee the reference relies on
-  * (equal keys co-located, no ordering), plus what it lacks: spill to
-  * disk instead of in-memory partition buffers, and map-side combine
-  * when the reduce is algebraic (write it declaratively, as
-  * [[graft.operators.TextOps.wordcount]] does).
+  * reduce binary → concat outputs. Here: `flatMap` → project
+  * `(h = xxhash64(k), k, v)` → hash-repartition on `h` → sort each
+  * partition on the one `LongType` column `h` (Spark's radix sort: no
+  * key string is ever compared) → stream each run of equal `h` through
+  * [[HashRunReduce]]. Equal keys are co-located and every key is
+  * reduced once with all of its values, the guarantee the reference
+  * relies on (it promises no key order either); unlike it, the sort
+  * spills to disk instead of buffering partitions in memory, and a
+  * key's values are never held in memory at once.
   *
   * Scale notes (100 TB): `run` shuffles every mapped pair — exactly
   * the reference's behavior. For algebraic reducers prefer the
@@ -51,14 +57,82 @@ final case class MapReduceJob(
     * reference, which has no combiner — SURVEY.md §4). Result is an
     * unordered bag of (key, value) pairs. */
   def run(input: Dataset[String]): Dataset[(String, String)] = {
-    implicit val enc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    val mapped = input.flatMap(map)(enc)
-    val m = map; val r = reduce // avoid capturing `this` in closures
-    mapped
-      .groupByKey(_._1)(Encoders.STRING)
-      .flatMapGroups((k: String, it: Iterator[(String, String)]) =>
-        r(k, it.map(_._2)).iterator)(enc)
+    val enc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
+    val r = reduce // avoid capturing `this` in the closure
+    input.flatMap(map)(enc)
+      .select(xxhash64(col("_1")).as("h"), col("_1").as("k"), col("_2").as("v"))
+      .repartition(col("h"))
+      .sortWithinPartitions("h")
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.STRING))
+      .mapPartitions(rows => new HashRunReduce(rows, r))(enc)
   }
+}
+
+/** Reduces `(h, k, v)` rows sorted on `h = hash(k)`, streaming.
+  *
+  * Each run of equal `h` belongs to its first key, whose values stream
+  * lazily into `reduce`; a row of the run with a different key is a
+  * 64-bit hash collision and goes to a per-run stash grouped by key,
+  * each stashed key reduced after the first. So every key is reduced
+  * exactly once with all of its values whether or not hashes are
+  * unique, and without a collision nothing is buffered. The reducer's
+  * output is streamed too; values it leaves unread are drained before
+  * the next key. Keys compare with `==`, so null keys group together.
+  */
+private[mr] final class HashRunReduce(
+    rows: Iterator[(Long, String, String)],
+    reduce: (String, Iterator[String]) => IterableOnce[(String, String)])
+    extends Iterator[(String, String)] {
+
+  private val in = rows.buffered
+  private var run: Run = null
+  private var collided: Iterator[(String, ArrayBuffer[String])] = Iterator.empty
+  private var out: Iterator[(String, String)] = Iterator.empty
+
+  /** The first key's values in the run of `h` that `first` opens. */
+  private final class Run(h: Long, key: String, first: String) extends Iterator[String] {
+    /** The run's other keys, in arrival order, with their values. */
+    val stash = mutable.LinkedHashMap.empty[String, ArrayBuffer[String]]
+    private var pending = first
+    private var hasPending = true
+    def hasNext: Boolean = {
+      while (!hasPending && in.hasNext && in.head._1 == h) {
+        val (_, k, v) = in.next()
+        if (k == key) { pending = v; hasPending = true }
+        else stash.getOrElseUpdate(k, ArrayBuffer.empty) += v
+      }
+      hasPending
+    }
+    def next(): String = {
+      if (!hasNext) throw new NoSuchElementException("next on an exhausted key's values")
+      hasPending = false
+      val v = pending
+      pending = null
+      v
+    }
+  }
+
+  def hasNext: Boolean = {
+    while (!out.hasNext) {
+      if (run != null) {
+        run.foreach(_ => ())
+        collided = run.stash.iterator
+        run = null
+      }
+      if (collided.hasNext) {
+        val (k, vs) = collided.next()
+        out = reduce(k, vs.iterator).iterator
+      } else if (in.hasNext) {
+        val (h, k, v) = in.next()
+        run = new Run(h, k, v)
+        out = reduce(k, run).iterator
+      } else return false
+    }
+    true
+  }
+
+  def next(): (String, String) =
+    if (hasNext) out.next() else throw new NoSuchElementException("next on an exhausted reduce")
 }
 
 object MapReduceJob {

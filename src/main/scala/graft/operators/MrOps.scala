@@ -7,8 +7,9 @@ import graft.mr.MapReduceJob
 import graft.sources.Tables
 
 /** The MR-parity library run as an engine query: wordcount through
-  * `flatMap → groupByKey → flatMapGroups` with the reference's exact
-  * map/reduce UDF semantics (`cpp/worker/map.cc`, `cpp/worker/
+  * [[MapReduceJob.run]] (every pair hash-shuffled on `xxhash64(key)`,
+  * sorted on that hash and reduced run by run) with the reference's
+  * exact map/reduce UDF semantics (`cpp/worker/map.cc`, `cpp/worker/
   * reduce.cc`). Same oracle as the declarative `wordcount` — the two
   * paths must agree, which is also asserted in MapReduceSpec.
   */

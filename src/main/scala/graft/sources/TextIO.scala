@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 
 import graft.mr.TabCodec
 
@@ -9,7 +9,7 @@ import graft.mr.TabCodec
   *
   * - Source: line-oriented UTF-8 text shards. One reference shard =
   *   one map task; here shard sizing maps to
-  *   `spark.sql.files.maxPartitionBytes` (set per-read below), and a
+  *   `spark.sql.files.maxPartitionBytes` (scoped to each read below), and a
   *   directory of shards reads as one Dataset.
   * - Sink: the reference concatenates reducer outputs to `final.txt`
   *   (`ControlServiceImpl.java:397–427`) because its only data plane
@@ -30,8 +30,14 @@ object TextIO {
     if (path.startsWith("http://") || path.startsWith("https://"))
       readHttpShards(spark, Seq(path))
     else {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", s"${shardMb}m")
-      spark.read.textFile(path)
+      // the scan plans its splits when its RDD is built, so build it
+      // under the shard size and give the session its setting back
+      val key = "spark.sql.files.maxPartitionBytes"
+      val prev = spark.conf.getAll.get(key)
+      spark.conf.set(key, s"${shardMb}m")
+      val lines = try spark.read.textFile(path).rdd
+        finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      spark.createDataset(lines)(Encoders.STRING)
     }
 
   /** Fetch each shard URL inside its own task and emit its lines —

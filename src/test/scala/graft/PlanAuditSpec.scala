@@ -398,6 +398,32 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("mr_wordcount groups off one hash exchange and a LongType sort: no typed grouping, no string sort") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.types.LongType
+    // MapReduceJob.run: flatMap → (xxhash64(k), k, v) → repartition on
+    // the hash → sort on the hash alone (radix-sortable) → mapPartitions
+    val p = SparkEntry.queries("mr_wordcount")(spark, dir).queryExecution.executedPlan
+    graft.CacheScope.release(blocking = true)
+    def below(p: SparkPlan): Seq[SparkPlan] = p +: inputs(p).flatMap(below)
+    val nodes = below(p)
+    val grouping = nodes.filter(n => n.nodeName.startsWith("AppendColumns") || n.nodeName == "MapGroups")
+    assert(grouping.isEmpty, s"mr_wordcount plans typed grouping:\n${grouping.mkString("\n")}")
+    // the scan's fan-out repartition (Tables.documents on few files) aside
+    val shuffles = nodes.filter {
+      case e: ShuffleExchangeExec => e.shuffleOrigin != REPARTITION_BY_NUM
+      case _: Exchange => true
+      case _ => false
+    }
+    assert(shuffles.size === 1, s"mr_wordcount must shuffle once:\n${shuffles.mkString("\n")}")
+    val sorts = nodes.collect { case s: SortExec => s }
+    assert(sorts.nonEmpty, "mr_wordcount plans no sort")
+    sorts.foreach { s =>
+      assert(s.sortOrder.map(_.dataType) === Seq(LongType), s"not a sort on one LongType column: ${s.simpleString(200)}")
+    }
+  }
+
   test("knn_join plans rank-limit pushdown; embed_q8 plans no wide shuffle at all") {
     val kp = plan("knn_join")
     assert(kp.contains("WindowGroupLimit"),

@@ -72,6 +72,57 @@ class MapReduceSpec extends AnyFunSuite {
     }
   }
 
+  test("property: run equals the groupByKey/flatMapGroups form at R in {1, 4, 7}, AQE on and off") {
+    import org.apache.spark.sql.{Dataset, Encoders}
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    // the form `run` replaced: Spark's typed grouping, which sorts every
+    // pair by its key string
+    def reference(job: MapReduceJob, in: Dataset[String]): Dataset[(String, String)] = {
+      val enc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
+      val r = job.reduce
+      in.flatMap(job.map)(enc).groupByKey(_._1)(Encoders.STRING)
+        .flatMapGroups((k: String, it: Iterator[(String, String)]) => r(k, it.map(_._2)).iterator)(enc)
+    }
+    // the map is the first-tab codec; a `\N` key stands for a null key
+    val decode: String => Iterator[(String, String)] = l =>
+      TabCodec.decode(l).iterator.map { case (k, v) => (if (k == "\\N") null else k, v) }
+    val identityReduce: (String, Iterator[String]) => Iterator[(String, String)] =
+      (k, vs) => vs.map(v => (k, v))
+    val jobs = Seq("identity" -> MapReduceJob(decode, identityReduce),
+      "sumLongs" -> MapReduceJob(decode, MapReduceJob.sumLongs))
+    val keyChars = Gen.oneOf('a', 'b', 'Z', '0', ' ', 'é', 'ß', '日', '\u0130')
+    val key = Gen.frequency(6 -> Gen.stringOf(keyChars).map(_.take(4)), 1 -> Gen.const(""),
+      1 -> Gen.const("\\N"), 1 -> Gen.const("ünïcødé"), 1 -> Gen.const("🙂"))
+    val value = Gen.frequency(4 -> Gen.choose(-50L, 50L).map(_.toString),
+      1 -> Gen.const("x\t7"), 1 -> Gen.const("12\tjunk\t"), 1 -> Gen.alphaStr.map(_.take(3)))
+    val lines = for {
+      n <- Gen.choose(0, 150)
+      ls <- Gen.listOfN(n, Gen.zip(Gen.frequency(2 -> Gen.const("hot"), 3 -> key), value))
+    } yield ls.map { case (k, v) => TabCodec.encode(k, v) }
+    def bag(xs: Array[(String, String)]) = xs.toSeq.groupBy(identity).map { case (x, g) => x -> g.size }
+    def withConf[T](kvs: (String, String)*)(body: => T): T = {
+      val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val prop = Prop.forAll(lines) { ls =>
+      val in = ls.toDS().repartition(3)
+      jobs.map { case (name, job) =>
+        val want = bag(reference(job, in).collect())
+        val checks = for (r <- Seq("1", "4", "7"); aqe <- Seq("true", "false")) yield {
+          val got = withConf("spark.sql.shuffle.partitions" -> r, "spark.sql.adaptive.enabled" -> aqe)(
+            bag(job.run(in).collect()))
+          Prop(got == want) :| s"$name R=$r AQE=$aqe"
+        }
+        checks.reduce(_ && _)
+      }.reduce(_ && _) :| ls.mkString("lines: [", " | ", "]")
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("map lines without a tab are dropped end-to-end") {
     import spark.implicits._
     val lines = Seq("a", "b", "a").toDS()

@@ -67,6 +67,26 @@ class TextIOSpec extends AnyFunSuite {
     assert(got === lines.toSet)
   }
 
+  test("readLines sizes splits by shardMb and leaves the session's setting as it was") {
+    val tmp = Files.createTempDirectory("graft_split").toString
+    val lines = (1 to 30000).map(i => f"line-$i%06d-" + ("y" * 100))
+    Files.writeString(Paths.get(s"$tmp/input-001.txt"), lines.mkString("", "\n", "\n"))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getAll.get(key)
+    try {
+      for (setting <- Seq(None, Some("64m"))) {
+        setting.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        val ds = TextIO.readLines(spark, tmp, shardMb = 1)
+        assert(spark.conf.getAll.get(key) === setting, "readLines changed the session's split size")
+        // ~3.1 MB in 1 MB splits; a scan under the session's own
+        // setting reads the file as one split
+        assert(ds.rdd.getNumPartitions >= 3, s"setting $setting")
+        assert(spark.read.textFile(tmp).rdd.getNumPartitions === 1, s"setting $setting")
+        assert(ds.collect().toSeq === lines)
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("http shard urls read like the reference's curl-per-shard path") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)

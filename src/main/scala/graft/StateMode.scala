@@ -7,23 +7,24 @@ import graft.CacheScope.ScopedDataset
 /** One deployment switch for the storage that backs every lineage
   * cut the library's iterative operators ship with (ADVICE r15).
   *
-  * Six operator families ship `localCheckpoint` as their measured
-  * per-round state strategy (BFS/diameter, SSSP, HITS, k-core,
-  * k-truss, jaccard-neighbors, the NN-descent build, the CC loops).
+  * The iterative operators ship `localCheckpoint` as their measured
+  * per-round state strategy. Their loops cut in one place,
+  * `graft.operators.Rounds`, which states the rule for where a round
+  * is cut and the measurements behind it; the non-loop cut sites are
+  * `jaccardNeighbors`' input and the CC edge relations.
   * `localCheckpoint` truncates lineage with EXECUTOR-LOCAL,
   * non-reliable storage: on a static single-tenant cluster (and in
   * `local[*]` CI) that is strictly the fastest cut, but executor
-  * loss or dynamic allocation makes the job unrecoverable. Rather
-  * than six independently hard-coded escape hatches, every shipped
-  * cut site routes through [[cut]], and ONE switch re-targets them
-  * all:
+  * loss or dynamic allocation makes the job unrecoverable. Every
+  * shipped cut routes through [[cut]], and ONE switch re-targets
+  * them all:
   *
   *   - `-Dgraft.state.mode=ckpt` (default) — eager
   *     [[graft.CacheScope.ScopedDataset.localCheckpointScoped]]:
   *     lineage cut to a LogicalRDD leaf over executor-local blocks.
   *     The measured winner at every A/B'd site (BFS, SSSP, HITS,
   *     k-core, k-truss, jaccard-neighbors, the NN-descent build —
-  *     see the per-op scaladocs and PLANS.md round 15 for numbers).
+  *     see `Rounds`, `jaccardNeighbors` and PLANS.md round 15).
   *   - `persist` — [[graft.CacheScope.ScopedDataset.persistScoped]]:
   *     no lineage truncation (plans re-grow across rounds; the
   *     pre-r15 behavior), but every block is recomputable — safe

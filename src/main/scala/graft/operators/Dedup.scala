@@ -745,13 +745,10 @@ object Dedup {
     // seed: lab₀ = min(id, min incident neighbour) — one groupBy, the
     // same shuffle a plain distinct() would cost, but it bakes the
     // first propagation round into initialization for free
-    var labels = edges.groupBy(col("doc_a").as("id"))
+    val seeded = Rounds.cut(edges.groupBy(col("doc_a").as("id"))
       .agg(min(col("doc_b")).as("nmin"))
-      .select(col("id"), least(col("id"), col("nmin")).as("lab"))
-      .transform(StateMode.cut(_))
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 32) {
+      .select(col("id"), least(col("id"), col("nmin")).as("lab")))
+    Rounds.untilStable(32, "propagateMinLabels")(seeded) { (labels, round) =>
       // message-union shape: one row per (node, candidate label), one
       // shuffle groupBy computes the min — cheaper than join-back.
       // `own` survives only on the self row (exactly one per id), so
@@ -768,7 +765,7 @@ object Dedup {
       // at most one extra round (correctness is unaffected: the hop
       // only accelerates a monotone min-fixpoint)
       val msgs =
-        if (rounds == 0) self.unionByName(nbrMsg)
+        if (round == 0) self.unionByName(nbrMsg)
         else {
           val hopMsg = labels.select(col("id").as("hid"), col("lab").as("hlab"))
             .join(labels.select(col("id").as("pid"), col("lab").as("plab")),
@@ -777,20 +774,17 @@ object Dedup {
               lit(null).cast("long").as("own"))
           self.unionByName(nbrMsg).unionByName(hopMsg)
         }
-      val next = msgs.groupBy(col("id"))
+      msgs.groupBy(col("id"))
         .agg(min(col("lab")).as("new_lab"), max(col("own")).as("lab"))
-        .transform(StateMode.cut(_, eager = false))
-      // this agg is the action that materializes the lazy checkpoint:
-      // one job per round computes next AND the convergence signal
+    } { (_, next) =>
+      // this agg is the action that materializes the lazy cut: one
+      // job per round computes next AND the convergence signal
       val changed = next
         .agg(sum(when(col("new_lab") < col("lab"), 1L).otherwise(0L)).as("c"))
         .first()
-      converged = changed.isNullAt(0) || changed.getLong(0) == 0L
-      labels = next.select(col("id"), col("new_lab").as("lab"))
-      rounds += 1
+      (next.select(col("id"), col("new_lab").as("lab")),
+        changed.isNullAt(0) || changed.getLong(0) == 0L)
     }
-    require(converged, s"propagateMinLabels: no fixpoint after $rounds rounds")
-    (labels, rounds)
   }
 
   private val SpanK = 5
@@ -944,14 +938,13 @@ object Dedup {
         .union(mins.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v")).distinct()
     }
-    // every round is ONE job: the checkpoint is lazy and the signature
-    // aggregate is the action that materializes it (the same
-    // checkpoint-then-single-action shape as [[propagateMinLabels]] —
+    // every round is ONE job: the cut is lazy and the signature
+    // aggregate is the action that materializes it ([[Rounds.untilStable]];
     // eager checkpoints + a separate signature scan doubled the job
     // count and benched cc_star at 6.2 s; this form runs ~3 s).
     // No per-round repartition: the state is tiny either way, and the
     // extra exchange per round cost more than the task-count it saved.
-    var edges = symmetric(
+    val edges0 = symmetric(
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
         .filter(col("u") =!= col("v")))
       .transform(StateMode.cut(_, eager = false))
@@ -963,19 +956,13 @@ object Dedup {
           lit(java.math.BigDecimal.ZERO)).as("s")).first()
       (r.getLong(0), r.getDecimal(1))
     }
-    var sig = signature(edges)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 48) {
-      val next = symmetric(smallStar(largeStar(edges)))
-        .transform(StateMode.cut(_, eager = false))
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      edges = next
-      sig = nextSig
-      rounds += 1
-    }
-    require(converged, s"ccStarContraction: no fixpoint after $rounds rounds")
+    val ((edges, _), rounds) =
+      Rounds.untilStable(48, "ccStarContraction")((edges0, signature(edges0))) {
+        case ((e, _), _) => symmetric(smallStar(largeStar(e)))
+      } { case ((_, sig), next) =>
+        val nextSig = signature(next)
+        ((next, nextSig), nextSig == sig)
+      }
     // fixpoint edges are stars: every directed (big, small) pair is
     // leaf → component-min; centers label themselves
     val dir = edges.filter(col("v") < col("u"))

@@ -43,21 +43,61 @@ import graft.sources.Tables
 object Graph {
 
   private[operators] val Scale = 1L << 30
-  private[operators] val Rounds = 4
+  private[operators] val PrRounds = 4
   private[operators] val SuppOffset = 1000000L
 
-  /** Distinct customer→supplier pairs, symmetrized into a directed
-    * edge list (u, v) with supplier ids offset out of the customer id
-    * range. */
-  private[operators] def purchaseEdges(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
+  /** Distinct customer→supplier pairs (c, s), with supplier ids
+    * offset out of the customer id range. */
+  private def purchasePairs(spark: SparkSession, dir: String): DataFrame =
+    Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("s"))
       .distinct()
+
+  /** [[purchasePairs]] symmetrized into a directed edge list (u, v). */
+  private[operators] def purchaseEdges(spark: SparkSession, dir: String): DataFrame = {
+    val base = purchasePairs(spark, dir)
     base.select(col("c").as("u"), col("s").as("v"))
       .unionAll(base.select(col("s").as("u"), col("c").as("v")))
   }
+
+  /** The symmetric cent-weighted purchase edges (u, v, w): w is the
+    * cheapest lineitem ever shipped between the pair, on the exact
+    * cent lattice (see [[ssspWeighted]]). */
+  private def weightedPurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
+    val pair = Tables.orders(spark, dir)
+      .select(col("o_orderkey"), col("o_custkey"))
+      .join(Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice")),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("s"),
+        expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("w"))
+      .groupBy(col("c"), col("s")).agg(min(col("w")).as("w"))
+    pair.select(col("c").as("u"), col("s").as("v"), col("w"))
+      .unionAll(pair.select(col("s").as("u"), col("c").as("v"), col("w")))
+  }
+
+  /** The oracle-side twin of [[purchaseEdges]]: the distinct
+    * customer→supplier `base` CTE, and [[PurchaseEdgesSql]] adds its
+    * symmetric `edges` list. */
+  private val PurchaseBaseSql: String =
+    s"""base AS (
+       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
+       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey)""".stripMargin
+
+  private val PurchaseEdgesSql: String =
+    s"""$PurchaseBaseSql,
+       |edges AS (SELECT c AS u, s AS v FROM base
+       |          UNION ALL SELECT s AS u, c AS v FROM base)""".stripMargin
+
+  /** The `pair` CTE of [[weightedPurchaseEdges]]: (c, s, min cent w). */
+  private val WeightedPairSql: String =
+    s"""pair AS (
+       |  SELECT o_custkey AS c, l_suppkey + $SuppOffset AS s,
+       |    min(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS w
+       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+       |  GROUP BY 1, 2)""".stripMargin
 
   /** Integer-lattice PageRank core over an arbitrary SYMMETRIC edge
     * list (u, v) — extracted so specs can rank planted graphs.
@@ -95,21 +135,15 @@ object Graph {
     val n = verts.count()
     val r0 = Scale / n
     val tele = (3L * r0) / 20L
-    var r = verts.select(col("u").as("id"), lit(r0).as("r"))
-    for (_ <- 1 to Rounds) {
-      r = edgeDeg.as("e")
+    // one read of the state a round: never cut (the Rounds rule)
+    Rounds.fixed(PrRounds, verts.select(col("u").as("id"), lit(r0).as("r"))) { (r, _) =>
+      edgeDeg.as("e")
         .join(r.as("p"), col("e.u") === col("p.id"))
         .groupBy(col("e.v"))
         .agg(sum(expr("p.r div e.deg")).as("sm"))
         .select(col("v").as("id"),
           (lit(tele) + expr("(17 * sm) div 20")).as("r"))
-      // measured: per-round localCheckpoint (the dedup_cluster fix)
-      // LOSES here — 4 bounded rounds compile fine as one tree
-      // (run3 4.2 s vs 5.4 s checkpointed), because the checkpoint
-      // materialization tax outweighs the lineage saving when the
-      // round count is a small constant
     }
-    r
   }
 
   /** PageRank over the customer–part purchase graph — bounded-round
@@ -126,7 +160,7 @@ object Graph {
     * identical to the Spark side). sum(BIGINT) is HUGEINT in DuckDB —
     * cast back before the 17/20 step so the lattice stays BIGINT. */
   private def pagerankSql: String = {
-    val rounds = (1 to Rounds).map { i =>
+    val rounds = Rounds.cteChain(PrRounds) { i =>
       s"""r$i AS (
          |  SELECT e.v AS id,
          |    (SELECT tele FROM consts)
@@ -135,12 +169,8 @@ object Graph {
          |  JOIN outdeg d ON e.u = d.u
          |  JOIN r${i - 1} p ON e.u = p.id
          |  GROUP BY e.v)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH base AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |edges AS (SELECT c AS u, s AS v FROM base
-       |          UNION ALL SELECT s AS u, c AS v FROM base),
+    }
+    s"""WITH $PurchaseEdgesSql,
        |outdeg AS (SELECT u, count(*) AS deg FROM edges GROUP BY u),
        |consts AS (SELECT ($Scale // count(*)) AS r0,
        |                  ((3 * ($Scale // count(*))) // 20) AS tele
@@ -148,7 +178,7 @@ object Graph {
        |r0 AS (SELECT u AS id, (SELECT r0 FROM consts) AS r FROM outdeg),
        |$rounds
        |SELECT id, r AS rank_scaled, r / ${Scale.toDouble} AS rank
-       |FROM r$Rounds""".stripMargin
+       |FROM r$PrRounds""".stripMargin
   }
 
   private[operators] val CoK = 20
@@ -353,40 +383,30 @@ object Graph {
     * vertices join the edges next round. Sound because hop distances
     * never improve once set (unit weights: first discovery IS the
     * min), so dist is a DISJOINT union of per-round frontiers — no
-    * re-aggregation of settled state at all. Each frontier is cut
-    * through the one-switch [[graft.StateMode]] (linear lineage) and
-    * the relax join's left side SHRINKS as the reachable set
-    * saturates: per-round work ∝ frontier, not ∝ reached.
+    * re-aggregation of settled state at all. Each frontier but the
+    * last is cut ([[Rounds]]) and the relax join's left side SHRINKS
+    * as the reachable set saturates: per-round work ∝ frontier, not
+    * ∝ reached.
     *
     * Why this body (r15 interleaved A/B, sf0.1, 3 reps, bfs_reach
     * shape, exceptAll-parity gated; PLANS.md r15): frontier
-    * 3.7/3.9/4.0 s ≈ a per-round-checkpointed min-relax 3.7/3.7/3.8
-    * vs the uncut declarative loop 5.9/6.0/6.6 — that loop referenced
-    * its own plan twice per round, 2^rounds leaf references (VERDICT
-    * r14 item 1). Frontier ties at fixture scale and is the
-    * asymptotic winner, so it is the one shipped body. */
+    * 3.7/3.9/4.0 s ≈ a per-round-checkpointed min-relax 3.7/3.7/3.8.
+    * Frontier ties at fixture scale and is the asymptotic winner, so
+    * it is the one shipped body. */
   private[operators] def bfsDistances(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
-    var dist = StateMode.cut(seeds)
-    var frontier = dist
-    for (r <- 1 to rounds) {
-      var next = frontier.as("p")
+    val seeded = Rounds.cut(seeds)
+    Rounds.fixed(rounds, (seeded, seeded)) { case ((dist, frontier), cut) =>
+      val next = cut(frontier.as("p")
         .join(edges.as("e"), col("e.u") === col("p.id"))
         .select(col("e.v").as("id"), (col("p.d") + lit(1L)).as("d"))
         // dedupe multi-path discoveries within the hop, then drop
         // already-settled vertices: what's left is exactly the set
         // first reached at THIS hop
         .groupBy(col("id")).agg(min(col("d")).as("d"))
-        .join(dist.select(col("id")), Seq("id"), "left_anti")
-      // the LAST round stays declarative: dist is a union of leaves,
-      // so the consumer's one action runs the final anti-join over
-      // cached blocks instead of an eager cut materializing it and
-      // the action re-scanning the copy
-      if (r < rounds) next = StateMode.cut(next)
-      dist = dist.unionAll(next)
-      frontier = next
-    }
-    dist
+        .join(dist.select(col("id")), Seq("id"), "left_anti"))
+      (dist.unionAll(next), next)
+    }._1
   }
 
   /** (persisted symmetric edges, bounded-horizon distances) — split
@@ -410,19 +430,15 @@ object Graph {
     * disallowed), shared verbatim by the `graph_bfs` and `bfs_reach`
     * oracles so the rollup cannot drift from its source. */
   private val BfsCtes: String = {
-    val rounds = (1 to BfsRounds).map { i =>
+    val rounds = Rounds.cteChain(BfsRounds) { i =>
       s"""r$i AS (
          |  SELECT id, min(d) AS d FROM (
          |    SELECT e.v AS id, p.d + 1 AS d
          |    FROM edges e JOIN r${i - 1} p ON e.u = p.id
          |    UNION ALL SELECT id, d FROM r${i - 1})
          |  GROUP BY id)""".stripMargin
-    }.mkString(",\n")
-    s"""base AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |edges AS (SELECT c AS u, s AS v FROM base
-       |          UNION ALL SELECT s AS u, c AS v FROM base),
+    }
+    s"""$PurchaseEdgesSql,
        |r0 AS (SELECT DISTINCT u AS id, CAST(0 AS BIGINT) AS d FROM edges
        |       WHERE u BETWEEN $SuppOffset AND ${SuppOffset + BfsMaxSeedSupp}),
        |$rounds""".stripMargin
@@ -508,14 +524,14 @@ object Graph {
     * second chain seeds from the first's rank-1 argmax. */
   private def graphDiameterSql: String = {
     def chain(p: String, seed: String): String = {
-      val rounds = (1 to DiamRounds).map { i =>
+      val rounds = Rounds.cteChain(DiamRounds) { i =>
         s"""$p$i AS MATERIALIZED (
            |  SELECT id, min(d) AS d FROM (
            |    SELECT e.v AS id, p.d + 1 AS d
            |    FROM edges e JOIN $p${i - 1} p ON e.u = p.id
            |    UNION ALL SELECT id, d FROM $p${i - 1})
            |  GROUP BY id)""".stripMargin
-      }.mkString(",\n")
+      }
       s"""${p}0 AS (SELECT DISTINCT u AS id, CAST(0 AS BIGINT) AS d FROM edges
          |        WHERE u = $seed),
          |$rounds""".stripMargin
@@ -562,16 +578,7 @@ object Graph {
     * to meet it; delta-frontier (relax only improved vertices) is
     * the constant-factor dial at scale. */
   def ssspWeighted(spark: SparkSession, dir: String): DataFrame = {
-    val pair = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("s"),
-        expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("w"))
-      .groupBy(col("c"), col("s")).agg(min(col("w")).as("w"))
-    val edges = pair.select(col("c").as("u"), col("s").as("v"), col("w"))
-      .unionAll(pair.select(col("s").as("u"), col("c").as("v"), col("w")))
+    val edges = weightedPurchaseEdges(spark, dir)
     ssspOn(edges,
       edges.filter(col("u") >= SuppOffset && col("u") <= SuppOffset + BfsMaxSeedSupp)
         .select(col("u").as("id")).distinct())
@@ -580,11 +587,8 @@ object Graph {
   /** The bounded Bellman-Ford core over an arbitrary weighted edge
     * list (u, v, w) and seed set (id) — extracted so specs can relax
     * planted graphs (the labelPropOn pattern). Each round is the
-    * min-relax dist' = min_id(dist ⋈ edges ∪ dist), cut through the
-    * one-switch [[graft.StateMode]] so lineage stays linear; the last
-    * round stays declarative (the consumer's one action executes it
-    * instead of an eager cut materializing it and the action
-    * re-scanning the copy).
+    * min-relax dist' = min_id(dist ⋈ edges ∪ dist), cut on every
+    * round but the last ([[Rounds]]) so lineage stays linear.
     *
     * Unlike [[bfsDistances]], a settled distance CAN improve in a
     * later round (a longer-hop cheaper path), so the frontier
@@ -592,38 +596,30 @@ object Graph {
     * interleaved A/B, sf0.1, 3 reps, exceptAll-parity gated; PLANS.md
     * r15): checkpointed relax 3.6/3.6/3.7 s vs a change-frontier
     * Bellman-Ford 4.2/4.3/4.3 (its extra improvement join costs more
-    * than the shrinking frontier saves over 4 still-expanding rounds)
-    * vs the uncut doubled-self-reference loop 5.6/5.7/5.8. */
+    * than the shrinking frontier saves over 4 still-expanding rounds). */
   private[operators] def ssspOn(edgesIn: DataFrame, seeds: DataFrame): DataFrame = {
     val edges = edgesIn.repartition(col("u")).persistScoped()
-    var dist = seeds.select(col("id"), lit(0L).as("d"))
-    for (r <- 1 to SsspRounds) {
-      dist = dist.as("p")
+    Rounds.fixed(SsspRounds, seeds.select(col("id"), lit(0L).as("d"))) { (dist, cut) =>
+      cut(dist.as("p")
         .join(edges.as("e"), col("e.u") === col("p.id"))
         .select(col("e.v").as("id"), (col("p.d") + col("e.w")).as("d"))
         .unionAll(dist)
-        .groupBy(col("id")).agg(min(col("d")).as("d"))
-      if (r < SsspRounds) dist = StateMode.cut(dist)
-    }
-    dist.select(col("id"), col("d"))
+        .groupBy(col("id")).agg(min(col("d")).as("d")))
+    }.select(col("id"), col("d"))
   }
 
   /** SSSP replay: graphBfsSql's unrolled relax chain with the
     * min-cent edge weight carried through `p.d + e.w`. */
   private def ssspWeightedSql: String = {
-    val rounds = (1 to SsspRounds).map { i =>
+    val rounds = Rounds.cteChain(SsspRounds) { i =>
       s"""r$i AS (
          |  SELECT id, min(d) AS d FROM (
          |    SELECT e.v AS id, p.d + e.w AS d
          |    FROM edges e JOIN r${i - 1} p ON e.u = p.id
          |    UNION ALL SELECT id, d FROM r${i - 1})
          |  GROUP BY id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pair AS (
-       |  SELECT o_custkey AS c, l_suppkey + $SuppOffset AS s,
-       |    min(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS w
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-       |  GROUP BY 1, 2),
+    }
+    s"""WITH $WeightedPairSql,
        |edges AS (SELECT c AS u, s AS v, w FROM pair
        |          UNION ALL SELECT s AS u, c AS v, w FROM pair),
        |r0 AS (SELECT DISTINCT u AS id, CAST(0 AS BIGINT) AS d FROM edges
@@ -653,16 +649,7 @@ object Graph {
     * one partial+final sum. */
   def pagerankWeighted(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pair = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("s"),
-        expr("cast(floor(l_extendedprice * 100 + 0.5) as bigint)").as("w"))
-      .groupBy(col("c"), col("s")).agg(min(col("w")).as("w"))
-    val edgeW = pair.select(col("c").as("u"), col("s").as("v"), col("w"))
-      .unionAll(pair.select(col("s").as("u"), col("c").as("v"), col("w")))
+    val edgeW = weightedPurchaseEdges(spark, dir)
       .repartition(col("u"))
       .select(col("u"), col("v"), col("w"),
         sum(col("w")).over(Window.partitionBy(col("u"))).as("tw"))
@@ -671,21 +658,19 @@ object Graph {
     val n = verts.count()
     val r0 = Scale / n
     val tele = (3L * r0) / 20L
-    var r = verts.select(col("u").as("id"), lit(r0).as("r"))
-    for (_ <- 1 to Rounds) {
-      r = edgeW.as("e")
+    Rounds.fixed(PrRounds, verts.select(col("u").as("id"), lit(r0).as("r"))) { (r, _) =>
+      edgeW.as("e")
         .join(r.as("p"), col("e.u") === col("p.id"))
         .groupBy(col("e.v"))
         .agg(sum(expr("cast(p.r as decimal(38,0)) * e.w div e.tw")).as("sm"))
         .select(col("v").as("id"),
           (lit(tele) + expr("cast((17 * sm) div 20 as bigint)")).as("r"))
-    }
-    r.select(col("id"), col("r").as("rank_scaled"),
+    }.select(col("id"), col("r").as("rank_scaled"),
       (col("r") / lit(Scale.toDouble)).as("rank"))
   }
 
   private def pagerankWeightedSql: String = {
-    val rounds = (1 to Rounds).map { i =>
+    val rounds = Rounds.cteChain(PrRounds) { i =>
       s"""r$i AS (
          |  SELECT e.v AS id,
          |    (SELECT tele FROM consts)
@@ -693,12 +678,8 @@ object Graph {
          |  FROM edges e
          |  JOIN r${i - 1} p ON e.u = p.id
          |  GROUP BY e.v)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pair AS (
-       |  SELECT o_custkey AS c, l_suppkey + $SuppOffset AS s,
-       |    min(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS w
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-       |  GROUP BY 1, 2),
+    }
+    s"""WITH $WeightedPairSql,
        |e0 AS (SELECT c AS u, s AS v, w FROM pair
        |       UNION ALL SELECT s AS u, c AS v, w FROM pair),
        |outw AS (SELECT u, CAST(sum(w) AS BIGINT) AS tw FROM e0 GROUP BY u),
@@ -709,7 +690,7 @@ object Graph {
        |r0 AS (SELECT u AS id, (SELECT r0 FROM consts) AS r FROM outw),
        |$rounds
        |SELECT id, r AS rank_scaled, r / ${Scale.toDouble} AS rank
-       |FROM r$Rounds""".stripMargin
+       |FROM r$PrRounds""".stripMargin
   }
 
   /** Degree distribution of the purchase graph — the first
@@ -723,11 +704,7 @@ object Graph {
       .groupBy(col("deg")).agg(count(lit(1)).as("n_vertices"))
 
   private def degreeDistSql: String =
-    s"""WITH base AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |edges AS (SELECT c AS u, s AS v FROM base
-       |          UNION ALL SELECT s AS u, c AS v FROM base),
+    s"""WITH $PurchaseEdgesSql,
        |d AS (SELECT u, count(*) AS deg FROM edges GROUP BY u)
        |SELECT CAST(deg AS BIGINT) AS deg, count(*) AS n_vertices
        |FROM d GROUP BY deg""".stripMargin
@@ -762,12 +739,7 @@ object Graph {
     * partial+final, and the max attaches via [[ScalarJoin]]'s
     * broadcast hash join (never a BNLJ). */
   def hitsScores(spark: SparkSession, dir: String): DataFrame =
-    hitsOn(Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), (col("l_suppkey") + SuppOffset).as("s"))
-      .distinct())
+    hitsOn(purchasePairs(spark, dir))
 
   /** The mutual-reinforcement core over an arbitrary DIRECTED edge
     * list (c, s) — extracted so specs can score planted graphs (the
@@ -779,36 +751,25 @@ object Graph {
     // once per copy's materialization — before r19)
     val eByS = eByC.repartition(col("s")).persistScoped()
 
-    def rescale(scoresIn: DataFrame): DataFrame = {
-      // the raw sums are referenced TWICE (the max aggregate and the
-      // rescale join) and each half-round chains on the last —
-      // without materialization the lineage re-evaluates
-      // geometrically across the 2×2 half-rounds (measured: 12.6 s →
-      // ~5 s at sf0.1 with per-half-round persist). The r15
-      // interleaved A/B (sf0.1, 3 reps, exceptAll-parity first;
-      // PLANS.md r15) then swapped the persist for an eager cut:
-      // 4.3/3.4/3.2 s vs persist 5.1/4.5/4.2 — a consistent ~20% win,
-      // same mechanism as kcoreOn (each half-round plans and executes
-      // exactly once against a LogicalRDD leaf instead of paying
-      // analysis + cache-substitution passes per reference).
-      // Cut storage backing: the graft.StateMode one-switch.
-      val scores = StateMode.cut(scoresIn)
+    // the raw sums are read twice (the max aggregate and the rescale
+    // join), so every half-round cuts them, the last ones included
+    def rescale(scores: DataFrame): DataFrame = {
       val mx = scores.agg(max(col("x")).as("mx"), count(lit(1)).as("nn"))
       ScalarJoin.attachScalar(scores, col("x"), mx, col("nn"))
         .select(col("id"),
           expr(s"cast((cast(x as decimal(38,0)) * $HitsScale) div mx as bigint)").as("x"))
     }
 
-    var h = eByC.select(col("c").as("id")).distinct()
+    val h0 = eByC.select(col("c").as("id")).distinct()
       .select(col("id"), lit(HitsScale).as("x"))
-    var a: DataFrame = null
-    for (_ <- 1 to HitsRounds) {
-      a = rescale(eByC.as("e").join(h.as("p"), col("e.c") === col("p.id"))
-        .groupBy(col("e.s")).agg(sum(col("p.x")).as("x"))
-        .select(col("s").as("id"), col("x")))
-      h = rescale(eByS.as("e").join(a.as("p"), col("e.s") === col("p.id"))
-        .groupBy(col("e.c")).agg(sum(col("p.x")).as("x"))
-        .select(col("c").as("id"), col("x")))
+    val (h, a) = Rounds.fixed(HitsRounds, (h0, null: DataFrame), cutLast = true) {
+      case ((h, _), cut) =>
+        val a = rescale(cut(eByC.as("e").join(h.as("p"), col("e.c") === col("p.id"))
+          .groupBy(col("e.s")).agg(sum(col("p.x")).as("x"))
+          .select(col("s").as("id"), col("x"))))
+        (rescale(cut(eByS.as("e").join(a.as("p"), col("e.s") === col("p.id"))
+          .groupBy(col("e.c")).agg(sum(col("p.x")).as("x"))
+          .select(col("c").as("id"), col("x")))), a)
     }
     h.select(col("id"), lit("hub").as("role"), col("x").as("score_q"))
       .unionAll(a.select(col("id"), lit("auth").as("role"), col("x").as("score_q")))
@@ -821,7 +782,7 @@ object Graph {
     * pagerankSql already follows), products widened to HUGEINT
     * before the 2²⁰ rescale. */
   private def hitsScoresSql: String = {
-    val rounds = (1 to HitsRounds).map { i =>
+    val rounds = Rounds.cteChain(HitsRounds) { i =>
       s"""a${i}r AS MATERIALIZED (SELECT s AS id, CAST(sum(h) AS BIGINT) AS x
          |  FROM base JOIN h${i - 1} ON c = id GROUP BY s),
          |am$i AS MATERIALIZED (SELECT max(x) AS mx FROM a${i}r),
@@ -832,10 +793,8 @@ object Graph {
          |hm$i AS MATERIALIZED (SELECT max(h) AS mx FROM h${i}r),
          |h$i AS MATERIALIZED (SELECT id, CAST((CAST(h AS HUGEINT) * $HitsScale)
          |  // (SELECT mx FROM hm$i) AS BIGINT) AS h FROM h${i}r)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH base AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+    }
+    s"""WITH $PurchaseBaseSql,
        |h0 AS (SELECT DISTINCT c AS id, CAST($HitsScale AS BIGINT) AS h FROM base),
        |$rounds
        |SELECT id, 'hub' AS role, h AS score_q FROM h$HitsRounds
@@ -879,8 +838,7 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val edges = edgesIn.repartition(col("u")).persistScoped()
     val seeds = seedsIn.persistScoped()
-    var labels = seeds
-    for (_ <- 1 to rounds) {
+    Rounds.fixed(rounds, seeds) { (labels, _) =>
       val votes = edges.as("e")
         .join(labels.as("l"), col("e.u") === col("l.id"))
         .groupBy(col("e.v"), col("l.lbl"))
@@ -890,9 +848,8 @@ object Graph {
           Window.partitionBy(col("v")).orderBy(col("n").desc, col("lbl").asc)))
         .filter(col("rn") === 1)
         .select(col("v").as("id"), col("lbl"))
-      labels = seeds.unionAll(picked.join(seeds.select(col("id")), Seq("id"), "left_anti"))
+      seeds.unionAll(picked.join(seeds.select(col("id")), Seq("id"), "left_anti"))
     }
-    labels
   }
 
   /** The [[labelProp]] replay's CTE prefix — edges, seeds, unrolled
@@ -900,7 +857,7 @@ object Graph {
     * verbatim by the `label_prop` and `modularity` oracles so both
     * gate against the IDENTICAL propagation. */
   private def labelPropPrefixSql: String = {
-    val rounds = (1 to LpRounds).map { i =>
+    val rounds = Rounds.cteChain(LpRounds) { i =>
       s"""v$i AS (SELECT e.v, l.lbl, count(*) AS n
          |  FROM edges e JOIN l${i - 1} l ON e.u = l.id GROUP BY 1, 2),
          |p$i AS (SELECT v AS id, lbl FROM (
@@ -909,12 +866,8 @@ object Graph {
          |l$i AS (SELECT * FROM seeds
          |  UNION ALL
          |  SELECT * FROM p$i WHERE id NOT IN (SELECT id FROM seeds))""".stripMargin
-    }.mkString(",\n")
-    s"""base AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |edges AS (SELECT c AS u, s AS v FROM base
-       |          UNION ALL SELECT s AS u, c AS v FROM base),
+    }
+    s"""$PurchaseEdgesSql,
        |seeds AS (SELECT c_custkey AS id, CAST(c_nationkey AS BIGINT) AS lbl
        |          FROM customer WHERE c_custkey % 10 = 0),
        |l0 AS (SELECT * FROM seeds),
@@ -1010,23 +963,21 @@ object Graph {
     val nS = seeds.count()
     val r0 = Scale / nS
     val tele = (3L * r0) / 20L
-    var r = seeds.select(col("id"), lit(r0).as("r"))
-    for (_ <- 1 to Rounds) {
+    Rounds.fixed(PrRounds, seeds.select(col("id"), lit(r0).as("r"))) { (r, _) =>
       val contrib = edgeDeg.as("e")
         .join(r.as("p"), col("e.u") === col("p.id"))
         .groupBy(col("e.v"))
         .agg(sum(expr("p.r div e.deg")).as("sm"))
         .select(col("v").as("id"), expr("(17 * sm) div 20").as("rc"))
-      r = contrib.join(seeds.select(col("id"), lit(tele).as("t")), Seq("id"), "full_outer")
+      contrib.join(seeds.select(col("id"), lit(tele).as("t")), Seq("id"), "full_outer")
         .select(col("id"),
           (coalesce(col("rc"), lit(0L)) + coalesce(col("t"), lit(0L))).as("r"))
-    }
-    r.select(col("id"), col("r").as("rank_scaled"),
+    }.select(col("id"), col("r").as("rank_scaled"),
       (col("r") / lit(Scale.toDouble)).as("rank"))
   }
 
   private def pagerankPersonalizedSql: String = {
-    val rounds = (1 to Rounds).map { i =>
+    val rounds = Rounds.cteChain(PrRounds) { i =>
       s"""c$i AS (
          |  SELECT e.v AS id, (17 * CAST(sum(p.r // d.deg) AS BIGINT)) // 20 AS rc
          |  FROM edges e JOIN outdeg d ON e.u = d.u
@@ -1037,12 +988,8 @@ object Graph {
          |    coalesce(c.rc, 0)
          |      + CASE WHEN s.id IS NOT NULL THEN (SELECT tele FROM consts) ELSE 0 END AS r
          |  FROM c$i c FULL OUTER JOIN seeds s ON s.id = c.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH base AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |edges AS (SELECT c AS u, s AS v FROM base
-       |          UNION ALL SELECT s AS u, c AS v FROM base),
+    }
+    s"""WITH $PurchaseEdgesSql,
        |outdeg AS (SELECT u, count(*) AS deg FROM edges GROUP BY u),
        |seeds AS (SELECT c_custkey AS id FROM customer WHERE c_custkey % 10 = 0),
        |consts AS (SELECT ($Scale // count(*)) AS r0,
@@ -1051,7 +998,7 @@ object Graph {
        |r0 AS (SELECT id, (SELECT r0 FROM consts) AS r FROM seeds),
        |$rounds
        |SELECT id, r AS rank_scaled, r / ${Scale.toDouble} AS rank
-       |FROM r$Rounds""".stripMargin
+       |FROM r$PrRounds""".stripMargin
   }
 
   /** Degree assortativity of the purchase graph (Newman 2002) — the
@@ -1089,11 +1036,7 @@ object Graph {
   }
 
   private def graphAssortativitySql: String =
-    s"""WITH base AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |edges AS (SELECT c AS u, s AS v FROM base
-       |          UNION ALL SELECT s AS u, c AS v FROM base),
+    s"""WITH $PurchaseEdgesSql,
        |deg AS (SELECT u AS id, count(*) AS d FROM edges GROUP BY 1),
        |p AS (SELECT du.d AS x, dv.d AS y
        |      FROM edges e JOIN deg du ON du.id = e.u JOIN deg dv ON dv.id = e.v),
@@ -1219,15 +1162,9 @@ object Graph {
 
   /** The truss-peel core over an arbitrary canonically-oriented
     * (doc_a < doc_b) pair list — extracted so specs can peel planted
-    * graphs. Each round's survivor set is an eager
-    * [[graft.StateMode]] cut, as in [[kcoreOn]]. Why (r15 interleaved
-    * A/B, parity-gated, sf0.1, 3 reps, the persist loop timed first so
-    * it also absorbed rep-1's JVM warmup; PLANS.md r15): cut
-    * 2.8/1.9/2.4 s vs per-round persist 11.2/3.8/4.5 — ~45% off the
-    * steady-state reps. The kcoreOn mechanism transfers (4 references
-    * per round beat cache substitution's analysis + cache-build
-    * passes) even though the shared shingle-pair build is inside both
-    * walls. */
+    * graphs. Every round's survivor set is cut ([[Rounds]]), the
+    * last one too: the final support join reads it 4× more, so the
+    * declarative tail is the left join + coalesce only. */
   private[operators] def ktrussOn(pairsIn: DataFrame): DataFrame = {
     def support(edges: DataFrame): DataFrame =
       edges.as("e1")
@@ -1240,16 +1177,12 @@ object Graph {
           struct(col("e3.doc_a").as("doc_a"), col("e3.doc_b").as("doc_b")))).as("e"))
         .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b"))
         .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("support"))
-    var edges = StateMode.cut(pairsIn)
-    for (_ <- 1 to TrussRounds) {
-      // the final support() below re-references the last round 4×
-      // more, so unlike kcoreOn the LAST round is cut too — the
-      // declarative tail here is the left join + coalesce only
-      edges = StateMode.cut(edges.join(
+    val peeled = Rounds.fixed(TrussRounds, Rounds.cut(pairsIn), cutLast = true) {
+      (edges, cut) => cut(edges.join(
         support(edges).filter(col("support") >= TrussK - 2),
         Seq("doc_a", "doc_b"), "left_semi"))
     }
-    edges.join(support(edges), Seq("doc_a", "doc_b"), "left")
+    peeled.join(support(peeled), Seq("doc_a", "doc_b"), "left")
       .select(col("doc_a"), col("doc_b"),
         coalesce(col("support"), lit(0L)).as("support"))
   }
@@ -1272,13 +1205,13 @@ object Graph {
          |    FROM $src e1 JOIN $src e2 ON e1.doc_b = e2.doc_a
          |    JOIN $src e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b) u
          |  GROUP BY 1, 2""".stripMargin
-    val rounds = (1 to TrussRounds).map { i =>
+    val rounds = Rounds.cteChain(TrussRounds) { i =>
       s"""s$i AS MATERIALIZED (
          |  ${supportOf(s"t${i - 1}")}),
          |t$i AS MATERIALIZED (
          |  SELECT t.doc_a, t.doc_b FROM t${i - 1} t
          |  JOIN s$i USING (doc_a, doc_b) WHERE s$i.support >= ${TrussK - 2})""".stripMargin
-    }.mkString(",\n")
+    }
     s"""${Dedup.ClusterCtes},
        |t0 AS MATERIALIZED (SELECT doc_a, doc_b FROM jp),
        |$rounds,
@@ -1375,22 +1308,12 @@ object Graph {
 
   /** The peeling core over an arbitrary symmetric edge list —
     * extracted so specs can peel planted graphs (chain-erosion and
-    * fixed-point pins). Every round but the last is an eager
-    * [[graft.StateMode]] cut, so each round plans and executes exactly
-    * once against a LogicalRDD leaf; the LAST round stays declarative
-    * (the consumer's action executes it).
-    *
-    * Why (r15 interleaved A/B, sf0.1, 3 reps, exceptAll-parity gated;
-    * PLANS.md r15): cut 2.4/2.2/2.3 s vs per-round persist 6.2/5.8/5.6
-    * vs fully-declarative rounds 28.8/31.0/32.2 (the 3^rounds
-    * baseline). Each round's edges are referenced 3× (the degree
-    * aggregate feeding both semi joins + the join left side), and a
-    * cached plan still pays analysis + cache-build passes per
-    * reference, so the LogicalRDD leaf beats cache substitution. */
+    * fixed-point pins). The input and every round but the last are
+    * cut ([[Rounds]]): each round's edges are read 3× (the degree
+    * aggregate feeding both semi joins + the join left side). */
   private[operators] def kcoreOn(edgesIn: DataFrame,
       k: Int = KcoreK, rounds: Int = KcoreRounds): DataFrame = {
-    var edges = StateMode.cut(edgesIn)
-    for (r <- 1 to rounds) {
+    Rounds.fixed(rounds, Rounds.cut(edgesIn)) { (edges, cut) =>
       // keep is deliberately NOT persisted: both semi joins re-derive
       // the degree aggregate from the round's materialized edges,
       // which measured 1.7× cheaper than materializing a keep cache
@@ -1399,27 +1322,23 @@ object Graph {
       val keep = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("u").as("id"))
-      edges = edges
+      cut(edges
         .join(keep, edges("u") === keep("id"), "left_semi")
-        .join(keep, edges("v") === keep("id"), "left_semi")
-      if (r < rounds) edges = StateMode.cut(edges)
-    }
-    edges.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
+        .join(keep, edges("v") === keep("id"), "left_semi"))
+    }.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
   }
 
   /** DuckDB replay: rounds unrolled, each stage a semi-join filter
     * (IN) against the round's surviving-degree set. */
   private def kcoreSql: String = {
-    val rounds = (1 to KcoreRounds).map { i =>
+    val rounds = Rounds.cteChain(KcoreRounds) { i =>
       s"""k$i AS (SELECT u AS id FROM (
          |    SELECT u, count(*) AS deg FROM e${i - 1} GROUP BY u) t
          |  WHERE deg >= $KcoreK),
          |e$i AS (SELECT u, v FROM e${i - 1}
          |  WHERE u IN (SELECT id FROM k$i) AND v IN (SELECT id FROM k$i))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH base AS (
-       |  SELECT DISTINCT o_custkey AS c, l_suppkey + $SuppOffset AS s
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+    }
+    s"""WITH $PurchaseBaseSql,
        |e0 AS (SELECT c AS u, s AS v FROM base
        |       UNION ALL SELECT s AS u, c AS v FROM base),
        |$rounds

@@ -272,7 +272,7 @@ object Similarity extends SimilaritySearch with SimilarityPqIndex {
        |  FROM embeddings, range(1, ${Dim + 1}) t1(i), range(1, ${Dim + 1}) t2(j)
        |  GROUP BY 1, 2),
        |v0 AS (SELECT unnest(range($Dim)) AS d, CAST($QScale AS HUGEINT) AS v),
-       |${(1 to PcaRounds).map(round).mkString(",\n")}""".stripMargin
+       |${Rounds.cteChain(PcaRounds)(round)}""".stripMargin
   }
 
   private def pcaPowerSql: String =
@@ -679,7 +679,7 @@ object Similarity extends SimilaritySearch with SimilarityPqIndex {
          |  FROM cand$r JOIN e se ON se.vec_id = src JOIN e de ON de.vec_id = dst),
          |e$r AS MATERIALIZED (SELECT src, dst FROM (
          |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
-         |    FROM s$r) t WHERE rn <= $GraphDeg),""".stripMargin
+         |    FROM s$r) t WHERE rn <= $GraphDeg)""".stripMargin
     def hop(h: Int, prev: String, g: String): String =
       s"""c$h AS MATERIALIZED (SELECT qid, nid FROM $prev
          |  UNION SELECT $prev.qid, g.dst AS nid FROM $prev JOIN $g g ON g.src = $prev.nid),
@@ -702,7 +702,7 @@ object Similarity extends SimilaritySearch with SimilarityPqIndex {
        |e0 AS MATERIALIZED (SELECT src, dst FROM (
        |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst ASC) AS rn
        |    FROM s0) t WHERE rn <= $GraphDeg),
-       |${(1 to DescentRounds).map(r => ndRound(r, s"e${r - 1}")).mkString("\n")}
+       |${Rounds.cteChain(DescentRounds)(r => ndRound(r, s"e${r - 1}"))},
        |q AS MATERIALIZED (SELECT vec_id AS qid, emb AS qe FROM e WHERE vec_id < $NQueries),
        |seeds AS MATERIALIZED (SELECT vec_id AS nid FROM e WHERE vec_id % $SeedStride = 0),
        |b0 AS MATERIALIZED (SELECT qid, nid FROM (

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedDataset
-import graft.StateMode
 import graft.functions.VectorFunctions.cosine_sim
 import graft.sources.Tables
 
@@ -80,15 +79,14 @@ private[operators] trait SimilarityPqIndex extends Serializable { this: Similari
     def expand(b: DataFrame): DataFrame =
       g.as("gr").join(broadcast(b.as("bm")), col("bm.nid") === col("gr.src"))
         .select(col("bm.qid").as("qid"), col("gr.dst").as("nid"))
-    // each hop references the previous beam TWICE (union + expand);
-    // unpersisted, the per-hop window+join subtree would re-derive
-    // 2^hops times — the same exponential-inlining disease the
-    // oracle's AS MATERIALIZED fixes on the DuckDB side. The beam is
-    // |Q| × B rows, so the scoped persist is all win.
-    var beam = StateMode.cut(
-      beamTop(seeds.join(broadcast(q.select(col("qid"))), col("qid") =!= col("nid"))))
-    for (_ <- 1 until BeamHops)
-      beam = StateMode.cut(beamTop(beam.union(expand(beam)).distinct()))
+    // each hop and the final expand read the previous beam TWICE
+    // (union + expand), so every beam is cut, the last one too; uncut,
+    // the per-hop window+join subtree would re-derive 2^hops times —
+    // the same exponential-inlining disease the oracle's AS
+    // MATERIALIZED fixes on the DuckDB side
+    val beam = Rounds.fixed(BeamHops - 1, Rounds.cut(
+        beamTop(seeds.join(broadcast(q.select(col("qid"))), col("qid") =!= col("nid")))),
+        cutLast = true)((b, cut) => cut(beamTop(b.union(expand(b)).distinct())))
     Refine.topK(scored(beam.union(expand(beam)).distinct()), Seq("qid"), ByCos, K, "rnk",
         longRank = true)
       .select(col("qid"), col("rnk"), col("nid"), round(col("cos"), 4).as("cos"))

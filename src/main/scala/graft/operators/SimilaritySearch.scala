@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.CacheScope.ScopedDataset
-import graft.StateMode
 import graft.functions.VectorFunctions.cosine_sim
 import graft.sources.Tables
 
@@ -368,7 +367,8 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
          |  SELECT l.vec_id,
          |    CAST(sum((l.q[dd.i + 1] - c.q[dd.i + 1]) * (l.q[dd.i + 1] - c.q[dd.i + 1])) AS BIGINT) AS d
          |  FROM l CROSS JOIN c1 c CROSS JOIN dd GROUP BY l.vec_id)""".stripMargin
-    val rounds = (2 to KCenters).map { k =>
+    val rounds = Rounds.cteChain(KCenters - 1) { r =>
+      val k = r + 1
       val pick =
         s"""p$k AS MATERIALIZED (
            |  SELECT vec_id, d FROM d${k - 1}
@@ -386,7 +386,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
            |  SELECT d${k - 1}.vec_id, least(d${k - 1}.d, nd$k.d) AS d
            |  FROM d${k - 1} JOIN nd$k USING (vec_id))""".stripMargin
       pick + refine
-    }.mkString(",\n")
+    }
     val tail = (2 to KCenters)
       .map(k => s"SELECT CAST($k AS BIGINT) AS pick, vec_id, d AS radius2 FROM p$k")
       .mkString("\nUNION ALL ")
@@ -1400,14 +1400,9 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * self-joins of an (n × M) edge list partitioned on the join key,
     * i.e. O(n·M²) candidate rows per round with M a small constant.
     * Rounds are a bounded constant, and each round's graph is cut
-    * once through the one-switch [[graft.StateMode]] because the next
-    * round references it six times (edges + fwd×2 + rev + co×2) and
-    * the FINAL graph is referenced once per beam hop by
-    * [[annGraph]] — the same once-materialized-reuse invariant as
-    * the kcore/ktruss peel rounds. The r15 interleaved A/B (parity-
-    * gated, sf0.1, whole-operator colds, 3 reps; PLANS.md r15 batch
-    * H): cut 3.9/3.5/3.2 s vs per-round persist 6.2/5.6/5.8 — ~40%
-    * off the registry's second-slowest op.
+    * ([[Rounds]]) because the next round references it six times
+    * (edges + fwd×2 + rev + co×2) and the FINAL graph is referenced
+    * once per beam hop by [[annGraph]].
     *
     * The descent's local join generates candidates from each node's
     * full top-[[GraphDeg]] edges. Capping that at 12 (44% less
@@ -1521,8 +1516,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       Refine.topK(deduped, Seq("src"), ByCosDst, GraphDeg, "rn", longRank = false)
         .select("src", "dst")
     }
-    var g = StateMode.cut(topM(cand0))
-    for (_ <- 1 to DescentRounds) {
+    Rounds.fixed(DescentRounds, Rounds.cut(topM(cand0)), cutLast = true) { (g, cut) =>
       val fwd = g.as("a").join(g.as("b"),
           col("a.dst") === col("b.src") && col("a.src") =!= col("b.dst"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
@@ -1530,8 +1524,7 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
       val co = g.as("a").join(g.as("b"),
           col("a.src") === col("b.src") && col("a.dst") =!= col("b.dst"))
         .select(col("a.dst").as("src"), col("b.dst").as("dst"))
-      g = StateMode.cut(topM(g.union(fwd).union(rev).union(co)))
+      cut(topM(g.union(fwd).union(rev).union(co)))
     }
-    g
   }
 }

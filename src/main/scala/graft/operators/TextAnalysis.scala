@@ -1864,7 +1864,7 @@ object TextAnalysis {
          |  SELECT ' ' || trim(regexp_replace(w, '(.)', '\\1 ', 'g')) || ' ' AS spelled,
          |         count(*) AS wf
          |  FROM toks GROUP BY w)""".stripMargin
-    val rounds = (1 to BpeRounds).map { k =>
+    val rounds = Rounds.cteChain(BpeRounds) { k =>
       s"""p$k AS MATERIALIZED (
          |  SELECT list_extract(sy, i) AS l, list_extract(sy, i + 1) AS r,
          |         sum(wf) AS cnt
@@ -1879,7 +1879,7 @@ object TextAnalysis {
          |           ' ' || (SELECT l FROM b$k) || (SELECT r FROM b$k) || ' ') AS spelled,
          |         wf
          |  FROM w${k - 1})""".stripMargin
-    }.mkString(",\n")
+    }
     s"$head,\n$rounds"
   }
 

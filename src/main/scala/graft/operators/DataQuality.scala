@@ -93,7 +93,9 @@ object DataQuality {
 
   /** Data-quality rule sweep — null/range/referential/uniqueness
     * rules, each one aggregate emitting (rule, violations, checked);
-    * the union is |rules| rows at any corpus size. */
+    * the union is |rules| rows at any corpus size. It stays a union,
+    * not a fan-out by rule as [[fdAudit]] is: its rule kinds differ
+    * and read different tables, so no parameter is shared. */
   def dqChecks(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
     val c = Tables.customer(spark, dir)
@@ -123,21 +125,40 @@ object DataQuality {
     parts.reduce(_ unionAll _)
   }
 
-  /** One functional dependency det → dep over `df`: a determinant
-    * value is violating when more than one distinct dependent value
-    * coexists under it. One key-only partial+final aggregate
-    * (countDistinct plans as the two-level expand+agg, combining
-    * map-side) folds the table to |det| rows, then a 1-row rollup
-    * reports key counts and the violating ROW mass. */
-  private[operators] def fdRule(
-      name: String, df: DataFrame, det: String, dep: String): DataFrame =
-    df.groupBy(col(det))
-      .agg(countDistinct(col(dep)).as("nd"), count(lit(1)).as("n"))
+  /** The literal (rule, rule_id) table left-joined to `perRule`, a
+    * ≤ |rules|-row aggregate by `rule_id`: a rule with no input rows
+    * keeps its row, with NULL aggregates as over an empty input. */
+  private[operators] def everyRule(spark: SparkSession, rules: Seq[String],
+      perRule: DataFrame): DataFrame =
+    spark.createDataFrame(rules.zipWithIndex).toDF("rule", "rule_id")
+      .join(broadcast(perRule), Seq("rule_id"), "left")
+
+  /** Functional dependencies det → dep, given per frame as (rule, det,
+    * dep) column triples: per rule, the determinant values, those with
+    * more than one distinct dependent value, and the rows under those.
+    * Each frame is scanned once and `inline`s a literal array of one
+    * (rule_id, det, dep) struct per FD, as strings (the cast keeps
+    * equality and NULLs); then one key-only partial+final aggregate by
+    * (rule_id, det) and one by rule. */
+  private[operators] def fdAudit(spark: SparkSession,
+      tables: Seq[(DataFrame, Seq[(String, String, String)])]): DataFrame = {
+    val rules = tables.flatMap(_._2.map(_._1))
+    tables.map { case (df, fds) =>
+      df.select(inline(array(fds.map { case (rule, det, dep) =>
+        struct(lit(rules.indexOf(rule)).as("rule_id"), col(det).cast("string").as("det"),
+          col(dep).cast("string").as("dep"))
+      }: _*)))
+    }.reduce(_ unionAll _)
+      .groupBy(col("rule_id"), col("det"))
+      .agg(countDistinct(col("dep")).as("nd"), count(lit(1)).as("n"))
+      .groupBy(col("rule_id"))
       .agg(count(lit(1)).as("n_keys"),
         sum(when(col("nd") > 1, 1L).otherwise(0L)).as("n_viol_keys"),
         sum(when(col("nd") > 1, col("n")).otherwise(0L)).as("n_viol_rows"))
-      .select(lit(name).as("rule"), col("n_keys"), col("n_viol_keys"),
-        col("n_viol_rows"))
+      .transform(everyRule(spark, rules, _))
+      .select(col("rule"), coalesce(col("n_keys"), lit(0L)).as("n_keys"),
+        col("n_viol_keys"), col("n_viol_rows"))
+  }
 
   /** Functional-dependency audit — the schema-inference / data-contract
     * check ("is this column really determined by that one?") a
@@ -148,20 +169,18 @@ object DataQuality {
     * tables: part brand→type and name→brand, orders custkey→priority,
     * customer nation→segment — a mix the fixture both satisfies and
     * breaks, so the audit exercises non-zero and zero rows. Scale
-    * shape: one countDistinct aggregate per FD over KEY COLUMNS only
-    * (no payload shuffle), each folding to a 1-row frame; the union is
-    * |FDs| rows at any corpus size. */
-  def fdCheck(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir)
-    Seq(
-      fdRule("part_brand_type", p, "p_brand", "p_type"),
-      fdRule("part_name_brand", p, "p_name", "p_brand"),
-      fdRule("orders_cust_priority", Tables.orders(spark, dir),
-        "o_custkey", "o_orderpriority"),
-      fdRule("customer_nation_segment", Tables.customer(spark, dir),
-        "c_nationkey", "c_mktsegment"))
-      .reduce(_ unionAll _)
-  }
+    * shape ([[fdAudit]]): each table is scanned once for all its FDs,
+    * and one key-column aggregate (no payload shuffle) serves every
+    * FD; the result is |FDs| rows at any corpus size. */
+  def fdCheck(spark: SparkSession, dir: String): DataFrame =
+    fdAudit(spark, Seq(
+      Tables.part(spark, dir) -> Seq(
+        ("part_brand_type", "p_brand", "p_type"),
+        ("part_name_brand", "p_name", "p_brand")),
+      Tables.orders(spark, dir) -> Seq(
+        ("orders_cust_priority", "o_custkey", "o_orderpriority")),
+      Tables.customer(spark, dir) -> Seq(
+        ("customer_nation_segment", "c_nationkey", "c_mktsegment"))))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_checks" -> dqChecks,

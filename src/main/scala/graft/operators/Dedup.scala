@@ -420,13 +420,13 @@ object Dedup {
     * of the scan with no shuffle. A token's hash is the first 8 bytes
     * of its MD5 as a long, the form the DuckDB oracle replays
     * chunk-wise from the hex digest. A document without tokens has no
-    * fingerprint and no row: the filter is on the token count, which
-    * Catalyst pushes down to the scan, so each document is tokenized
-    * twice but hashed once. */
+    * fingerprint and no row: the tokens explode as a one-element array,
+    * or as NULL when empty, since Catalyst would push a filter on their
+    * count down to the scan as a second tokenize. */
   def simhashes(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), TextAnalysis.toksOf(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
+      .select(col("doc_id"), explode(when(size(col("toks")) > 0, array(col("toks")))).as("toks"))
       .select(col("doc_id"), SimhashKernel.simhash(col("toks")).as("simhash"))
 
   /** Near-dup pairs at hamming ≤ 3 over [[simhashes]], found by
@@ -1257,23 +1257,23 @@ object Dedup {
     * replay both engines run: sʳ and the band product iterate
     * x ← (x·y) div 2²⁰ (truncating each step — the documented
     * contract, exact cross-engine where floating powers are not).
-    * Spark unrolls the fixed per-plan exponents as codegen'd column
-    * arithmetic over a `spark.range` seed; the oracle iterates the
+    * Spark explodes the literal plan array over one `spark.range` of
+    * the nine levels and iterates each power with `aggregate` over
+    * `sequence(1, n)`; the oracle iterates the
     * same recurrence in two recursive CTEs. O(|plans|·9) rows —
     * metadata at any scale (the operator reads no fixture data; it
     * plans against the sketch CONFIGURATION). */
   def lshThresholdPlan(spark: SparkSession, dir: String): DataFrame = {
-    def chain(seed: String, mul: String, times: Int): String =
-      (0 until times).foldLeft(seed)((acc, _) => s"(($acc * $mul) div 1048576)")
-    LshPlans.map { case (b, r) =>
-      spark.range(1, 10)
-        .select(expr("(id * 1048576) div 10").as("s_q"))
-        .withColumn("srq", expr(chain("cast(1048576 as bigint)", "s_q", r)))
-        .withColumn("nomatch",
-          expr(chain("cast(1048576 as bigint)", "(1048576 - srq)", b)))
-        .select(lit(b.toLong).as("bands"), lit(r.toLong).as("rows_per_band"),
-          col("s_q"), expr("1048576 - nomatch").as("p_match_q"))
-    }.reduce(_ unionAll _)
+    // 2²⁰·(x/2²⁰)ⁿ, truncated at each of the n steps
+    def pow(x: String, n: String): Column = expr(
+      s"aggregate(sequence(1, $n), cast(1048576 as bigint), (acc, i) -> (acc * $x) div 1048576)")
+    spark.range(1, 10)
+      .select(inline(array(LshPlans.map { case (b, r) =>
+          struct(lit(b.toLong).as("bands"), lit(r.toLong).as("rows_per_band")) }: _*)),
+        expr("(id * 1048576) div 10").as("s_q"))
+      .withColumn("srq", pow("s_q", "rows_per_band"))
+      .select(col("bands"), col("rows_per_band"), col("s_q"),
+        (lit(1048576) - pow("(1048576 - srq)", "bands")).as("p_match_q"))
   }
 
   private def lshThresholdPlanSql: String = {

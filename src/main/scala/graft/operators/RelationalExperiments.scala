@@ -373,54 +373,55 @@ private[operators] trait RelationalExperiments extends Serializable { this: Rela
     * events.user_id → customer edge is deliberately included even
     * though it ISN'T clean by construction: event streams routinely
     * carry pre-signup/anonymous ids, and measuring that mass is the
-    * op's production reading. Scale shape: per edge ONE key-only
-    * left-anti join (keys shuffle, payloads never) + a 1-row
-    * conditional count; edges union to |edges| rows. */
+    * op's production reading. Scale shape: each table is scanned once
+    * and `inline`s a (rule_id, k, child) row for every edge it is a
+    * child or parent of (NULL parent keys match nothing and are
+    * dropped). One
+    * key-only aggregate by (rule_id, k) co-groups child and parent
+    * rows, so no join is needed: a key's child rows are orphans when
+    * it has no parent row. Then one rollup by rule, |edges| rows. */
   def refIntegrity(spark: SparkSession, dir: String): DataFrame = {
-    def rule(name: String, child: DataFrame, parent: DataFrame): DataFrame = {
-      val c = child.toDF("k")
-      val p = parent.toDF("k").distinct()
-      val j = c.join(p.withColumn("hit", lit(1)), Seq("k"), "left")
-      j.agg(count(lit(1)).as("n_child"),
-        sum(when(col("hit").isNull, 1L).otherwise(0L)).as("n_orphan"))
-        .select(lit(name).as("rule"), col("n_child"), col("n_orphan"),
-          expr("cast((cast(n_orphan as decimal(38,0)) * 1048576) div greatest(n_child, 1) as bigint)")
-            .as("orphan_q"))
-    }
-    val li = Tables.lineitem(spark, dir)
-    val o = Tables.orders(spark, dir)
-    val cu = Tables.customer(spark, dir)
-    Seq(
-      rule("lineitem_orders", li.select(col("l_orderkey")), o.select(col("o_orderkey"))),
-      rule("lineitem_part", li.select(col("l_partkey")),
-        Tables.part(spark, dir).select(col("p_partkey"))),
-      rule("lineitem_supplier", li.select(col("l_suppkey")),
-        Tables.supplier(spark, dir).select(col("s_suppkey"))),
-      rule("orders_customer", o.select(col("o_custkey")), cu.select(col("c_custkey"))),
-      rule("customer_nation", cu.select(col("c_nationkey")),
-        Tables.nation(spark, dir).select(col("n_nationkey"))),
-      rule("events_customer",
-        Tables.events(spark, dir).select(col("user_id")), cu.select(col("c_custkey"))))
-      .reduce(_ unionByName _)
+    val tables = Seq(
+      "lineitem" -> Tables.lineitem(spark, dir), "orders" -> Tables.orders(spark, dir),
+      "customer" -> Tables.customer(spark, dir), "part" -> Tables.part(spark, dir),
+      "supplier" -> Tables.supplier(spark, dir), "nation" -> Tables.nation(spark, dir),
+      "events" -> Tables.events(spark, dir))
+    tables.map { case (name, df) =>
+      df.select(inline(array(FkEdges.zipWithIndex.flatMap { case ((_, ct, ck, pt, pk), id) =>
+        Seq((ct, ck, 1L), (pt, pk, 0L)).collect { case (`name`, k, child) =>
+          struct(lit(id).as("rule_id"), col(k).cast("long").as("k"), lit(child).as("child")) }
+      }: _*)))
+    }.reduce(_ unionAll _)
+      .filter(col("child") === 1L || col("k").isNotNull)
+      .groupBy(col("rule_id"), col("k"))
+      .agg(sum(col("child")).as("nc"), min(col("child")).as("orphan"))
+      .filter(col("nc") > 0L)
+      .groupBy(col("rule_id"))
+      .agg(sum(col("nc")).as("n_child"), sum(col("nc") * col("orphan")).as("n_orphan"))
+      .transform(DataQuality.everyRule(spark, FkEdges.map(_._1), _))
+      .select(col("rule"), coalesce(col("n_child"), lit(0L)).as("n_child"), col("n_orphan"),
+        expr("cast((cast(n_orphan as decimal(38,0)) * 1048576) div greatest(n_child, 1) as bigint)")
+          .as("orphan_q"))
   }
 
-  private[operators] def refIntegritySql: String = {
-    def rule(name: String, child: String, ck: String, parent: String, pk: String) =
+  /** (rule, child table, child key, parent table, parent key) */
+  private[operators] val FkEdges = Seq(
+    ("lineitem_orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+    ("lineitem_part", "lineitem", "l_partkey", "part", "p_partkey"),
+    ("lineitem_supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
+    ("orders_customer", "orders", "o_custkey", "customer", "c_custkey"),
+    ("customer_nation", "customer", "c_nationkey", "nation", "n_nationkey"),
+    ("events_customer", "events", "user_id", "customer", "c_custkey"))
+
+  private[operators] def refIntegritySql: String =
+    FkEdges.map { case (name, child, ck, parent, pk) =>
       s"""SELECT '$name' AS rule, count(*) AS n_child,
          |  CAST(sum(CASE WHEN p.$pk IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphan,
          |  CAST((CAST(sum(CASE WHEN p.$pk IS NULL THEN 1 ELSE 0 END) AS HUGEINT)
          |       * 1048576) // greatest(count(*), 1) AS BIGINT) AS orphan_q
          |FROM $child c LEFT JOIN (SELECT DISTINCT $pk FROM $parent) p
          |  ON c.$ck = p.$pk""".stripMargin
-    Seq(
-      rule("lineitem_orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-      rule("lineitem_part", "lineitem", "l_partkey", "part", "p_partkey"),
-      rule("lineitem_supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-      rule("orders_customer", "orders", "o_custkey", "customer", "c_custkey"),
-      rule("customer_nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-      rule("events_customer", "events", "user_id", "customer", "c_custkey"))
-      .mkString("\nUNION ALL\n")
-  }
+    }.mkString("\nUNION ALL\n")
 
   /** CUPED variance-reduction estimator (Deng et al. 2013) — the
     * experimentation-platform technique above [[abTest]]'s plain

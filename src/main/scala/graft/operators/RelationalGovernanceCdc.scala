@@ -1001,7 +1001,8 @@ private[operators] trait RelationalGovernanceCdc extends Serializable { this: Re
     * maintenance cost is proportional to the change volume, not the
     * view size; deletes extend the algebra with anti-join terms
     * (the `cdc_apply` machinery). Inserts-only here — the insert
-    * algebra is the part whose cost model matters. */
+    * algebra is the part whose cost model matters. The four terms stay
+    * four joins, not one fan-out: they are the algebra itself. */
   def ivmJoin(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -1148,7 +1149,8 @@ private[operators] trait RelationalGovernanceCdc extends Serializable { this: Re
     * — no float heuristics. Scale shape: ONE single-pass aggregate
     * per table (all countDistincts share the scan via Expand — the
     * profile_table trade, exact because the oracle replays it), then
-    * a constant-width stack/unpivot; output is Σ|columns| rows. */
+    * a constant-width stack/unpivot; output is Σ|columns| rows. The
+    * per-table union stays: each table is already scanned once. */
   def encodingAdvisor(spark: SparkSession, dir: String): DataFrame = {
     def perTable(df: DataFrame, table: String, cols: Seq[String]): DataFrame = {
       val aggs = count(lit(1)).as("n") +: cols.flatMap(c => Seq(
@@ -1382,32 +1384,27 @@ private[operators] trait RelationalGovernanceCdc extends Serializable { this: Re
     * Scale shape: the key fold and its ≤ [[BloomM]]-row bit set are
     * broadcast-sized by construction (that is the point of a bloom —
     * at 100 TB the bit set ships to every executor while the key set
-    * may not); the probe side explodes to [[BloomK]] narrow rows and
-    * meets the bits in a BroadcastHashJoin, then folds partial+final.
+    * may not). Positions come from one explode of the [[BloomK]] hash
+    * indices; the probe side's narrow rows left-join the bits in a
+    * BroadcastHashJoin and fold per key, then partial+final.
     * The scalar report is ONE row — safe at any corpus size. */
   def bloomProbe(spark: SparkSession, dir: String): DataFrame = {
-    def pos(key: Column, j: Int): Column =
-      pmod(conv(substring(md5(key.cast("string").cast("binary")), j * 4 + 1, 4), 16, 10)
-        .cast("long"), lit(BloomM))
+    // (k, pos) once per hash j of each key: md5-hex slice j, mod BloomM
+    def positions(keys: DataFrame): DataFrame =
+      keys.select(col("k"), explode(sequence(lit(0), lit(BloomK - 1))).as("j"))
+        .select(col("k"), pmod(conv(md5(col("k").cast("string").cast("binary"))
+          .substr(col("j") * 4 + 1, lit(4)), 16, 10).cast("long"), lit(BloomM)).as("pos"))
     val keys = Tables.customer(spark, dir)
       .filter(col("c_mktsegment") === "AUTOMOBILE")
       .select(col("c_custkey").as("k")).distinct().persistScoped()
-    val bits = (0 until BloomK).map(j => keys.select(pos(col("k"), j).as("pos")))
-      .reduce(_ unionAll _).distinct()
-    val probe = Tables.orders(spark, dir)
-      .select(col("o_custkey").as("k")).distinct().persistScoped()
-    // one row per (probe key, hash j): nhit = how many of the key's
-    // K positions are set — duplicates among a key's positions count
-    // per j, exactly the per-hash bit test of a real bloom
-    val probePos = (0 until BloomK)
-      .map(j => probe.select(col("k"), pos(col("k"), j).as("pos")))
-      .reduce(_ unionAll _)
-    val hits = probePos.join(broadcast(bits), "pos")
-      .groupBy(col("k")).agg(count(lit(1)).as("nhit"))
-    probe
-      .join(hits, Seq("k"), "left")
-      .withColumn("bloom_pos",
-        (coalesce(col("nhit"), lit(0L)) === BloomK.toLong).cast("long"))
+    val bits = positions(keys).select(col("pos")).distinct().withColumn("set", lit(1L))
+    // nhit = how many of a probe key's K positions are set — duplicates
+    // among a key's positions count per j, exactly the per-hash bit
+    // test of a real bloom; a key with no set position keeps nhit 0
+    positions(Tables.orders(spark, dir).select(col("o_custkey").as("k")).distinct())
+      .join(broadcast(bits), Seq("pos"), "left")
+      .groupBy(col("k")).agg(count(col("set")).as("nhit"))
+      .withColumn("bloom_pos", (col("nhit") === BloomK.toLong).cast("long"))
       .join(broadcast(keys.withColumn("member", lit(1L))), Seq("k"), "left")
       .withColumn("member", coalesce(col("member"), lit(0L)))
       .agg(

@@ -48,7 +48,6 @@ import graft.StateMode
   *  - `coresetKcenter`'s pick loop and `pcaPower`'s power iteration
   *    run on the driver over collected rows (one metadata row or a
   *    Dim² Gram matrix), with no per-round DataFrame state to cut;
-  *  - `mmrSelect` unrolls its picks into one plan (ROADMAP item 7);
   *  - the Lloyd fold in `learnedCentroidsFrom`, which `ann_ivf` runs
   *    on the gated llm_dedup workload;
   *  - the non-loop cuts: `jaccardNeighbors`' input and the CC edge

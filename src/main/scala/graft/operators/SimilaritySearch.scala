@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -137,49 +137,49 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     * contract), ties → lowest nid; round 1 is argmax rel with
     * max_sel_sim ≡ 0. Scale shape: the ONE corpus-scale stage is the
     * [[annTopkBrute]]-oriented pool cut (|Q| broadcast queries, per-
-    * query top-[[MmrPool]] rides WindowGroupLimit); the pool and its
-    * ≤ P(P−1)·|Q| pairwise dots persist once, and the [[MmrK]] greedy
-    * rounds unroll as bounded joins over those caches (the ktruss
-    * round pattern) — metadata-sized at any corpus size. */
+    * query top-[[MmrPool]] rides WindowGroupLimit); each query's pool
+    * then gathers into one row on the cut's own qid partitioning and
+    * [[mmrPicks]] runs the greedy rounds over it, so the plan is the
+    * same for any [[MmrK]] and the work past the cut is O(|Q|·P²·d). */
   def mmrSelect(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("qid"), latArrCol(col("embedding")).as("qq"))
     val c = e.select(col("vec_id").as("nid"), latArrCol(col("embedding")).as("nq"))
     val qdot = aggregate(zip_with(col("qq"), col("nq"), (x, y) => x * y),
       lit(0L), (a, x) => a + x)
-    val pool = Refine.topK(c.join(broadcast(q), col("qid") =!= col("nid"))
+    Refine.topK(c.join(broadcast(q), col("qid") =!= col("nid"))
         .withColumn("dot", qdot), Seq("qid"), ByDot, MmrPool, "rnk", longRank = false)
-      .select(col("qid"), col("nid"), col("nq"), col("dot").as("rel"))
-      .persistScoped()
-    val pdot = aggregate(zip_with(col("aq"), col("bq"), (x, y) => x * y),
-      lit(0L), (a, x) => a + x)
-    val pairs = pool.select(col("qid"), col("nid").as("aid"), col("nq").as("aq"))
-      .join(pool.select(col("qid"), col("nid").as("bid"), col("nq").as("bq")), Seq("qid"))
-      .filter(col("aid") =!= col("bid"))
-      .select(col("qid"), col("aid"), col("bid"), pdot.as("sim"))
-      .persistScoped()
-    val w1 = Window.partitionBy(col("qid")).orderBy(col("rel").desc, col("nid").asc)
-    var result = pool
-      .withColumn("rk", row_number().over(w1)).filter(col("rk") === 1)
-      .select(col("qid"), col("nid"), lit(1L).as("pick"), col("rel"),
-        lit(0L).as("max_sel_sim"))
-    for (r <- 2 to MmrK) {
-      val rem = pool.join(result.select(col("qid"), col("nid")),
-        Seq("qid", "nid"), "left_anti")
-      val ms = pairs
-        .join(result.select(col("qid"), col("nid").as("bid")), Seq("qid", "bid"))
-        .groupBy(col("qid"), col("aid")).agg(max(col("sim")).as("max_sel_sim"))
-        .withColumnRenamed("aid", "nid")
-      val wr = Window.partitionBy(col("qid"))
-        .orderBy((col("rel") - col("max_sel_sim")).desc, col("nid").asc)
-      val pick = rem.join(ms, Seq("qid", "nid"))
-        .withColumn("rk", row_number().over(wr)).filter(col("rk") === 1)
-        .select(col("qid"), col("nid"), lit(r.toLong).as("pick"), col("rel"),
-          col("max_sel_sim"))
-      result = result.unionByName(pick)
+      .groupBy(col("qid"))
+      .agg(collect_list(struct(col("nid"), col("nq"), col("dot"))).as("pool"))
+      .flatMap { r =>
+        val pool = r.getSeq[Row](1).map(p => (p.getLong(0), p.getSeq[Long](1).toArray, p.getLong(2)))
+        mmrPicks(pool, MmrK).map { case (pick, nid, rel, ms) => (r.getLong(0), nid, pick, rel, ms) }
+      }
+      .toDF("qid", "nid", "pick", "rel", "max_sel_sim")
+  }
+
+  /** [[mmrSelect]]'s greedy over one query's (nid, lattice vector,
+    * rel) pool: min(k, pool size) rounds of (pick, nid, rel,
+    * max_sel_sim). Exact longs throw on overflow, as ANSI Spark does. */
+  private[operators] def mmrPicks(pool: Seq[(Long, Array[Long], Long)],
+      k: Int): Seq[(Long, Long, Long, Long)] = {
+    def dot(a: Array[Long], b: Array[Long]): Long =
+      a.indices.foldLeft(0L)((s, i) => Math.addExact(s, Math.multiplyExact(a(i), b(i))))
+    val rounds = math.min(k, pool.size)
+    val maxSel = Array.fill(pool.size)(0L)
+    var left = pool.indices.toList
+    (1 to rounds).map { r =>
+      val best = left.map(i => (i, Math.subtractExact(pool(i)._3, maxSel(i)))).reduce((a, b) =>
+        if (a._2 > b._2 || a._2 == b._2 && pool(a._1)._1 < pool(b._1)._1) a else b)._1
+      left = left.filter(_ != best)
+      if (r < rounds) left.foreach { i =>
+        val sim = dot(pool(i)._2, pool(best)._2)
+        maxSel(i) = if (r == 1) sim else math.max(maxSel(i), sim)
+      }
+      (r.toLong, pool(best)._1, pool(best)._3, maxSel(best))
     }
-    result
   }
 
   private[operators] def mmrSelectSql: String =
@@ -759,20 +759,24 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
     import spark.implicits._
     val cents = learnedCentroids(spark, dir)
     val e = Tables.embeddings(spark, dir)
-    val cells = cellAssignmentsWith(spark, dir, cents).toDF("nid", "cell")
-    val qCells = e.filter(col("vec_id") < NQueries)
+    probedCosines(spark, dir, cents, e, e.filter(col("vec_id") < NQueries)
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .flatMap(r => nearestCells(cents, r._2, nprobe).map(c => (r._1, c)))
-      .toDF("qid", "cell")
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    cells
+      .toDF("qid", "cell"))
+  }
+
+  /** Each query's exact cosine `cos` against the members of the cells
+    * `qCells` (qid, cell, …) lists for it, with the other columns of
+    * `qCells` riding along. */
+  private def probedCosines(spark: SparkSession, dir: String, cents: Array[(Int, Array[Double])],
+      e: DataFrame, qCells: DataFrame): DataFrame =
+    cellAssignmentsWith(spark, dir, cents).toDF("nid", "cell")
       .join(broadcast(qCells), "cell")
       .filter(col("qid") =!= col("nid"))
       .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne")), "nid")
-      .join(broadcast(q), "qid")
+      .join(broadcast(e.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"))), "qid")
       .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-  }
 
   /** [[annIvf]] with an explicit probe count — the recall/cost dial
     * (PipelineOpsSpec measures the recall curve across settings). */
@@ -828,71 +832,45 @@ private[operators] trait SimilaritySearch extends Serializable { this: Similarit
   /** Recall-vs-probe tuning CURVE of the IVF index — the table an
     * ANN deployment reads before picking nprobe (the single knob
     * trading scan fraction for recall): corpus recall@[[K]] against
-    * the exact [[annTopkBrute]] truth at probe ∈ {1, 2, 4, 8}, on
+    * the exact [[annTopkBrute]] truth at probe ∈ [[ProbeLevels]], on
     * the 2²⁰ lattice. [[annRecall]] pins the SHIPPED operating
     * point; this emits the curve the choice comes from — as a gated
     * operator, because an eval that only lives in a test lab can't
     * be run by a user against their own corpus.
-    * Scale shape (r19): the quantizer trains ONCE, the corpus cell
-    * assignment is computed once and persisted for all four levels,
-    * and the per-query probe list is taken once at the widest level
-    * with its rank (each level filters rk ≤ np — exact, because
-    * nearestCells(_, np) is a prefix of nearestCells(_, 8)); each
-    * level is then the annIvf candidate shape over the shared
-    * assignment; everything after the retrievals is
-    * O(|probes|·|Q|·K) rows. The oracle runs ONE cell replay with a
-    * probes VALUES table crossed into the probe filter (rk ≤ np) —
-    * not four copies of the prefix — which is now also the engine's
-    * own shape. */
+    * Scale shape: the oracle's, one probe plan for every level. The
+    * quantizer trains once; each query's widest probe list carries
+    * each cell's probe rank prk (nearestCells(_, np) is a prefix of
+    * nearestCells(_, 8)). Each candidate's cosine is computed once,
+    * then fans out to the levels np ≥ prk; the top-[[K]] keep runs per
+    * (np, qid), the level-tagged truth left-joins on (np, qid, nid),
+    * and one aggregate by np folds the curve. */
   def ivfProbeCurve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // r19 (guide §1.2/§2.4 — don't compute things you throw away):
-    // the previous form built each level via annIvfProbe, which
-    // re-ran the ENTIRE quantizer training (seed collect + Lloyd
-    // pass), the corpus cell assignment, and the brute-force truth
-    // per probe level — 4 identical trainings for one curve. Train
-    // once, assign once (persisted for the four consumers), take the
-    // WIDEST probe list once with its rank (nearestCells(_, np) is a
-    // prefix of nearestCells(_, 8) under the same deterministic
-    // (-cos, idx) order, so rk ≤ np reproduces every level exactly),
-    // and persist the shared truth. Per-level output is bit-identical
-    // to the old form; the oracle replay is unchanged.
     val cents = learnedCentroids(spark, dir)
     val e = Tables.embeddings(spark, dir)
-    val cells = cellAssignmentsWith(spark, dir, cents)
-      .toDF("nid", "cell").persistScoped()
-    val qCells8 = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .flatMap(r => nearestCells(cents, r._2, 8).iterator.zipWithIndex
-        .map { case (c, i) => (r._1, c, i + 1) })
-      .toDF("qid", "cell", "prk")
-      .persistScoped()
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val brute = annTopkBrute(spark, dir).select(col("qid"), col("nid"))
-      .persistScoped()
-    Seq(1, 2, 4, 8).map { np =>
-      val qCells = qCells8.filter(col("prk") <= np)
-        .select(col("qid"), col("cell"))
-      val scored = cells
-        .join(broadcast(qCells), "cell")
-        .filter(col("qid") =!= col("nid"))
-        .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne")), "nid")
-        .join(broadcast(q), "qid")
-        .withColumn("cos", cosine_sim(col("qe"), col("ne")))
-      val ivf = Refine.topK(scored, Seq("qid"), ByCos, K, "rnk", longRank = true)
-        .select(col("qid"), col("nid"), lit(1L).as("hit"))
-      brute.join(ivf, Seq("qid", "nid"), "left")
-        .agg(count(lit(1)).as("k_total"),
-          sum(coalesce(col("hit"), lit(0L))).as("hits"))
-        .select(lit(np.toLong).as("nprobe"), col("k_total"), col("hits"),
-          expr("(hits * 1048576) div k_total").as("recall_q"))
-    }.reduce(_ unionAll _)
+    val levels = array(ProbeLevels.map(lit): _*)
+    val scored = probedCosines(spark, dir, cents, e, e.filter(col("vec_id") < NQueries)
+        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+        .flatMap(r => nearestCells(cents, r._2, ProbeLevels.max).iterator.zipWithIndex
+          .map { case (c, i) => (r._1, c, i + 1) })
+        .toDF("qid", "cell", "prk"))
+      .select(col("qid"), col("nid"), col("cos"),
+        explode(filter(levels, np => np >= col("prk"))).as("np"))
+    val ivf = Refine.topK(scored, Seq("np", "qid"), ByCos, K, "rnk", longRank = true)
+      .select(col("np"), col("qid"), col("nid"), lit(1L).as("hit"))
+    annTopkBrute(spark, dir).select(col("qid"), col("nid"), explode(levels).as("np"))
+      .join(ivf, Seq("np", "qid", "nid"), "left")
+      .groupBy(col("np"))
+      .agg(count(lit(1)).as("k_total"), sum(coalesce(col("hit"), lit(0L))).as("hits"))
+      .select(col("np").cast("long").as("nprobe"), col("k_total"), col("hits"),
+        expr("(hits * 1048576) div k_total").as("recall_q"))
   }
+
+  private[operators] val ProbeLevels = Seq(1, 2, 4, 8)
 
   private[operators] def ivfProbeCurveSql: String =
     s"""$IvfCellsSqlPrefix,
-       |probes(np) AS (VALUES (1), (2), (4), (8)),
+       |probes(np) AS (VALUES ${ProbeLevels.map(n => s"($n)").mkString(", ")}),
        |qcells AS (SELECT p.np, a.vec_id AS qid, a.cell
        |           FROM assign a CROSS JOIN probes p
        |           WHERE a.vec_id < $NQueries AND a.rk <= p.np),

@@ -1815,20 +1815,47 @@ class PlanAuditSpec extends AnyFunSuite {
       "the per-cell noise must not introduce a second exchange")
   }
 
-  test("ses_forecast is driver metadata past the daily fold; mmr_select's rounds ride the pool cache") {
+  test("ses_forecast is driver metadata; mmr_select picks from one pool cut") {
     // the recurrence is sequential by nature — the |days|-bounded fold
     // ran during construction; the returned frame must be local
     val sf = plan("ses_forecast")
     assert(sf.contains("LocalTableScan") && !sf.contains("Exchange"),
       "ses_forecast's returned series is driver metadata (the pca_power rule)")
     // mmr_select: the ONE corpus-scale stage is the pool cut (rank-limit
-    // pushdown); the greedy rounds must re-read the cached pool/pairs,
-    // never re-derive the corpus scan per round
+    // pushdown); the greedy rounds run in a row kernel over each
+    // query's collected pool, so nothing is cached and no round adds
+    // a Window
     val mm = plan("mmr_select")
     assert(mm.contains("WindowGroupLimit"),
       "the pool cut must ride the per-partition heap before the exchange")
-    assert(mm.sliding("InMemoryTableScan".length).count(_ == "InMemoryTableScan") >= 4,
-      "rounds 2..3 must feed from the persisted pool and pairs, not re-derived scans")
+    assert(!mm.contains("InMemoryTableScan"),
+      "the rounds read the collected pool, not a cached pool and pair table")
+    assert("\\bWindow \\[".r.findAllIn(mm).size === 1,
+      "the pool cut is the only Window: the plan must not grow with MmrK")
+  }
+
+  test("parameter fan-outs plan one pass: ivf_probe_curve, ref_integrity, fd_check, lsh_threshold_plan, bloom_probe") {
+    def scans(p: String, table: String): Int =
+      p.linesIterator.count(l => l.contains("FileScan parquet") && l.contains(s"/$table.parquet]"))
+    // ivf_probe_curve: one probe plan tags candidates with every level,
+    // no per-level copy (the four-copy union read 12 parquet scans)
+    val ivf = plan("ivf_probe_curve")
+    assert(!ivf.contains("Union"), "the probe levels must not be one sub-plan each")
+    assert(ivf.linesIterator.count(_.contains("FileScan parquet")) < 12)
+    // ref_integrity / fd_check: every table is read once, for all the
+    // rules it takes part in
+    val ri = plan("ref_integrity")
+    Seq("lineitem", "orders", "customer", "part", "supplier", "nation", "events").foreach { t =>
+      assert(scans(ri, t) === 1, s"ref_integrity must scan $t once")
+    }
+    val fd = plan("fd_check")
+    Seq("part", "orders", "customer").foreach { t =>
+      assert(scans(fd, t) === 1, s"fd_check must scan $t once")
+    }
+    // lsh_threshold_plan: the plans tag one range, not a range per plan
+    assert("\\bRange \\(".r.findAllIn(plan("lsh_threshold_plan")).size === 1)
+    // bloom_probe: hash positions come from one explode, not K unions
+    assert(!plan("bloom_probe").contains("Union"))
   }
 
   test("kneser_ney / coreset_kcenter / interval_coverage keep their scale shapes") {

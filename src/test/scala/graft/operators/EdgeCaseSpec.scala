@@ -3115,11 +3115,42 @@ class EdgeCaseSpec extends AnyFunSuite {
   test("fd_check: planted determinant with two dependents is the only violation") {
     val df = Seq(("a", "x"), ("a", "x"), ("b", "x"), ("b", "y"), ("b", "y"))
       .toDF("det", "dep")
-    val r = DataQuality.fdRule("planted", df, "det", "dep").collect().head
+    val r = DataQuality.fdAudit(spark, Seq(df -> Seq(("planted", "det", "dep")))).collect().head
     assert(r.getString(0) === "planted")
     assert(r.getLong(1) === 2L, "two determinant keys")
     assert(r.getLong(2) === 1L, "only b violates")
     assert(r.getLong(3) === 3L, "the 3 rows under b are the repair mass")
+  }
+
+  test("ref_integrity / fd_check: empty tables keep one row per rule, count 0 and NULL sums") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_empty_rules")
+    try {
+      // every table the two ops read, empty, with the columns they read
+      Seq("lineitem" -> "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT",
+        "orders" -> "o_orderkey BIGINT, o_custkey BIGINT, o_orderpriority STRING",
+        "customer" -> "c_custkey BIGINT, c_nationkey BIGINT, c_mktsegment STRING",
+        "part" -> "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING",
+        "supplier" -> "s_suppkey BIGINT", "nation" -> "n_nationkey BIGINT",
+        "events" -> "user_id BIGINT, ts TIMESTAMP").foreach { case (t, ddl) =>
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          org.apache.spark.sql.types.StructType.fromDDL(ddl)).write.parquet(s"$tmp/$t.parquet")
+      }
+      val ri = Relational.refIntegrity(spark, tmp.toString).collect()
+      assert(ri.map(_.getString(0)).toSet === Set("lineitem_orders", "lineitem_part",
+        "lineitem_supplier", "orders_customer", "customer_nation", "events_customer"))
+      ri.foreach { r =>
+        assert(r.getLong(1) === 0L && r.isNullAt(2) && r.isNullAt(3), r.toString)
+      }
+      val fd = DataQuality.fdCheck(spark, tmp.toString).collect()
+      assert(fd.map(_.getString(0)).toSet === Set("part_brand_type", "part_name_brand",
+        "orders_cust_priority", "customer_nation_segment"))
+      fd.foreach { r =>
+        assert(r.getLong(1) === 0L && r.isNullAt(2) && r.isNullAt(3), r.toString)
+      }
+    } finally {
+      graft.CacheScope.release()
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 
   test("cohens_kappa: hand-computed planted confusion matrices, incl. negative-κ truncation") {
@@ -3207,6 +3238,26 @@ class EdgeCaseSpec extends AnyFunSuite {
       .toSet
     assert(got === expected, "the DataFrame greedy must equal the independent replay")
     graft.CacheScope.release()
+  }
+
+  test("mmr_select: the greedy kernel breaks ties to the lower nid, stops at the pool size, throws on overflow") {
+    // round 1: nids 1 and 7 tie on rel 10 -> nid 1. Round 2: nid 5
+    // scores 9 - dot([2,0],[1,0]) = 7, nid 4 scores 7 - 0 = 7, nid 7
+    // scores 10 - 5 = 5 -> the exact tie at 7 goes to nid 4, though
+    // nid 5 has the higher rel. Round 3: nid 5 keeps max_sel_sim 2.
+    val pool = Seq(
+      (7L, Array(5L, 0L), 10L), (5L, Array(2L, 0L), 9L),
+      (1L, Array(1L, 0L), 10L), (4L, Array(0L, 3L), 7L))
+    assert(Similarity.mmrPicks(pool, 3) === Seq(
+      (1L, 1L, 10L, 0L), (2L, 4L, 7L, 0L), (3L, 5L, 9L, 2L)))
+    assert(Similarity.mmrPicks(pool.reverse, 3) === Similarity.mmrPicks(pool, 3),
+      "the picks must not depend on the pool's row order")
+    // a pool smaller than k gives fewer picks, not an error
+    assert(Similarity.mmrPicks(pool.take(2), 3) === Seq((1L, 7L, 10L, 0L), (2L, 5L, 9L, 10L)))
+    assert(Similarity.mmrPicks(Nil, 3) === Nil)
+    // 2^32 * 2^32 overflows a long: round 2 needs that dot and must throw
+    val big = Seq((1L, Array(1L << 32), 100L), (2L, Array(1L << 32), 50L))
+    intercept[ArithmeticException](Similarity.mmrPicks(big, 2))
   }
 
   test("kneser_ney: hand-computed planted corpus") {

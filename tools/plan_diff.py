@@ -4,7 +4,7 @@
 Usage:
     sbt -batch "runMain graft.Explain" > before.txt     # one checkout
     sbt -batch "runMain graft.Explain" > after.txt      # the other
-    python3 tools/plan_diff.py before.txt after.txt [--rerun before2.txt]
+    python3 tools/plan_diff.py before.txt after.txt [--rerun before2.txt] [--stats]
 
 A dump is a sequence of `===== <op> =====` sections, each holding the
 op's `explain("formatted")` physical plan; sbt's `[info] ` line prefix
@@ -42,6 +42,12 @@ dump of the `before` code; any other op whose plan differs between
 
 Prints every op whose normalized plan differs (or that only one dump
 has), with the first differing lines, and exits 1 if any op differs.
+
+`--stats` then prints, for each differing op and each dump, the count
+of distinct plan-node ids and, among them, shuffle Exchanges, broadcast
+Exchanges, parquet scans, InMemoryTableScans, Windows and Unions. It
+counts node ids, not tree lines: a cached subtree is printed again under
+every InMemoryTableScan that reads it, with the same ids.
 """
 import argparse
 import difflib
@@ -63,6 +69,17 @@ NORMALIZERS = [
 ]
 DETAIL = re.compile(r"^\(\d+\) ")
 EXPAND = re.compile(r"\bExpand \(\d+\)")
+# a tree line: `+- * HashAggregate (8)`, `Scan parquet  (1)`, ...
+NODE = re.compile(r"^[\s:|+-]*(?:\* )?([A-Za-z]\w*(?: \w+)*?)\s+\((\d+)\)(?:\s.*)?$")
+STATS = [
+    ("nodes", lambda name: True),
+    ("shuffle", lambda name: name == "Exchange"),
+    ("bcast", lambda name: name == "BroadcastExchange"),
+    ("scans", lambda name: name == "Scan parquet"),
+    ("cached", lambda name: name == "InMemoryTableScan"),
+    ("windows", lambda name: name == "Window"),
+    ("unions", lambda name: name == "Union"),
+]
 CONTEXT = 12  # diff lines shown per differing op
 
 
@@ -106,11 +123,33 @@ def has_expand(plan):
     return any(EXPAND.search(line) for line in tree(plan))
 
 
+def stats(plan):
+    """Distinct node ids per STATS column of one op's plan."""
+    ids = {}
+    for line in plan:
+        m = NODE.match(line)
+        if m:
+            ids[m.group(2)] = m.group(1)
+    return [sum(1 for name in ids.values() if keep(name)) for _, keep in STATS]
+
+
+def print_stats(ops, dumps):
+    width = max(len(op) for op in ops)
+    print(f"{'op':<{width}}  {'dump':<6} " + " ".join(f"{c:>7}" for c, _ in STATS))
+    for op in ops:
+        for label, plans in dumps:
+            if op in plans:
+                print(f"{op:<{width}}  {label:<6} "
+                      + " ".join(f"{n:>7}" for n in stats(plans[op])))
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("before")
     ap.add_argument("after")
     ap.add_argument("--rerun", help="a second dump of the `before` code")
+    ap.add_argument("--stats", action="store_true",
+                    help="print plan-node counts of each differing op")
     args = ap.parse_args()
     a, b = sections(args.before), sections(args.after)
     again = sections(args.rerun) if args.rerun else {}
@@ -137,6 +176,8 @@ def main():
                 print(f"    ... {len(diff) - CONTEXT} more diff lines")
     print(f"{len(set(a) | set(b))} ops compared, {len(differ)} differ, "
           f"{len(unstable)} unstable across runs")
+    if args.stats and differ:
+        print_stats(differ, [("before", a), ("after", b)])
     sys.exit(1 if differ else 0)
 
 
